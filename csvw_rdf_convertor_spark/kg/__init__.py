@@ -11,8 +11,9 @@ Stages:
   2. ``mentions``  — batched mention detection (broadcast alias dictionary,
                      vectorized pandas UDFs — no per-row Python)
   3. ``linking``   — entity-link scoring with MinHash-LSH blocking
-  4. ``cc``        — mention canonicalization via iterative-join connected
-                     components with salted repartitioning by conv_id
+  4. ``cc``        — entity canonicalization from the alias dictionary
+                     (driver union-find, no Spark job); Spark connected
+                     components for graphs that live in Spark
   5. ``pipeline``  — materialize (subj,pred,obj) triples + N-Triples lines to
                      partitioned tables, resumable from per-partition
                      checkpoints with lineage + metrics

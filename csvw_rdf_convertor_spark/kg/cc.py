@@ -1,14 +1,18 @@
-"""Connected components by iterative min-label propagation joins.
+"""Entity canonicalization for the KG pipeline, and connected components
+over graphs that live in Spark.
 
-Canonicalizes linked mentions: mentions sharing an entity (or a fuzzy-merged
-surface form) collapse to one canonical node = the component minimum.
+:func:`canonical_mapping`: entities sharing an alias, directly or through a
+chain of shared aliases, collapse to the least entity id of their
+component. Every exact link (surface form → owner) is a dictionary edge and
+a fuzzy link only attaches a leaf surface form to one entity, so the
+components depend on the dictionary alone: a driver union-find over
+``mentions.alias_owners``, no Spark job. (New relative to the reference,
+whose identity resolution is only syntactic — shared aboutUrl template ⇒
+same subject; SURVEY.md §4.3.)
 
-New relative to the reference (its identity resolution is only syntactic —
-shared aboutUrl template ⇒ same subject; SURVEY.md §4.3); required by the
-north rule ("canonicalizes mentions via iterative-join connected components
-with salted repartitioning by conv_id").
-
-Scale design:
+:func:`connected_components` and :func:`connected_components_star` serve
+graphs that are DataFrames (``ops/dedup.near_dup_clusters``, the
+``cc_components`` oracle query). Scale design:
 - each iteration = one equi-join + one min-aggregate; ``min`` is algebraic →
   HashAggregate's map-side partial_min absorbs hub-node skew before the
   shuffle (the built-in two-stage aggregation IS the salt — measured: an
@@ -17,11 +21,11 @@ Scale design:
 - lineage is cut every iteration with ``localCheckpoint`` (SURVEY.md §4.3 —
   on a cluster this would be an Iceberg temp-table or checkpoint dir, same
   contract);
-- convergence is detected with a changed-label count; alias/mention graphs
-  are star-like (diameter ≤ ~4) so a handful of iterations suffice. For
-  graphs with long chains, swap in large-star/small-star (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", SoCC'14) — same join
-  primitives, O(log n) rounds.
+- convergence is detected with a changed-label count; star-like graphs
+  (diameter ≤ ~4) need a handful of iterations. For graphs with long
+  chains, use large-star/small-star (Kiveris et al., "Connected Components
+  in MapReduce and Beyond", SoCC'14) — same join primitives, O(log n)
+  rounds.
 """
 
 from __future__ import annotations
@@ -29,12 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: below this many (symmetrized, deduped) edges the graph is metadata-sized
-#: — canonicalization graphs are dictionary-scale by construction (surface
-#: forms ↔ entities, NOT mention-scale) — and a driver union-find beats
-#: 5-8 rounds of Spark jobs whose scheduling latency is pure fixed cost
-#: (measured ~2-4 s/iteration regardless of cores; the dominant term in the
-#: KG pipeline's non-scaling overhead).
+from .mentions import alias_owners
+
+#: below this many (symmetrized, deduped) edges a graph is metadata-sized
+#: and a driver union-find beats 5-8 rounds of Spark jobs whose scheduling
+#: latency is pure fixed cost (measured ~2-4 s/iteration regardless of
+#: cores). Near-duplicate pair graphs of a few thousand documents fall
+#: under it.
 SMALL_GRAPH_EDGES = 100_000
 
 
@@ -66,7 +71,6 @@ def _driver_union_find(rows) -> list[tuple[str, str]]:
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20,
-                         eager_checkpoint: bool = True,
                          small_graph_edges: int = SMALL_GRAPH_EDGES) -> DataFrame:
     """edges(src:string, dst:string), undirected → (node, component).
 
@@ -90,7 +94,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
             return edges.sparkSession.createDataFrame(
                 labels, "node string, comp string")
 
-    sym = sym.localCheckpoint(eager=eager_checkpoint)
+    sym = sym.localCheckpoint()
 
     labels = (sym.select(F.col("src").alias("node"))
               .distinct()
@@ -139,15 +143,14 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     return labels
 
 
-def connected_components_star(edges: DataFrame, max_iter: int = 50,
-                              eager_checkpoint: bool = False) -> DataFrame:
+def connected_components_star(edges: DataFrame,
+                              max_iter: int = 50) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) —
     O(log² n) rounds on ANY topology, where plain min-label propagation
     (:func:`connected_components`) needs O(diameter) rounds. Use this when
     the graph may contain long chains (e.g. transitive doc-similarity
-    graphs); the alias/mention canonicalization graphs the KG pipeline
-    builds are star-like, so the default stays min-label + union-find.
+    graphs); star-like graphs are served by min-label + union-find.
 
     Same primitives and scale posture as the fixpoint variant: each round is
     two (groupBy-min + join) passes over the edge set; ``min`` is algebraic
@@ -189,7 +192,7 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50,
              .union(om.select(F.col("src"), F.col("m").alias("dst")))
              .where(F.col("src") != F.col("dst"))
              .distinct()
-             .localCheckpoint(eager=eager_checkpoint))
+             .localCheckpoint(eager=False))
 
         sig = signature(e)
         if prev is not None and (sig.s, sig.n) == (prev.s, prev.n):
@@ -214,12 +217,11 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50,
 
 
 def link_graph_edges(linked: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Canonicalization graph = observed (surface form ↔ linked entity)
-    edges ∪ dictionary (alias ↔ owner entity) edges. The dictionary edges
-    make ownership transitive: two entities sharing ANY alias merge even if
-    the corpus never links that alias to both (deterministic, corpus-
-    independent canonical ids). Both sides are dictionary-scale — the union
-    is tiny relative to the mention volume it canonicalizes."""
+    """Canonicalization graph as a Spark edge set: observed (surface form ↔
+    linked entity) edges ∪ dictionary (alias ↔ owner entity) edges, surface
+    forms prefixed ``sf:``. Its entity components are the ones
+    :func:`canonical_mapping` computes from the dictionary alone; tests use
+    this graph with :func:`connected_components` as the Spark-side check."""
     observed = linked.select(
         F.concat(F.lit("sf:"), F.col("mention_norm")).alias("src"),
         F.col("entity_id").alias("dst"))
@@ -233,8 +235,14 @@ def link_graph_edges(linked: DataFrame, aliases: DataFrame) -> DataFrame:
     return observed.unionByName(dictionary).distinct()
 
 
-def canonical_mapping(labels: DataFrame) -> DataFrame:
-    """(node → canonical) mapping, dropping identity rows to keep it small
-    for the broadcast-join application step."""
-    return (labels.where(F.col("node") != F.col("comp"))
-            .select(F.col("node"), F.col("comp").alias("canonical")))
+def canonical_mapping(spark, dictionary: list[tuple[str, str, list[str]]]
+                      ) -> DataFrame:
+    """(node → canonical) for every dictionary entity whose canonical id is
+    another entity: the least entity id among the entities it shares aliases
+    with, transitively. Union-find on the driver over the alias→owners map;
+    identity rows are dropped, so the result is a small local DataFrame for
+    ``pipeline.mention_triples``' broadcast join."""
+    edges = [(ents[0], e) for ents in alias_owners(dictionary).values()
+             for e in ents[1:]]
+    rows = [(n, c) for n, c in _driver_union_find(edges) if n != c]
+    return spark.createDataFrame(rows, "node string, canonical string")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..ops.minhash import (char_shingles, jaccard, lsh_bands,
                            shingle_pairs, signature_from_pairs)
+from .mentions import alias_owners
 
 N_PERM = 32
 # 16 bands × 2 rows: P(block | jaccard=0.4) ≈ 0.94 — typo-level similarity
@@ -77,7 +78,8 @@ def link_exact(mentions: DataFrame) -> DataFrame:
 
 
 def alias_table(spark, dictionary: list[tuple[str, str, list[str]]]) -> DataFrame:
-    rows = [(ent, a.lower()) for ent, _n, al in dictionary for a in al]
+    rows = [(ent, a) for a, ents in alias_owners(dictionary).items()
+            for ent in ents]
     return spark.createDataFrame(rows, "entity_id string, alias string").distinct()
 
 

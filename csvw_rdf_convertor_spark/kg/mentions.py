@@ -58,12 +58,20 @@ def _trie_pattern(words) -> str:
     return emit(trie)
 
 
-def _build_lookup(dictionary: list[tuple[str, str, list[str]]]):
-    """alias (lower) → candidate entity ids; plus one trie-compiled regex."""
-    lookup: dict[str, list[str]] = {}
+def alias_owners(dictionary: list[tuple[str, str, list[str]]]
+                 ) -> dict[str, list[str]]:
+    """alias (lower) → owning entity ids, once per listed casing (the
+    candidate arrays, and so the linking votes, keep that weight)."""
+    owners: dict[str, list[str]] = {}
     for ent_id, _name, aliases in dictionary:
         for a in aliases:
-            lookup.setdefault(a.lower(), []).append(ent_id)
+            owners.setdefault(a.lower(), []).append(ent_id)
+    return owners
+
+
+def _build_lookup(dictionary: list[tuple[str, str, list[str]]]):
+    """alias (lower) → candidate entity ids; plus one trie-compiled regex."""
+    lookup = alias_owners(dictionary)
     rx = re.compile(f"(?i)\\b({_trie_pattern(lookup)})\\b")
     return lookup, rx
 

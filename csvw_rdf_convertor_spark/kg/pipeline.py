@@ -12,11 +12,14 @@ Scale contract (north rule):
   buckets, so a resumed run is exactly-once per conversation;
 - row numbering is per-conv (turn_idx is data, not a global sort) — the
   whole mapping stage is narrow, no shuffle;
-- hot-conversation skew: algebraic aggregations (linking support counts,
-  CC min-labels) rely on map-side partial aggregation — the built-in
-  two-stage combine that splits hot keys across input partitions (an
-  explicit salt layer measured 4.5× slower, see linking.link_exact);
+- hot-conversation skew: algebraic aggregations (linking support counts)
+  rely on map-side partial aggregation — the built-in two-stage combine
+  that splits hot keys across input partitions (an explicit salt layer
+  measured 4.5× slower, see linking.link_exact);
   joins lean on AQE skew-split; the LSH band joins use uniform hash keys;
+- canonicalization: computed from the alias dictionary on the driver
+  (``cc.canonical_mapping``, no Spark job) and broadcast into the mention
+  triples;
 - resumability: a manifest parquet records (bucket, counts, finished_at);
   rerun anti-joins completed buckets before any work happens, so a killed
   run resumes where it stopped with no duplicate triples;
@@ -30,6 +33,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -121,7 +125,7 @@ def mention_triples(linked: DataFrame, canon: DataFrame,
     """Triples for linked mentions with canonicalized entity ids.
 
     mention node = deterministic skolem of (conv, turn, match ordinal) (T9).
-    ``canon`` (node → canonical, from connected components) is small →
+    ``canon`` (node → canonical, from ``cc.canonical_mapping``) is small →
     broadcast left join + coalesce. ``passthrough`` columns (e.g. the
     partition bucket) are carried through the explode.
     """
@@ -182,8 +186,11 @@ def run(transcripts: DataFrame, out_dir: str, *,
         try:
             done = {r.bucket for r in
                     spark.read.parquet(manifest_path).select("bucket").collect()}
-        except Exception:
-            done = set()
+        except AnalysisException as exc:
+            # no manifest yet = fresh run; anything else (a corrupt
+            # manifest) must not silently redo every bucket
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
 
     # Repartition the SMALL transcript rows by bucket BEFORE the mapping
     # fans them out into ~10× more triple rows: the narrow mapping preserves
@@ -203,9 +210,7 @@ def run(transcripts: DataFrame, out_dir: str, *,
     ments = mentions_mod.detect_mentions(todo, dictionary).persist()
     aliases = linking.alias_table(spark, dictionary)
     linked = linking.link(ments, aliases).withColumn("bucket", bucket).persist()
-    edges = cc.link_graph_edges(linked, aliases)
-    labels = cc.connected_components(edges)
-    canon = cc.canonical_mapping(labels.where(~F.col("node").startswith("sf:")))
+    canon = cc.canonical_mapping(spark, dictionary)
     m_triples = mention_triples(linked, canon, passthrough=["bucket"])
 
     # mention triples are orders of magnitude fewer than turn triples —

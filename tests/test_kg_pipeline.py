@@ -118,6 +118,7 @@ def test_connected_components_basic(spark):
 
 def test_run_and_resume_exactly_once(spark, transcripts, tmp_path):
     out = str(tmp_path / "kg")
+    # no manifest yet: a fresh run of every bucket
     m1 = pipeline.run(transcripts, out, n_buckets=4)
     assert m1.buckets_done == 4 and m1.buckets_skipped == 0
     assert m1.turns == transcripts.count()
@@ -172,3 +173,62 @@ def test_cc_fast_path_equals_distributed(spark):
             for r in cc.connected_components(
                 edges, small_graph_edges=0).collect()}
     assert fast == slow and len(fast) > 0
+
+
+def test_canonical_ids_are_entities_whatever_their_prefix(spark, tmp_path):
+    """Ids that sort after a surface form (Wikidata style) must not let a
+    surface form become a component's canonical id: every kg:linkedTo
+    object is a dictionary entity, the least of its component."""
+    import datetime
+    d = [("wd:Q308", "Mercury", ["Mercury"]),
+         ("wd:Q925", "mercury", ["mercury", "quicksilver"])]
+    ts = datetime.datetime(2024, 1, 1)
+    tr = spark.createDataFrame(
+        [("c1", 0, "user", "Mercury is a planet", None, ts),
+         ("c1", 1, "assistant", "quicksilver is mercury", None, ts),
+         ("c2", 0, "user", "what is quicksilver", None, ts)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    out = str(tmp_path / "kg")
+    pipeline.run(tr, out, dictionary=d, n_buckets=2)
+    linked_to = [r.obj_lex for r in spark.read.parquet(f"{out}/triples")
+                 .where(F.col("pred") == pipeline.KG + "linkedTo").collect()]
+    assert len(linked_to) == 4
+    assert set(linked_to) == {"wd:Q308"}
+
+
+#: A and B share one alias, B and C another: C reaches A only through B
+CHAINED_DICTIONARY = [("ent:c", "C", ["gamma", "Beta-Gamma"]),
+                      ("ent:b", "B", ["beta-gamma", "alpha-beta"]),
+                      ("ent:a", "A", ["ALPHA-BETA", "alpha"])]
+
+
+@pytest.mark.parametrize("dictionary", [alias_dictionary(), CHAINED_DICTIONARY],
+                         ids=["synth", "chained"])
+def test_canonical_mapping_equals_spark_components(spark, dictionary):
+    """The driver-side mapping equals the Spark route: the dictionary's
+    surface-form graph through connected_components, entity rows whose
+    component is another node."""
+    aliases = linking.alias_table(spark, dictionary)
+    edges = cc.link_graph_edges(
+        aliases.withColumnRenamed("alias", "mention_norm"), aliases)
+    want = {(r.node, r.comp) for r in cc.connected_components(edges)
+            .where(~F.col("node").startswith("sf:")
+                   & (F.col("node") != F.col("comp"))).collect()}
+    got = {(r.node, r.canonical)
+           for r in cc.canonical_mapping(spark, dictionary).collect()}
+    assert got == want and got
+    if dictionary is CHAINED_DICTIONARY:
+        assert got == {("ent:b", "ent:a"), ("ent:c", "ent:a")}
+
+
+def test_resume_raises_on_corrupt_manifest(spark, tmp_path):
+    """A manifest that exists but cannot be read must fail the run, not
+    silently redo every bucket."""
+    out = tmp_path / "kg"
+    (out / "manifest").mkdir(parents=True)
+    (out / "manifest" / "part-0.parquet").write_bytes(b"not a parquet file")
+    tr = synth_transcripts(spark, n_convs=4, max_len=4)
+    with pytest.raises(Exception, match="(?i)footer"):
+        pipeline.run(tr, str(out), n_buckets=2)
+    assert not (out / "triples").exists()

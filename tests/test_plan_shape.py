@@ -157,3 +157,51 @@ def test_single_valued_pivot_reconstruction_one_exchange(spark):
     chain = match_patterns(t, pats)
     assert sorted(map(tuple, out.collect())) == \
         sorted(map(tuple, chain.collect()))
+
+
+#: HotSpot's DontCompileHugeMethods limit: a method with more bytecode than
+#: this is never JIT-compiled and runs interpreted, several times slower,
+#: although whole-stage codegen compiled it without complaint
+JIT_HUGE_METHOD_BYTES = 8000
+
+
+def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
+    """The largest generated method of an 8-column mixed-type table's
+    mapping (integer aboutUrl keys, decimal, integer, boolean, dateTime, a
+    short string and free text — the shape of a typical web-service
+    request) must stay JIT-compilable."""
+    from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
+    from csvw_rdf_convertor_spark.sources.csv_source import read_csv
+    from csvw_rdf_convertor_spark.spec import parse_descriptor
+    cols = [("k1", "integer"), ("k2", "integer"), ("price", "decimal"),
+            ("qty", "integer"), ("active", "boolean"),
+            ("updated", "datetime"), ("code", "string"), ("note", "string")]
+    (tmp_path / "items.csv").write_text(
+        ",".join(n for n, _dt in cols) + "\n"
+        "0,1,12.50,3,true,2024-05-01T10:00:00,AX-0001,alpha beta\n"
+        "0,2,0.99,-7,0,2019-12-31T23:59:59,BZ-0420,\"a,b\" café 東京\n"
+        "1,3,12.3.4,n/a,maybe,yesterday,,\n", encoding="utf-8")
+    table = parse_descriptor({
+        "@context": "http://www.w3.org/ns/csvw",
+        "url": "items.csv",
+        "tableSchema": {
+            "aboutUrl": "http://example.org/item/{k1}/{k2}",
+            "columns": [{"name": n, "titles": n, "datatype": dt,
+                         "propertyUrl": f"http://example.org/ns#{n}"}
+                        for n, dt in cols]},
+    }, f"{tmp_path}/").tables[0]
+    df = table_to_triples(read_csv(spark, str(tmp_path / "items.csv"), table),
+                          table, minimal=True, allow_arrival_order=True)
+    # an adaptive plan holds no codegen stages before it runs: compile a
+    # non-adaptive one
+    key = "spark.sql.adaptive.enabled"
+    aqe = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(key, aqe)
+    seq = spark._jvm.org.apache.spark.sql.execution.debug.package \
+        .codegenStringSeq(plan)
+    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+    assert sizes and max(sizes) < JIT_HUGE_METHOD_BYTES, sizes

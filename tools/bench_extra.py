@@ -177,9 +177,7 @@ def mode_kg() -> None:
     linked = linking.link(ments, aliases).withColumn("bucket", bucket).persist()
     t["link_build(isEmpty probe)"] = round(time.time() - t0, 3)
     stamp("link_materialize", lambda: linked.count())
-    edges = cc.link_graph_edges(linked, aliases)
-    labels = stamp("cc", lambda: cc.connected_components(edges))
-    canon = cc.canonical_mapping(labels.where(~F.col("node").startswith("sf:")))
+    canon = stamp("cc", lambda: cc.canonical_mapping(spark, dictionary))
     m_triples = pipeline.mention_triples(linked, canon, passthrough=["bucket"])
     stamp("mention_triples_noop", lambda: _noop(m_triples))
 

@@ -65,9 +65,7 @@ def main():
     aliases = linking.alias_table(spark, dictionary)
     linked = linking.link(ments, aliases).withColumn("bucket", bucket).persist()
     stamp("link", lambda: linked.count())
-    edges = cc.link_graph_edges(linked, aliases)
-    labels = stamp("cc", lambda: cc.connected_components(edges))
-    canon = cc.canonical_mapping(labels.where(~F.col("node").startswith("sf:")))
+    canon = stamp("cc", lambda: cc.canonical_mapping(spark, dictionary))
     m_triples = pipeline.mention_triples(linked, canon, passthrough=["bucket"])
     stamp("mention_triples_noop", lambda: m_triples.write.format("noop")
           .mode("overwrite").save())
