@@ -18,6 +18,8 @@ key (e.g. ``conv_id``) or taken from an existing ordinal column.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -218,7 +220,9 @@ def _column_triples(col: ColumnSpec, values: Column, table: TableSpec,
     return F.when(values.isNull(), F.array().cast(_EMPTY_TRIPLES)).otherwise(out)
 
 
-_BREAK_SEQ = [0]
+#: stage-break name source; ``next`` on a count is atomic under the GIL, so
+#: the web service's request threads never share a name
+_BREAK_SEQ = itertools.count(1)
 #: max typed (parts-staged) columns per codegen segment — 5 measured ≈7.2 KB
 #: of the 8 KB JIT method budget on the lineitem mix (see _codegen_stage_break)
 _TYPED_PER_SEGMENT = 5
@@ -239,8 +243,7 @@ def _codegen_stage_break(df: DataFrame) -> DataFrame:
     a count accumulator — measured well under the JIT win (r6). The
     observation name only has to be unique per query; a module counter
     keeps unions of many tables distinct and carries no data."""
-    _BREAK_SEQ[0] += 1
-    return df.observe(f"__csvw2rdf_cg_break_{_BREAK_SEQ[0]}",
+    return df.observe(f"__csvw2rdf_cg_break_{next(_BREAK_SEQ)}",
                       F.count(F.lit(1)).alias("rows"))
 
 
@@ -258,12 +261,16 @@ def _staged_explode(df: DataFrame, arrays: list[Column],
     4-column mapping with the JIT flag flipped, which a frozen bench conf
     cannot do). One barrier per array keeps each construction in its own
     method; everything stays inside a single WholeStageCodegen (Generate
-    supports codegen), so no extra row materialization is paid."""
-    from ..functions.staging import as_leaves
+    supports codegen), so no extra row materialization is paid.
+
+    Each barrier passes the existing columns through as ``"*"``: every name
+    in a select list is a py4j round trip, and naming ``df.columns`` at
+    every barrier would make the build O(arrays × columns) calls, quadratic
+    in table width (tests/test_plan_shape.py pins the growth)."""
     names = []
     for i, arr in enumerate(arrays):
         nm = f"__tr_{i}"
-        df = as_leaves(df, list(df.columns), **{nm: arr})
+        df = df.select("*", F.explode(F.array(arr)).alias(nm))
         names.append(nm)
     flat = (F.flatten(F.array(*[F.col(n) for n in names]))
             if len(names) > 1 else F.col(names[0]))

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import io
 import json
+import logging
 import os
 import re
 import shutil
@@ -44,6 +45,12 @@ from email.policy import HTTP as _HTTP_POLICY
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from . import cli
+
+log = logging.getLogger(__name__)
+
+#: largest request body read; a longer ``Content-Length`` answers 413
+#: before any of the body is read
+MAX_BODY_BYTES = 64 << 20
 
 #: MIME type per serialization (loaders/rdf-serialization.ts mimeTypes)
 MIME_TYPES = {
@@ -63,6 +70,20 @@ class RequestError(Exception):
     def __init__(self, status: int, message: str):
         super().__init__(message)
         self.status = status
+
+
+def _content_length(value: str | None) -> int:
+    """Validated ``Content-Length`` (absent → 0): ASCII digits only, so a
+    negative length, which would make ``rfile.read`` block until the client
+    hangs up, answers 400 like any other malformed one."""
+    value = (value or "0").strip()
+    if not (value.isascii() and value.isdigit()):
+        raise RequestError(400, f"invalid Content-Length {value!r}")
+    length = int(value)
+    if length > MAX_BODY_BYTES:
+        raise RequestError(413, f"body of {length} bytes exceeds the "
+                                f"{MAX_BODY_BYTES}-byte limit")
+    return length
 
 
 def _parse_body(content_type: str, body: bytes) -> tuple[dict, dict]:
@@ -230,12 +251,13 @@ class Handler(BaseHTTPRequestHandler):
             super().log_message(*a)
 
     def do_POST(self):  # noqa: N802 (http.server API)
-        route = ROUTES.get(self.path.split("?", 1)[0])
+        path = self.path.split("?", 1)[0]
+        route = ROUTES.get(path)
         if route is None:
             return self._send(404, "application/json",
                               b'{"error": "not found"}')
         try:
-            length = int(self.headers.get("Content-Length") or 0)
+            length = _content_length(self.headers.get("Content-Length"))
             body = self.rfile.read(length)
             options, files = _parse_body(
                 self.headers.get("Content-Type", ""), body)
@@ -252,6 +274,7 @@ class Handler(BaseHTTPRequestHandler):
             self._send(422, "application/json",
                        json.dumps({"error": str(exc)}).encode("utf-8"))
         except Exception as exc:  # noqa: BLE001 — route csvw2rdf.ts:169
+            log.exception("POST %s failed", path)
             self._send(500, "application/json",
                        json.dumps({"error": "Internal Server Error",
                                    "detail": str(exc)}).encode("utf-8"))

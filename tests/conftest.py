@@ -21,3 +21,33 @@ def spark() -> SparkSession:
         .getOrCreate()
     )
     yield s
+
+
+@pytest.fixture
+def py4j_commands(monkeypatch):
+    """``count(fn, *args)`` → number of py4j commands Python sends to
+    the JVM while ``fn`` runs (PySpark's pinned-thread ``ClientServer``
+    connection). Memory-release commands (``m…``) are left out: the garbage
+    collector sends them whenever it runs, not when the code under test
+    calls into the JVM."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []  # list.append is atomic, so request threads may share it
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m"):
+            sent.append(None)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+
+    def count(fn, *args, **kwargs) -> int:
+        before = len(sent)
+        fn(*args, **kwargs)
+        n = len(sent) - before
+        # zero means the connection class changed and nothing was counted
+        assert n > 0, "no py4j commands seen: is the JVM connection pinned?"
+        return n
+
+    return count

@@ -165,23 +165,17 @@ def test_single_valued_pivot_reconstruction_one_exchange(spark):
 JIT_HUGE_METHOD_BYTES = 8000
 
 
-def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
-    """The largest generated method of an 8-column mixed-type table's
-    mapping (integer aboutUrl keys, decimal, integer, boolean, dateTime, a
-    short string and free text — the shape of a typical web-service
-    request) must stay JIT-compilable."""
-    from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
-    from csvw_rdf_convertor_spark.sources.csv_source import read_csv
+#: the ws-shaped column mix: integer aboutUrl keys, decimal, integer,
+#: boolean, dateTime, a short string and free text
+MIXED_COLS = [("k1", "integer"), ("k2", "integer"), ("price", "decimal"),
+              ("qty", "integer"), ("active", "boolean"),
+              ("updated", "datetime"), ("code", "string"),
+              ("note", "string")]
+
+
+def _mixed_table(cols, base: str):
     from csvw_rdf_convertor_spark.spec import parse_descriptor
-    cols = [("k1", "integer"), ("k2", "integer"), ("price", "decimal"),
-            ("qty", "integer"), ("active", "boolean"),
-            ("updated", "datetime"), ("code", "string"), ("note", "string")]
-    (tmp_path / "items.csv").write_text(
-        ",".join(n for n, _dt in cols) + "\n"
-        "0,1,12.50,3,true,2024-05-01T10:00:00,AX-0001,alpha beta\n"
-        "0,2,0.99,-7,0,2019-12-31T23:59:59,BZ-0420,\"a,b\" café 東京\n"
-        "1,3,12.3.4,n/a,maybe,yesterday,,\n", encoding="utf-8")
-    table = parse_descriptor({
+    return parse_descriptor({
         "@context": "http://www.w3.org/ns/csvw",
         "url": "items.csv",
         "tableSchema": {
@@ -189,7 +183,21 @@ def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
             "columns": [{"name": n, "titles": n, "datatype": dt,
                          "propertyUrl": f"http://example.org/ns#{n}"}
                         for n, dt in cols]},
-    }, f"{tmp_path}/").tables[0]
+    }, base).tables[0]
+
+
+def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
+    """The largest generated method of an 8-column mixed-type table's
+    mapping (the shape of a typical web-service request) must stay
+    JIT-compilable."""
+    from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
+    from csvw_rdf_convertor_spark.sources.csv_source import read_csv
+    (tmp_path / "items.csv").write_text(
+        ",".join(n for n, _dt in MIXED_COLS) + "\n"
+        "0,1,12.50,3,true,2024-05-01T10:00:00,AX-0001,alpha beta\n"
+        "0,2,0.99,-7,0,2019-12-31T23:59:59,BZ-0420,\"a,b\" café 東京\n"
+        "1,3,12.3.4,n/a,maybe,yesterday,,\n", encoding="utf-8")
+    table = _mixed_table(MIXED_COLS, f"{tmp_path}/")
     df = table_to_triples(read_csv(spark, str(tmp_path / "items.csv"), table),
                           table, minimal=True, allow_arrival_order=True)
     # an adaptive plan holds no codegen stages before it runs: compile a
@@ -205,3 +213,30 @@ def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
         .codegenStringSeq(plan)
     sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
     assert sizes and max(sizes) < JIT_HUGE_METHOD_BYTES, sizes
+
+
+def test_mapping_build_py4j_calls_grow_linearly_with_width(spark,
+                                                           py4j_commands):
+    """Building the mapping plan must cost O(columns) py4j calls: each call
+    is a Python↔JVM round trip, and a 200-row request is mostly plan build.
+    Naming every existing column at each per-column stage makes the count
+    quadratic (×3.0 from 16 to 32 columns)."""
+    from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
+    builds = {}
+    for tiles in (1, 2, 4):
+        cols = [(f"{n}_{t}" if t else n, dt)
+                for t in range(tiles) for n, dt in MIXED_COLS]
+        table = _mixed_table(cols, "http://example.org/")
+        # empty and string-typed, like a CSV scan: building runs no job
+        df = spark.createDataFrame(
+            [], ", ".join(f"{n} string" for n, _dt in cols))
+        builds[len(cols)] = (df, table)
+
+    def build(n):
+        df, table = builds[n]
+        table_to_triples(df, table, minimal=True, allow_arrival_order=True)
+
+    build(8)  # warm-up: first-use class loading and caches
+    c16 = py4j_commands(build, 16)
+    c32 = py4j_commands(build, 32)
+    assert c32 <= 2.2 * c16, (c16, c32)

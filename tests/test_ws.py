@@ -8,12 +8,15 @@ from __future__ import annotations
 import http.client
 import io
 import json
+import logging
 import threading
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
-from csvw_rdf_convertor_spark.ws import make_server
+from csvw_rdf_convertor_spark import cli
+from csvw_rdf_convertor_spark.ws import MAX_BODY_BYTES, make_server
 
 FOAF_NAME = "http://xmlns.com/foaf/0.1/name"
 EX_ID = "http://ex.org/def#id"
@@ -219,3 +222,69 @@ def test_request_workdirs_are_cleaned_up(server):
         {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV})
     assert status == 200
     assert set(glob.glob(pat)) <= before  # per-request tempdir removed
+
+
+def _post_length(addr, length: str):
+    """POST /csvw2rdf announcing ``length`` as Content-Length, sending no
+    body; a server that waits for the body times out the client."""
+    conn = http.client.HTTPConnection(*addr, timeout=30)
+    conn.putrequest("POST", "/csvw2rdf")
+    conn.putheader("Content-Type", "application/json")
+    conn.putheader("Content-Length", length)
+    conn.endheaders()
+    resp = conn.getresponse()
+    data = resp.read()
+    conn.close()
+    return resp.status, data
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_malformed_content_length_400(server, length):
+    status, data = _post_length(server, length)
+    assert status == 400
+    assert b"Content-Length" in data
+
+
+def test_oversized_body_413(server):
+    status, _data = _post_length(server, str(MAX_BODY_BYTES + 1))
+    assert status == 413
+
+
+def test_server_error_is_logged_with_its_cause(server, monkeypatch, caplog):
+    def boom(argv):
+        raise RuntimeError("boom")
+    monkeypatch.setattr(cli, "main", boom)
+    with caplog.at_level(logging.ERROR, logger="csvw_rdf_convertor_spark.ws"):
+        status, _mime, data = _post_json(
+            server, "/csvw2rdf", {"input": "meta.json"},
+            {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV})
+    assert status == 500
+    assert json.loads(data) == {"error": "Internal Server Error",
+                                "detail": "boom"}
+    logged = [r for r in caplog.records if r.exc_info]
+    assert logged and "/csvw2rdf" in logged[0].getMessage()
+    assert isinstance(logged[0].exc_info[1], RuntimeError)
+
+
+def test_concurrent_csvw2rdf_equals_serial(server):
+    """Request threads share one SparkSession and the plan builder: four
+    distinct tables converted at once must each give exactly the triples
+    they give alone."""
+    bodies = [
+        ({"input": "meta.json", "format": "ntriples", "minimal": True},
+         {"meta.json": json.dumps(DESCRIPTOR),
+          "people.csv": "id,name\n" + "".join(
+              f"{k * 10 + i},p{k}-{i}\n" for i in range(1 + k))})
+        for k in range(4)]
+
+    def lines(opts_files):
+        status, _mime, data = _post_json(server, "/csvw2rdf", *opts_files)
+        assert status == 200
+        return sorted(data.decode().splitlines())
+
+    serial = [lines(b) for b in bodies]
+    with ThreadPoolExecutor(max_workers=len(bodies)) as pool:
+        concurrent = [f.result(timeout=300)
+                      for f in [pool.submit(lines, b) for b in bodies]]
+    assert concurrent == serial
+    assert len({tuple(x) for x in serial}) == len(bodies)
