@@ -250,6 +250,7 @@ def cmd_csvw2rdf(args) -> int:
 def _write_distributed(triples, fmt: str, path: str,
                        prefixes: dict[str, str], base: str = "") -> int:
     """The 100 TB output path: Spark text part files, no driver funnel."""
+    from .sources.local import local_frame
     from .sources.parse import serialize_rdf
     from .sources.turtle import to_turtle_lines
     if fmt in ("nquads", "ntriples"):
@@ -260,8 +261,7 @@ def _write_distributed(triples, fmt: str, path: str,
                                         with_graphs=(fmt == "trig"))
         if base:  # --turtle.base applies to the distributed header too
             header = header + [f"@base <{base}> ."]
-        spark = triples.sparkSession
-        spark.createDataFrame([(h,) for h in header], "line string") \
+        local_frame(triples.sparkSession, [(h,) for h in header], "line string") \
             .coalesce(1).write.mode("overwrite").text(f"{path}/_prefixes")
         lines.write.mode("overwrite").text(f"{path}/statements")
     else:

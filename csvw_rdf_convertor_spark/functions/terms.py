@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from ..spec import XSD
 
 TRIPLE_COLS = ("subj", "pred", "obj_lex", "obj_kind", "obj_dtype", "obj_lang", "graph")
+#: DDL of the triples DataFrame (every column a string)
+TRIPLE_DDL = ", ".join(f"{c} string" for c in TRIPLE_COLS)
 
 SEP = ""  # unambiguous joiner for skolem key parts
 

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .mentions import alias_owners
 
 #: below this many (symmetrized, deduped) edges a graph is metadata-sized
@@ -91,8 +92,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         probe = sym.limit(small_graph_edges + 1).collect()
         if len(probe) <= small_graph_edges:
             labels = _driver_union_find([(r.src, r.dst) for r in probe])
-            return edges.sparkSession.createDataFrame(
-                labels, "node string, comp string")
+            return local_frame(edges.sparkSession, labels,
+                               "node string, comp string")
 
     sym = sym.localCheckpoint()
 
@@ -245,4 +246,4 @@ def canonical_mapping(spark, dictionary: list[tuple[str, str, list[str]]]
     edges = [(ents[0], e) for ents in alias_owners(dictionary).values()
              for e in ents[1:]]
     rows = [(n, c) for n, c in _driver_union_find(edges) if n != c]
-    return spark.createDataFrame(rows, "node string, canonical string")
+    return local_frame(spark, rows, "node string, canonical string")

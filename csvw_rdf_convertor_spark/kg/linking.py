@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..ops.minhash import (char_shingles, jaccard, lsh_bands,
                            shingle_pairs, signature_from_pairs)
+from ..sources.local import local_frame
 from .mentions import alias_owners
 
 N_PERM = 32
@@ -80,7 +81,7 @@ def link_exact(mentions: DataFrame) -> DataFrame:
 def alias_table(spark, dictionary: list[tuple[str, str, list[str]]]) -> DataFrame:
     rows = [(ent, a) for a, ents in alias_owners(dictionary).items()
             for ent in ents]
-    return spark.createDataFrame(rows, "entity_id string, alias string").distinct()
+    return local_frame(spark, rows, "entity_id string, alias string").distinct()
 
 
 def link_fuzzy(unmatched: DataFrame,

@@ -196,18 +196,25 @@ def run(transcripts: DataFrame, out_dir: str, *,
     # fans them out into ~10× more triple rows: the narrow mapping preserves
     # partitioning, so the write needs no triples-wide shuffle at all — the
     # engine's single biggest memory-bandwidth term at high core counts
-    # (round-2 scaling fix). One file per bucket per side still holds
-    # (each task owns exactly one bucket).
-    todo = transcripts.withColumn("bucket", bucket)
+    # (round-2 scaling fix). One file per bucket per side still holds: hash
+    # partitioning may put two buckets in one task, but each bucket lies
+    # wholly inside one task, which is what exactly-once resume needs.
+    pending = transcripts.withColumn("bucket", bucket)
     if done:
-        todo = todo.where(~F.col("bucket").isin(*done))
-    todo = todo.repartition(n_buckets, "bucket").cache()
+        pending = pending.where(~F.col("bucket").isin(*done))
+    todo = pending.repartition(n_buckets, "bucket").cache()
 
     # -- stage 1: CSVW-style mapping (narrow) + mention detection (narrow) ---
     turns = turn_triples(todo, passthrough=("bucket",))
+    # Detection reads the input's own splits, not the bucket partitions:
+    # it is narrow and needs no bucket co-location (linking regroups by
+    # conv_id, and the mention triples are repartitioned by bucket before
+    # the write), and every Python worker task has a fixed cost whatever it
+    # does (sources/local.py), so detection starts one task per input split
+    # and no more. At scale its parallelism follows the input splits.
     # persist: detection (pandas) and linking feed both the triple write and
     # the metrics aggregation — without this each action re-runs them
-    ments = mentions_mod.detect_mentions(todo, dictionary).persist()
+    ments = mentions_mod.detect_mentions(pending, dictionary).persist()
     aliases = linking.alias_table(spark, dictionary)
     linked = linking.link(ments, aliases).withColumn("bucket", bucket).persist()
     canon = cc.canonical_mapping(spark, dictionary)

@@ -24,8 +24,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cells
-from ..functions.terms import iri_object, literal_object, skolem, triple
+from ..functions.terms import (TRIPLE_DDL, iri_object, literal_object, skolem,
+                               triple)
 from ..functions.uritemplate import compile_template, variables
+from ..sources.local import local_frame
 from ..spec import CSVW, RDF, XSD, ColumnSpec, TableSpec, expand_iri
 
 RDF_FIRST = RDF + "first"
@@ -296,9 +298,7 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
     multiply referenced.
     """
     if table.suppressOutput:
-        return df.sparkSession.createDataFrame(
-            [], "subj string, pred string, obj_lex string, obj_kind string, "
-                "obj_dtype string, obj_lang string, graph string")
+        return local_frame(df.sparkSession, [], TRIPLE_DDL)
 
     url = _resolve_url(table)
     df = _maybe_row_numbers(df, table, partition_by, minimal, allow_arrival_order)
@@ -526,9 +526,7 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         ext = external_triples(table.external, skolem_value(url, "table"),
                                base=url, default_lang=default_lang)
         if ext:
-            out = out.unionByName(spark.createDataFrame(
-                ext, "subj string, pred string, obj_lex string, obj_kind string, "
-                     "obj_dtype string, obj_lang string, graph string"))
+            out = out.unionByName(local_frame(spark, ext, TRIPLE_DDL))
     return out
 
 
@@ -575,9 +573,7 @@ def group_to_triples(dfs: dict[str, DataFrame], group, *, minimal: bool = True,
         ext = external_triples(group.external, "_:skgroup",
                                base=group.base, default_lang=default_lang)
         if ext:
-            out = out.unionByName(spark.createDataFrame(
-                ext, "subj string, pred string, obj_lex string, obj_kind string, "
-                     "obj_dtype string, obj_lang string, graph string"))
+            out = out.unionByName(local_frame(spark, ext, TRIPLE_DDL))
     return out
 
 
@@ -597,7 +593,7 @@ def issues(df: DataFrame, table: TableSpec,
                      F.lit(col.name).alias("column"),
                      F.lit("required cell is null").alias("message"))))
     if not checks:
-        return df.sparkSession.createDataFrame(
-            [], "table string, row long, column string, message string")
+        return local_frame(df.sparkSession, [],
+                           "table string, row long, column string, message string")
     arr = F.array_compact(F.array(*checks))
     return df.select(F.explode(arr).alias("i")).select("i.*")

@@ -17,6 +17,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from ..spec import RDF, XSD, DatatypeSpec
 
 RDF_TYPE = RDF + "type"
@@ -139,8 +140,8 @@ def merged_column_datatypes(triples: DataFrame) -> DataFrame:
                     F.when(F.col("obj_dtype") == "", XSD + "string")
                      .otherwise(F.col("obj_dtype")))).alias("dtypes")))
     rows = observed.collect()  # predicate cardinality is tiny metadata
-    spark = triples.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        triples.sparkSession,
         [(r["pred"], merge_datatypes(list(r["dtypes"]))) for r in rows],
         "pred string, merged_dtype string")
 

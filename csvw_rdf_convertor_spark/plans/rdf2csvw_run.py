@@ -20,17 +20,15 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from ..descriptor_norm import normalize_descriptor
+from ..functions.terms import TRIPLE_DDL
+from ..sources.local import local_frame
 from ..spec import parse_descriptor
 from .rdf2csvw import compile_table_query, match_table_query
-
-#: triples DataFrame schema used across the repo
-TRIPLE_SCHEMA = ("subj string, pred string, obj_lex string, obj_kind string, "
-                 "obj_dtype string, obj_lang string, graph string")
 
 
 def triples_df(spark: SparkSession, triples: list[tuple]) -> DataFrame:
     """Build the canonical 7-column triples DataFrame from parsed tuples."""
-    return spark.createDataFrame(list(triples), TRIPLE_SCHEMA)
+    return local_frame(spark, triples, TRIPLE_DDL)
 
 
 def table_output_name(url: str) -> str:

@@ -379,10 +379,8 @@ def read_jsonld(spark, path: str, *, base: str = "",
     shape (same contract as read_turtle)."""
     from pathlib import Path
 
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from ..functions.terms import TRIPLE_COLS
+    from ..functions.terms import TRIPLE_DDL
+    from .local import local_frame
     rows = jsonld_to_triples(json.loads(Path(path).read_text("utf-8")),
                              base=base, resolver=resolver)
-    return spark.createDataFrame(
-        rows, ", ".join(f"{c} string" for c in TRIPLE_COLS))
+    return local_frame(spark, rows, TRIPLE_DDL)

@@ -360,7 +360,7 @@ def read_rdfxml(spark, path: str, base: str = ""):
     TRIPLE_COLS shape (same contract as read_turtle/read_jsonld)."""
     from pathlib import Path
 
-    from ..functions.terms import TRIPLE_COLS
+    from ..functions.terms import TRIPLE_DDL
+    from .local import local_frame
     rows = parse_rdfxml(Path(path).read_text("utf-8"), base)
-    return spark.createDataFrame(
-        rows, ", ".join(f"{c} string" for c in TRIPLE_COLS))
+    return local_frame(spark, rows, TRIPLE_DDL)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..spec import PREFIXES, XSD
 from .. functions.ntriples import escape_literal
+from .local import local_frame
 
 _NS_RE = r"^(.*[#/])([A-Za-z_][\w.-]*)$"
 
@@ -105,8 +106,7 @@ def write_turtle(triples: DataFrame, path: str,
     (A single .ttl file would force coalesce(1); keep it distributed and let
     consumers cat header + parts — same contract as any Spark text sink.)"""
     header, lines = to_turtle_lines(triples, prefix_map)
-    spark = triples.sparkSession
-    spark.createDataFrame([(h,) for h in header], "line string") \
+    local_frame(triples.sparkSession, [(h,) for h in header], "line string") \
         .coalesce(1).write.mode("overwrite").text(f"{path}/_prefixes")
     lines.write.mode("overwrite").text(f"{path}/statements")
 

@@ -298,8 +298,8 @@ def read_turtle(spark, path: str, base: str = ""):
     triples DataFrame. Large corpora should use NT/NQ (line-parallel scan)."""
     from pathlib import Path
 
+    from ..functions.terms import TRIPLE_DDL
+    from .local import local_frame
     p = Path(path[len("file://"):] if path.startswith("file://") else path)
     rows = parse_turtle(p.read_text(encoding="utf-8"), base)
-    return spark.createDataFrame(
-        rows, "subj string, pred string, obj_lex string, obj_kind string, "
-              "obj_dtype string, obj_lang string, graph string")
+    return local_frame(spark, rows, TRIPLE_DDL)

@@ -232,3 +232,23 @@ def test_resume_raises_on_corrupt_manifest(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)footer"):
         pipeline.run(tr, str(out), n_buckets=2)
     assert not (out / "triples").exists()
+
+
+def test_detection_runs_over_input_splits(spark, transcripts, tmp_path,
+                                          monkeypatch):
+    """Mention detection reads the input's own partitions, not the
+    ``n_buckets`` bucket partitions: it is narrow, and each Python worker
+    task it starts has a fixed cost whatever it does."""
+    seen = []
+    detect = mentions_mod.detect_mentions
+
+    def recording(frame, dictionary):
+        seen.append(frame)
+        return detect(frame, dictionary)
+
+    monkeypatch.setattr(pipeline.mentions_mod, "detect_mentions", recording)
+    splits = transcripts.repartition(3)
+    m = pipeline.run(splits, str(tmp_path / "kg"), n_buckets=5)
+    assert m.buckets_done == 5 and m.turns == transcripts.count()
+    [frame] = seen
+    assert frame.rdd.getNumPartitions() == splits.rdd.getNumPartitions() == 3

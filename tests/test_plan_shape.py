@@ -4,7 +4,14 @@ even if results are still correct."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+from csvw_rdf_convertor_spark.kg import cc, linking
+from csvw_rdf_convertor_spark.kg.synth import alias_dictionary
+from csvw_rdf_convertor_spark.plans import csvw2rdf, rdf2csvw
+from csvw_rdf_convertor_spark.plans.rdf2csvw_run import triples_df
+from csvw_rdf_convertor_spark.spec import XSD, parse_descriptor
 
 SF = "/root/testdata/sf0.001"
 
@@ -240,3 +247,48 @@ def test_mapping_build_py4j_calls_grow_linearly_with_width(spark,
     c16 = py4j_commands(build, 16)
     c32 = py4j_commands(build, 32)
     assert c32 <= 2.2 * c16, (c16, c32)
+
+
+
+
+
+_TRIPLE = ("http://example.org/s", "http://example.org/p", "1", "literal",
+           XSD + "integer", "", "")
+
+
+def _one_column(spark, **extra):
+    """Two string rows and their one-column table (no required column)."""
+    table = parse_descriptor({"url": "http://example.org/t.csv",
+                              "tableSchema": {"columns": [{"name": "a"}]},
+                              **extra}).tables[0]
+    return spark.range(2).selectExpr("cast(id as string) as a"), table
+
+
+#: each package function that builds a frame from driver-side rows
+DRIVER_FRAMES = {
+    "cc.canonical_mapping":
+        lambda spark: cc.canonical_mapping(spark, alias_dictionary()),
+    "linking.alias_table":
+        lambda spark: linking.alias_table(spark, alias_dictionary()),
+    "rdf2csvw.merged_column_datatypes":
+        lambda spark: rdf2csvw.merged_column_datatypes(
+            triples_df(spark, [_TRIPLE])),
+    "rdf2csvw_run.triples_df": lambda spark: triples_df(spark, [_TRIPLE]),
+    "csvw2rdf.issues":
+        lambda spark: csvw2rdf.issues(*_one_column(spark),
+                                      allow_arrival_order=True),
+    "csvw2rdf.table_to_triples[suppressed]":
+        lambda spark: csvw2rdf.table_to_triples(
+            *_one_column(spark, suppressOutput=True)),
+}
+
+
+@pytest.mark.parametrize("builder", list(DRIVER_FRAMES))
+def test_driver_built_frames_are_local_relations(spark, builder):
+    """A frame built from driver-side rows must be a JVM ``LocalRelation``,
+    not a ``LogicalRDD`` over pickled Python rows: each action on the latter
+    starts one Python worker task per default-parallelism slice, each with
+    a fixed cost, even for zero rows."""
+    df = DRIVER_FRAMES[builder](spark)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
