@@ -28,7 +28,6 @@ import re
 from collections.abc import Mapping
 from typing import NamedTuple
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -217,21 +216,60 @@ def _dir_of(base: str) -> str:
 
 
 # --- templateIris (IDN + decodeURI) post-pass --------------------------------
+#
+# The reference's default templateIris=true transform (convertor.ts:1235-1243):
+# IDN-decode the hostname, then decodeURI the whole IRI. ``idn_hosts`` and
+# ``decode_uri`` are its two halves as JVM Column expressions (no Python in
+# the row path); ``template_iris_value`` and its helpers are the pure-Python
+# twin the tests hold them to.
 
 #: escapes JS ``decodeURI`` leaves intact (reserved set: # $ & + , / : ; = ? @)
 _DECODE_URI_KEEP = re.compile(
-    r"%(?:23|24|26|2[bB]|2[cC]|2[fF]|3[aA]|3[bB]|3[dD]|3[fF]|40)")
+    r"(%(?:23|24|26|2[bB]|2[cC]|2[fF]|3[aA]|3[bB]|3[dD]|3[fF]|40))")
 _HOST_RE = re.compile(r"^([A-Za-z][\w+.-]*://)([^/?#]*)(.*)$", re.S)
+
+#: ``_HOST_RE`` in Java syntax. Python's str ``\w`` is letters, numbers and
+#: '_'; Java's ``(?U)\w`` would add combining marks and drop ``No`` numbers
+_HOST_RE_JVM = r"(?s)^([A-Za-z][\p{L}\p{N}_+.-]*://)([^/?#]*)(.*)$"
+#: ``java.net.IDN.ALLOW_UNASSIGNED``: Python's nameprep allows unassigned
+#: code points too
+_IDN_ALLOW_UNASSIGNED = 1
+#: the '%' of a kept escape or of a stray '%' (one that starts no %XX,
+#: which Python's unquote keeps and URLDecoder throws on)
+_PCT_TO_ESCAPE = "%(?=2[346BCFbcf]|3[ABDFabdf]|40|(?![0-9A-Fa-f]{2}))"
+
+
+def _utf8_escapes_re() -> str:
+    """A Java regex matching a whole string whose every %XX run is UTF-8
+    (RFC 3629 byte ranges: no overlongs, surrogates or code points past
+    U+10FFFF). Other text and stray '%' pass."""
+    h = "[0-9A-Fa-f]"
+    cont = f"%[89ABab]{h}"
+    seqs = [f"%[0-7]{h}",                                  # ASCII
+            f"%[Cc][2-9A-Fa-f]{cont}", f"%[Dd]{h}{cont}",  # C2-DF
+            f"%[Ee]0%[ABab]{h}{cont}",                     # E0 A0-BF
+            f"%[Ee][1-9A-Ca-cEFef]{cont}{cont}",           # E1-EC, EE-EF
+            f"%[Ee][Dd]%[89]{h}{cont}",                    # ED 80-9F
+            f"%[Ff]0%[9ABab]{h}{cont}{cont}",              # F0 90-BF
+            f"%[Ff][1-3]{cont}{cont}{cont}",               # F1-F3
+            f"%[Ff]4%8{h}{cont}{cont}"]                    # F4 80-8F
+    return rf"^(?:[^%]++|%(?!{h}{{2}})|{'|'.join(seqs)})*+\z"
+
+
+_UTF8_ESCAPES = _utf8_escapes_re()
 
 
 def js_decode_uri(s: str) -> str:
     """JS ``decodeURI`` twin: decode every %XX except the reserved set.
-    Malformed escapes pass through (JS throws URIError; a data engine keeps
-    the row and leaves the IRI as-is)."""
+    A malformed escape run (not UTF-8, e.g. ``%ab``) leaves ``s`` as it is
+    (JS throws URIError; a data engine keeps the row and the IRI)."""
     import urllib.parse
-    protected = _DECODE_URI_KEEP.sub(lambda m: "\x00" + m.group(0)[1:] + "\x00", s)
-    decoded = urllib.parse.unquote(protected, errors="strict")
-    return re.sub("\x00(..)\x00", r"%\1", decoded)
+    parts = _DECODE_URI_KEEP.split(s)  # odd items: the kept escapes
+    try:
+        return "".join(p if i % 2 else urllib.parse.unquote(p, errors="strict")
+                       for i, p in enumerate(parts))
+    except UnicodeDecodeError:
+        return s
 
 
 def idn_to_unicode(host: str) -> str:
@@ -249,9 +287,7 @@ def idn_to_unicode(host: str) -> str:
 def template_iris_value(uri: str) -> str:
     """The reference's default templateIris=true transform
     (convertor.ts:1235-1243): IDN-decode the hostname, then decodeURI the
-    whole IRI. This engine keeps RFC-encoded IRIs by DEFAULT (encoded forms
-    are join-stable and round-trip through NT); call
-    plans.csvw2rdf.apply_template_iris for reference-default output."""
+    whole IRI."""
     m = _HOST_RE.match(uri)
     if m:
         scheme, host, rest = m.groups()
@@ -259,15 +295,55 @@ def template_iris_value(uri: str) -> str:
     return js_decode_uri(uri)
 
 
-def template_iris_udf():
-    """Arrow-batched pandas UDF applying :func:`template_iris_value`."""
-    from pyspark.sql.types import StringType
+def _idn(method: str, label: Column) -> Column:
+    return F.try_reflect(F.lit("java.net.IDN"), F.lit(method), label,
+                         F.lit(_IDN_ALLOW_UNASSIGNED))
 
-    @F.pandas_udf(StringType())
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: None if v is None else template_iris_value(v))
 
-    return _udf
+def _idn_label(label: Column) -> Column:
+    """One host label as :func:`idn_to_unicode` treats it: only a label that
+    starts with lower-case ``xn--`` is decoded; NULL when that fails.
+
+    It fails when the label is not ASCII, when ``IDN.toUnicode`` (which
+    never throws) hands it back unchanged, or when its decoding, lower-cased
+    first as Python's nameprep does with its newer Unicode tables (Georgian
+    capitals, say), does not encode back to the label."""
+    uni = F.nullif(_idn("toUnicode", label), label)
+    return (F.when(~label.startswith("xn--"), label)
+            .when(~label.rlike("[^\\x00-\\x7F]")
+                  & (_idn("toASCII", F.lower(uni)) == F.lower(label)), uni))
+
+
+def idn_hosts(iri: Column) -> Column:
+    """JVM twin of the IDN half of :func:`template_iris_value`: the host of
+    a ``scheme://host…`` IRI with its ``xn--`` labels decoded, or the IRI
+    unchanged when any of them fails to decode.
+
+    Known residue: a label decoding to code points Unicode 3.2 leaves
+    unassigned can still differ, where Python's stdlib and Java disagree on
+    their bidi class or combining order (2 labels in 62k random IRIs).
+
+    ``try_reflect`` is nondeterministic to the optimizer, so project this
+    in its own stage before anything that reads the result twice."""
+    scheme, host, rest = (F.regexp_extract(iri, _HOST_RE_JVM, i)
+                          for i in (1, 2, 3))
+    labels = F.transform(F.split(host, r"\.", -1), _idn_label)
+    return F.when(iri.contains("xn--") & (scheme != "")
+                  & F.forall(labels, lambda x: x.isNotNull()),
+                  F.concat(scheme, F.array_join(labels, "."), rest)
+                  ).otherwise(iri)
+
+
+def decode_uri(iri: Column) -> Column:
+    """JVM twin of :func:`js_decode_uri` on ``URLDecoder``
+    (``try_url_decode``), for IRIs whose %XX runs are all UTF-8; any other
+    IRI passes through unchanged (URLDecoder would decode its bytes to
+    U+FFFD). The '%' of a kept escape or a stray '%' is escaped first, and
+    '+', which URLDecoder reads as a space."""
+    esc = F.regexp_replace(iri, _PCT_TO_ESCAPE, "%25")
+    dec = F.try_url_decode(F.replace(esc, F.lit("+"), F.lit("%2B")))
+    return F.coalesce(
+        F.when(iri.contains("%") & iri.rlike(_UTF8_ESCAPES), dec), iri)
 
 
 def inverse_template_regex(template: str) -> str:

@@ -535,18 +535,19 @@ def apply_template_iris(triples: DataFrame) -> DataFrame:
     (convertor.ts:1235-1243): IDN-decode hostnames + JS-decodeURI every IRI
     term (subjects, predicates, IRI objects; skolem bnodes untouched).
 
-    Opt-in here (the engine default keeps RFC-encoded IRIs — encoded forms
-    are join-stable and round-trip through NT serialization); Arrow-batched
-    pandas UDF, one narrow projection."""
-    from ..functions.uritemplate import template_iris_udf
-    dec = template_iris_udf()
-    return (triples
-            .withColumn("subj", F.when(F.col("subj").startswith("_:"),
-                                       F.col("subj")).otherwise(dec("subj")))
-            .withColumn("pred", dec("pred"))
-            .withColumn("obj_lex", F.when(F.col("obj_kind") == "iri",
-                                          dec("obj_lex"))
-                        .otherwise(F.col("obj_lex"))))
+    On by default in the CLI and the web service (command.ts:55-59), opt-in
+    in the engine API (encoded IRIs are join-stable and round-trip through
+    NT serialization). JVM expressions only: two projections, the IDN half
+    staged before the decode that reads it several times."""
+    from ..functions.uritemplate import decode_uri, idn_hosts
+    is_iri = {"subj": ~F.col("subj").startswith("_:"), "pred": F.lit(True),
+              "obj_lex": F.col("obj_kind") == "iri"}
+
+    def on_iris(df: DataFrame, fn) -> DataFrame:
+        return df.withColumns({c: F.when(cond, fn(F.col(c))).otherwise(F.col(c))
+                               for c, cond in is_iri.items()})
+
+    return on_iris(on_iris(triples, idn_hosts), decode_uri)
 
 
 def group_to_triples(dfs: dict[str, DataFrame], group, *, minimal: bool = True,

@@ -153,6 +153,39 @@ def test_csvw2rdf_distributed_output(spark, workdir):
     assert lines.count() == len(EXPECTED)
 
 
+LINK = "http://ex.org/def#link"
+
+#: ``{+link}`` copies the cell's IRI with its escapes; ``%ab`` is no UTF-8
+LINK_DESCRIPTOR = {
+    "@context": "http://www.w3.org/ns/csvw",
+    "url": "links.csv",
+    "tableSchema": {
+        "aboutUrl": "http://ex.org/r/{id}",
+        "columns": [
+            {"name": "id", "titles": "id"},
+            {"name": "link", "titles": "link", "propertyUrl": LINK,
+             "valueUrl": "{+link}"},
+        ],
+    },
+}
+
+LINK_CSV = "id,link\n1,http://ex.org/%ab\n2,http://ex.org/caf%C3%A9\n"
+
+
+def test_csvw2rdf_template_iris_passes_malformed_escape_through(spark,
+                                                                tmp_path):
+    """templateIris (on by default) decodes IRIs; one whose escapes are not
+    UTF-8 is emitted unchanged instead of failing the conversion."""
+    (tmp_path / "links.csv").write_text(LINK_CSV, encoding="utf-8")
+    (tmp_path / "meta.json").write_text(json.dumps(LINK_DESCRIPTOR),
+                                        encoding="utf-8")
+    out = str(tmp_path / "out.nt")
+    assert main(["csvw2rdf", "-i", str(tmp_path / "meta.json"),
+                 "-o", out, "--minimal"]) == 0
+    assert {r[2] for r in _graph(spark, out) if r[1] == LINK} == {
+        "http://ex.org/%ab", "http://ex.org/café"}
+
+
 def test_rdf2csvw_with_descriptor(spark, workdir):
     nt = "\n".join(
         f'<{s}> <{p}> "{o}"' + (f"^^<{d}>" if d else "") + " ."

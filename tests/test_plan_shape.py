@@ -180,9 +180,16 @@ MIXED_COLS = [("k1", "integer"), ("k2", "integer"), ("price", "decimal"),
               ("note", "string")]
 
 
-def _mixed_table(cols, base: str):
-    from csvw_rdf_convertor_spark.spec import parse_descriptor
-    return parse_descriptor({
+#: three rows of ``MIXED_COLS``: valid, valid with quoting and non-ASCII
+#: text, and invalid lexical forms and empty cells
+MIXED_CSV = (",".join(n for n, _dt in MIXED_COLS) + "\n"
+             "0,1,12.50,3,true,2024-05-01T10:00:00,AX-0001,alpha beta\n"
+             "0,2,0.99,-7,0,2019-12-31T23:59:59,BZ-0420,\"a,b\" café 東京\n"
+             "1,3,12.3.4,n/a,maybe,yesterday,,\n")
+
+
+def _mixed_descriptor(cols) -> dict:
+    return {
         "@context": "http://www.w3.org/ns/csvw",
         "url": "items.csv",
         "tableSchema": {
@@ -190,25 +197,17 @@ def _mixed_table(cols, base: str):
             "columns": [{"name": n, "titles": n, "datatype": dt,
                          "propertyUrl": f"http://example.org/ns#{n}"}
                         for n, dt in cols]},
-    }, base).tables[0]
+    }
 
 
-def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
-    """The largest generated method of an 8-column mixed-type table's
-    mapping (the shape of a typical web-service request) must stay
-    JIT-compilable."""
-    from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
-    from csvw_rdf_convertor_spark.sources.csv_source import read_csv
-    (tmp_path / "items.csv").write_text(
-        ",".join(n for n, _dt in MIXED_COLS) + "\n"
-        "0,1,12.50,3,true,2024-05-01T10:00:00,AX-0001,alpha beta\n"
-        "0,2,0.99,-7,0,2019-12-31T23:59:59,BZ-0420,\"a,b\" café 東京\n"
-        "1,3,12.3.4,n/a,maybe,yesterday,,\n", encoding="utf-8")
-    table = _mixed_table(MIXED_COLS, f"{tmp_path}/")
-    df = table_to_triples(read_csv(spark, str(tmp_path / "items.csv"), table),
-                          table, minimal=True, allow_arrival_order=True)
-    # an adaptive plan holds no codegen stages before it runs: compile a
-    # non-adaptive one
+def _mixed_table(cols, base: str):
+    return parse_descriptor(_mixed_descriptor(cols), base).tables[0]
+
+
+def _max_method_bytes(spark, df) -> int:
+    """Bytecode size of the largest method whole-stage codegen generates
+    for ``df``. An adaptive plan holds no codegen stages before it runs, so
+    this compiles a non-adaptive one."""
     key = "spark.sql.adaptive.enabled"
     aqe = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -219,7 +218,70 @@ def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
     seq = spark._jvm.org.apache.spark.sql.execution.debug.package \
         .codegenStringSeq(plan)
     sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
-    assert sizes and max(sizes) < JIT_HUGE_METHOD_BYTES, sizes
+    assert sizes, "no whole-stage codegen stage"
+    return max(sizes)
+
+
+def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
+    """The largest generated method of an 8-column mixed-type table's
+    mapping (the shape of a typical web-service request) must stay
+    JIT-compilable."""
+    from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
+    from csvw_rdf_convertor_spark.sources.csv_source import read_csv
+    (tmp_path / "items.csv").write_text(MIXED_CSV, encoding="utf-8")
+    table = _mixed_table(MIXED_COLS, f"{tmp_path}/")
+    df = table_to_triples(read_csv(spark, str(tmp_path / "items.csv"), table),
+                          table, minimal=True, allow_arrival_order=True)
+    assert _max_method_bytes(spark, df) < JIT_HUGE_METHOD_BYTES
+
+
+def test_csvw2rdf_request_plans_no_python(spark, tmp_path, monkeypatch):
+    """A default ``csvw2rdf`` conversion (templateIris on, as the web service
+    runs it) of the 8-column table plans no Python: the N-Triples line frame
+    the CLI streams has no Python evaluation node, each of which starts the
+    Python daemon and a worker per task. Its largest generated method,
+    serialization included, stays JIT-compilable."""
+    import json
+
+    from csvw_rdf_convertor_spark import cli
+    (tmp_path / "items.csv").write_text(MIXED_CSV, encoding="utf-8")
+    (tmp_path / "meta.json").write_text(
+        json.dumps(_mixed_descriptor(MIXED_COLS)), encoding="utf-8")
+    frames = []
+    stream = cli._stream_lines
+    monkeypatch.setattr(cli, "_stream_lines",
+                        lambda df, *a: frames.append(df) or stream(df, *a))
+    assert cli.main(["csvw2rdf", "-i", str(tmp_path / "meta.json"),
+                     "-o", str(tmp_path / "out.nt"), "--format", "ntriples",
+                     "--minimal"]) == 0
+    (lines,) = frames
+    plan = lines._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, \
+        plan
+    assert _max_method_bytes(spark, lines) < JIT_HUGE_METHOD_BYTES
+
+
+#: the package modules that run Python over rows, each vectorized by design
+#: (Arrow batches, pandas string ops): LDML number patterns, mention
+#: detection, the multimodal feature hook and the transcripts stream's
+#: stateful operator
+PYTHON_ROW_MODULES = {"functions/ldml.py", "kg/mentions.py",
+                      "ops/multimodal.py", "streaming/transcripts_stream.py"}
+
+
+def test_python_row_code_stays_in_its_modules():
+    """A pandas UDF or ``*InPandas`` call starts Python workers on every
+    plan that uses it; a new one (on the csvw2rdf path above all) must be
+    argued for here first."""
+    import re
+    from pathlib import Path
+
+    import csvw_rdf_convertor_spark
+    root = Path(csvw_rdf_convertor_spark.__file__).parent
+    found = {p.relative_to(root).as_posix() for p in sorted(root.rglob("*.py"))
+             if re.search(r"pandas_udf|mapInPandas|applyInPandas",
+                          p.read_text("utf-8"))}
+    assert found == PYTHON_ROW_MODULES
 
 
 def test_mapping_build_py4j_calls_grow_linearly_with_width(spark,

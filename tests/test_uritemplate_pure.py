@@ -91,3 +91,14 @@ def test_compile_template_modifiers_and_ops(spark):
     assert out.undef == "n"
     # undefined first var contributes neither value nor separator
     assert out.partial == "m#BUILDING"
+
+
+def test_template_iris_value_passes_malformed_utf8_through():
+    from csvw_rdf_convertor_spark.functions.uritemplate import template_iris_value
+    # %XX runs that are not UTF-8: JS throws URIError; the IRI stays as-is
+    assert template_iris_value("urn:%ab") == "urn:%ab"
+    assert template_iris_value("http://ex.org/a%C3") == "http://ex.org/a%C3"
+    # ... but a well-formed U+FFFD escape still decodes
+    assert template_iris_value("urn:%EF%BF%BD") == "urn:\ufffd"
+    # a kept reserved escape does not end a multibyte run early
+    assert template_iris_value("urn:%C3%2F%A9") == "urn:%C3%2F%A9"

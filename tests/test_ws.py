@@ -90,6 +90,29 @@ def test_csvw2rdf_ntriples(spark, server):
     assert _parse(spark, data.decode(), "nt") == EXPECTED
 
 
+def test_csvw2rdf_malformed_escape_passes_through(spark, server):
+    """A ``{+link}`` IRI whose escapes are not UTF-8 survives the default
+    templateIris pass: 200, and the IRI comes back unchanged."""
+    link = "http://ex.org/def#link"
+    descriptor = {
+        "@context": "http://www.w3.org/ns/csvw",
+        "url": "links.csv",
+        "tableSchema": {
+            "aboutUrl": "http://ex.org/r/{id}",
+            "columns": [{"name": "id", "titles": "id"},
+                        {"name": "link", "titles": "link",
+                         "propertyUrl": link, "valueUrl": "{+link}"}]},
+    }
+    status, _mime, data = _post_json(
+        server, "/csvw2rdf",
+        {"input": "meta.json", "format": "ntriples", "minimal": True},
+        {"meta.json": json.dumps(descriptor),
+         "links.csv": "id,link\n1,http://ex.org/%ab\n"})
+    assert status == 200
+    assert {r[2] for r in _parse(spark, data.decode(), "nt")
+            if r[1] == link} == {"http://ex.org/%ab"}
+
+
 def test_csvw2rdf_turtle_default_format(spark, server):
     status, mime, data = _post_json(
         server, "/csvw2rdf",
