@@ -23,8 +23,8 @@ parquet path in this sandbox, or ``--synth N`` for a deterministic
 generated corpus (tests/smoke).
 
 Output layout and the resume/exactly-once contract are ``kg.pipeline.run``'s
-(partitioned triples + manifest with per-bucket lineage + metrics). The job
-prints ONE JSON metrics line on stdout — schedulable/parsable.
+(partitioned triples + a manifest of finished buckets). The job prints ONE
+JSON line of the run's totals on stdout — schedulable/parsable.
 """
 
 from __future__ import annotations

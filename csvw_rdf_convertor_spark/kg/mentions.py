@@ -107,13 +107,21 @@ def detect_mentions(transcripts: DataFrame,
             found = found.rename(columns={0: "mention"}).reset_index()
             lvl = found["level_0"].to_numpy()
             norm = found["mention"].str.lower()
+            cands = norm.map(lookup)
+            # lower() is not the regex's case matching for every letter ('ſ'
+            # matches s, 'İ'.lower() is two code points): such a match takes
+            # the owners of the aliases it spells case-insensitively
+            miss = cands.isna()
+            cands[miss] = found["mention"][miss].map(lambda m: [
+                e for a, ents in lookup.items()
+                if re.fullmatch(re.escape(a), m, re.IGNORECASE) for e in ents])
             yield pd.DataFrame({
                 "conv_id": pdf["conv_id"].to_numpy()[lvl],
                 "turn_idx": pdf["turn_idx"].to_numpy()[lvl],
                 "mention": found["mention"].to_numpy(),
                 "mention_norm": norm.to_numpy(),
                 "match_i": found["match"].to_numpy(),
-                "candidates": norm.map(lookup).to_numpy(),
+                "candidates": cands.to_numpy(),
             })
 
     return (transcripts.select("conv_id", "turn_idx", "text")

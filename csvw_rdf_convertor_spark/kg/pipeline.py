@@ -20,9 +20,12 @@ Scale contract (north rule):
 - canonicalization: computed from the alias dictionary on the driver
   (``cc.canonical_mapping``, no Spark job) and broadcast into the mention
   triples;
-- resumability: a manifest parquet records (bucket, counts, finished_at);
-  rerun anti-joins completed buckets before any work happens, so a killed
-  run resumes where it stopped with no duplicate triples;
+- resumability: after a run's triples commit, a manifest parquet records
+  (bucket, finished_at) per bucket it ran; a rerun drops completed buckets
+  before any work (and plans nothing if none is left), so a killed run
+  resumes with no duplicate triples. Run totals come from one
+  ``Observation`` on the triple write; per-bucket counts from one
+  ``groupBy("bucket")`` over the sink;
 - in production the sinks are partitioned Iceberg tables (snapshot commits
   give the same atomicity); in this sandbox they are partitioned parquet
   behind the same writer seam.
@@ -33,13 +36,13 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.ntriples import to_ntriples_lines
 from ..functions.terms import TRIPLE_COLS, skolem
 from ..plans.csvw2rdf import table_to_triples
+from ..sources.local import local_frame
 from ..spec import RDF, XSD, parse_descriptor
 from . import cc, linking
 from . import mentions as mentions_mod
@@ -172,8 +175,8 @@ def run(transcripts: DataFrame, out_dir: str, *,
     Layout under ``out_dir``:
       triples/   parquet partitioned by bucket (prod: Iceberg table)
       ntriples/  optional N-Triples text
-      manifest/  parquet (bucket, n_turns, n_mentions, n_links, n_triples,
-                 finished_at) — per-partition checkpoint + lineage + metrics
+      manifest/  parquet (bucket, finished_at), one row per bucket a run
+                 committed — the resume checkpoint, nothing else
     """
     t0 = time.time()
     spark = transcripts.sparkSession
@@ -182,15 +185,17 @@ def run(transcripts: DataFrame, out_dir: str, *,
 
     done: set[int] = set()
     manifest_path = f"{out_dir}/manifest"
-    if resume:
-        try:
-            done = {r.bucket for r in
-                    spark.read.parquet(manifest_path).select("bucket").collect()}
-        except AnalysisException as exc:
-            # no manifest yet = fresh run; anything else (a corrupt
-            # manifest) must not silently redo every bucket
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
+    # no manifest = fresh run; a corrupt one fails the read, never redoes
+    # every bucket. Asked of the file system, not by catching PATH_NOT_FOUND:
+    # after an Observation, Spark logs each failed read as a listener error.
+    path = spark._jvm.org.apache.hadoop.fs.Path(manifest_path)
+    if resume and path.getFileSystem(
+            spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
+        done = {r.bucket for r in
+                spark.read.parquet(manifest_path).select("bucket").collect()}
+    todo = [b for b in range(n_buckets) if b not in done]
+    if not todo:
+        return RunMetrics(0, len(done), 0, 0, 0, 0, time.time() - t0)
 
     # Repartition the SMALL transcript rows by bucket BEFORE the mapping
     # fans them out into ~10× more triple rows: the narrow mapping preserves
@@ -202,21 +207,21 @@ def run(transcripts: DataFrame, out_dir: str, *,
     pending = transcripts.withColumn("bucket", bucket)
     if done:
         pending = pending.where(~F.col("bucket").isin(*done))
-    todo = pending.repartition(n_buckets, "bucket").cache()
 
     # -- stage 1: CSVW-style mapping (narrow) + mention detection (narrow) ---
-    turns = turn_triples(todo, passthrough=("bucket",))
+    turns = turn_triples(pending.repartition(n_buckets, "bucket"),
+                         passthrough=("bucket",))
     # Detection reads the input's own splits, not the bucket partitions:
     # it is narrow and needs no bucket co-location (linking regroups by
     # conv_id, and the mention triples are repartitioned by bucket before
     # the write), and every Python worker task has a fixed cost whatever it
     # does (sources/local.py), so detection starts one task per input split
     # and no more. At scale its parallelism follows the input splits.
-    # persist: detection (pandas) and linking feed both the triple write and
-    # the metrics aggregation — without this each action re-runs them
+    # persist: link()'s isEmpty probe and the triple write both read
+    # detection, the run's only Python task — without it that task runs twice
     ments = mentions_mod.detect_mentions(pending, dictionary).persist()
     aliases = linking.alias_table(spark, dictionary)
-    linked = linking.link(ments, aliases).withColumn("bucket", bucket).persist()
+    linked = linking.link(ments, aliases).withColumn("bucket", bucket)
     canon = cc.canonical_mapping(spark, dictionary)
     m_triples = mention_triples(linked, canon, passthrough=["bucket"])
 
@@ -226,10 +231,21 @@ def run(transcripts: DataFrame, out_dir: str, *,
     all_triples = (turns.select("bucket", *TRIPLE_COLS)
                    .unionByName(m_triples.select("bucket", *TRIPLE_COLS)
                                 .repartition(n_buckets, "bucket")))
+    # run totals from the write itself, O(1) aggregates per row (per-bucket
+    # counts would cost one aggregate per bucket on every row): each turn
+    # has one rdf:type kg:Turn, each linked mention one kg:Mention
+    typed = F.col("pred") == RDF + "type"
+    totals = Observation("kg_run")
+    observed = all_triples.observe(
+        totals, F.count(F.lit(1)).alias("triples"),
+        F.count_if(typed & (F.col("obj_lex") == KG + "Turn")).alias("turns"),
+        F.count_if(typed & (F.col("obj_lex") == KG + "Mention")
+                   ).alias("mentions"),
+        F.count_if(F.col("pred") == KG + "linkedTo").alias("links"))
     # dynamic partition overwrite = idempotent per-bucket commit (the parquet
     # stand-in for an Iceberg partition-overwrite snapshot): a re-run of a
     # bucket replaces its files instead of appending duplicates
-    (all_triples.write.mode("overwrite")
+    (observed.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("bucket").parquet(f"{out_dir}/triples"))
     if write_nt:
@@ -240,37 +256,12 @@ def run(transcripts: DataFrame, out_dir: str, *,
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("bucket").text(f"{out_dir}/ntriples"))
-
-    # -- stage 3: manifest (checkpoint + lineage + metrics) -------------------
-    # ONE aggregation job for turn/mention/link counts (tagged union instead
-    # of three groupBys + joins), plus a zero-column scan of the sink for the
-    # committed triple counts (parquet footers only).
-    tagged = (todo.select("bucket", F.lit("turn").alias("kind"))
-              .unionByName(ments.withColumn("bucket", bucket)
-                           .select("bucket", F.lit("mention").alias("kind")))
-              .unionByName(linked.select("bucket", F.lit("link").alias("kind"))))
-    counts = (tagged.groupBy("bucket").agg(
-        F.sum(F.when(F.col("kind") == "turn", 1).otherwise(0)).alias("n_turns"),
-        F.sum(F.when(F.col("kind") == "mention", 1).otherwise(0)).alias("n_mentions"),
-        F.sum(F.when(F.col("kind") == "link", 1).otherwise(0)).alias("n_links")))
-    triple_counts = (spark.read.parquet(f"{out_dir}/triples")
-                     .where(~F.col("bucket").isin(*done) if done else F.lit(True))
-                     .groupBy("bucket").agg(F.count("*").alias("n_triples")))
-    manifest = (counts.join(triple_counts, "bucket", "left").na.fill(0)
-                .withColumn("finished_at", F.current_timestamp()))
-    manifest.write.mode("append").parquet(manifest_path)
-    todo.unpersist()
     ments.unpersist()
-    linked.unpersist()
 
-    rows = spark.read.parquet(manifest_path).collect()
-    new_rows = [r for r in rows if r.bucket not in done]
-    return RunMetrics(
-        buckets_done=len(new_rows),
-        buckets_skipped=len(done),
-        turns=sum(r.n_turns for r in new_rows),
-        mentions=sum(r.n_mentions for r in new_rows),
-        links=sum(r.n_links for r in new_rows),
-        triples=sum(r.n_triples for r in new_rows),
-        wall_s=time.time() - t0,
-    )
+    # -- stage 2: the checkpoint, after the sinks commit (one file per run) --
+    (local_frame(spark, [(b,) for b in todo], "bucket int")
+     .withColumn("finished_at", F.current_timestamp())
+     .coalesce(1).write.mode("append").parquet(manifest_path))
+    n = totals.get
+    return RunMetrics(len(todo), len(done), n["turns"], n["mentions"],
+                      n["links"], n["triples"], time.time() - t0)

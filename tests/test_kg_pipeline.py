@@ -116,6 +116,20 @@ def test_connected_components_basic(spark):
     assert comp["p"] == comp["p2"] == comp["p3"] == comp["p4"] == "p"
 
 
+def _jobs(spark, group: str, fn):
+    """(Spark jobs ``fn()`` starts, counted under a fresh job group, and
+    what it returns)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
 def test_run_and_resume_exactly_once(spark, transcripts, tmp_path):
     out = str(tmp_path / "kg")
     # no manifest yet: a fresh run of every bucket
@@ -125,8 +139,13 @@ def test_run_and_resume_exactly_once(spark, transcripts, tmp_path):
     assert m1.triples > m1.turns * 5
     total_before = spark.read.parquet(f"{out}/triples").count()
 
-    # rerun: everything is checkpointed → no new triples, all buckets skipped
-    m2 = pipeline.run(transcripts, out, n_buckets=4)
+    # rerun: everything is checkpointed → no new triples, all buckets
+    # skipped, and no Spark job beyond the manifest read
+    read_jobs, _ = _jobs(spark, f"{out}:read", lambda: spark.read.parquet(
+        f"{out}/manifest").select("bucket").collect())
+    rerun_jobs, m2 = _jobs(spark, f"{out}:rerun", lambda: pipeline.run(
+        transcripts, out, n_buckets=4))
+    assert rerun_jobs == read_jobs
     assert m2.buckets_done == 0 and m2.buckets_skipped == 4
     assert spark.read.parquet(f"{out}/triples").count() == total_before
 
@@ -252,3 +271,95 @@ def test_detection_runs_over_input_splits(spark, transcripts, tmp_path,
     assert m.buckets_done == 5 and m.turns == transcripts.count()
     [frame] = seen
     assert frame.rdd.getNumPartitions() == splits.rdd.getNumPartitions() == 3
+
+
+def test_warm_run_job_count(spark, transcripts, tmp_path):
+    """A warm run of every bucket starts 9 Spark jobs: those of the
+    ``isEmpty`` probe in ``linking.link``, the AQE stages of the triple
+    write, and the manifest write. The run totals ride the triple write as one
+    Observation; nothing is re-read. (17 before the manifest became a bare
+    checkpoint: a tagged-union count aggregation over cached frames, a sink
+    re-read, and a manifest re-read and collect.)"""
+    pipeline.run(transcripts, str(tmp_path / "warm"), n_buckets=4)
+    out = str(tmp_path / "kg")
+    jobs, _ = _jobs(spark, out, lambda: pipeline.run(
+        transcripts, out, n_buckets=4))
+    assert jobs == 9
+
+
+def test_resume_reads_manifests_of_both_formats(spark, tmp_path):
+    """A manifest directory holding a file of the older format (bucket,
+    n_turns, n_mentions, n_links, n_triples, finished_at) next to files of
+    the current (bucket, finished_at) one skips exactly the buckets they
+    list, and redoes the rest exactly once."""
+    import datetime
+    tr = synth_transcripts(spark, n_convs=12, max_len=6)
+    out = str(tmp_path / "kg")
+    pipeline.run(tr, out, n_buckets=4)
+    sink = spark.read.parquet(f"{out}/triples")
+    before = sorted(sink.groupBy("bucket").count().collect())
+    # keep the current-format row of bucket 1, add an old-format row for 2
+    current = spark.read.parquet(f"{out}/manifest").where("bucket = 1")
+    current.write.parquet(f"{out}/manifest1")
+    spark.read.parquet(f"{out}/manifest1").write.mode("overwrite") \
+        .parquet(f"{out}/manifest")
+    spark.createDataFrame(
+        [(2, 10, 20, 20, 300, datetime.datetime(2024, 1, 1))],
+        "bucket int, n_turns long, n_mentions long, n_links long, "
+        "n_triples long, finished_at timestamp",
+    ).coalesce(1).write.mode("append").parquet(f"{out}/manifest")
+
+    m = pipeline.run(tr, out, n_buckets=4)
+    assert (m.buckets_done, m.buckets_skipped) == (2, 2)
+    buckets = [r.bucket for r in spark.read.parquet(f"{out}/manifest")
+               .select("bucket").collect()]
+    assert sorted(buckets) == [0, 1, 2, 3]
+    assert sorted(spark.read.parquet(f"{out}/triples")
+                  .groupBy("bucket").count().collect()) == before
+
+
+def test_every_pending_bucket_is_checkpointed(spark, tmp_path):
+    """With more buckets than conversations, the empty buckets are
+    checkpointed too, so a rerun finds nothing to do and starts no job
+    beyond the manifest read. (Resume assumes the input does not change
+    between runs: new rows in a finished bucket are skipped as well.)"""
+    tr = synth_transcripts(spark, n_convs=2, max_len=4)
+    out = str(tmp_path / "kg")
+    m1 = pipeline.run(tr, out, n_buckets=8)
+    assert (m1.buckets_done, m1.buckets_skipped) == (8, 0)
+    assert m1.turns == tr.count()
+    manifest = spark.read.parquet(f"{out}/manifest")
+    assert sorted(r.bucket for r in manifest.collect()) == list(range(8))
+    assert len(manifest.inputFiles()) == 1  # one checkpoint file per run
+
+    read_jobs, _ = _jobs(spark, f"{out}:read", lambda: spark.read.parquet(
+        f"{out}/manifest").select("bucket").collect())
+    rerun_jobs, m2 = _jobs(spark, f"{out}:rerun", lambda: pipeline.run(
+        tr, out, n_buckets=8))
+    assert rerun_jobs == read_jobs
+    assert (m2.buckets_done, m2.buckets_skipped, m2.triples) == (0, 8, 0)
+
+
+def test_detection_looks_up_case_variants_lower_misses(spark, tmp_path):
+    """A case-insensitive match whose ``str.lower()`` is not an alias key
+    ('ſ' matches 's'; 'İ'.lower() is two code points) still gets the
+    owners of the alias it spells, instead of failing the Spark job, and
+    every detected mention is linked exactly once."""
+    import datetime
+    d = [("ent:sun", "Sun", ["sun"]),
+         ("ent:istanbul", "Istanbul", ["istanbul"])]
+    ts = datetime.datetime(2024, 1, 1)
+    tr = spark.createDataFrame(
+        [("c1", 0, "user", "the ſun", None, ts),
+         ("c1", 1, "assistant", "İstanbul", None, ts)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    ments = mentions_mod.detect_mentions(tr, d)
+    got = {(r.mention, tuple(r.candidates)) for r in ments.collect()}
+    assert got == {("ſun", ("ent:sun",)), ("İstanbul", ("ent:istanbul",))}
+    out = str(tmp_path / "kg")
+    m = pipeline.run(tr, out, dictionary=d, n_buckets=2)
+    assert m.mentions == m.links == ments.count() == 2
+    linked_to = {r.obj_lex for r in spark.read.parquet(f"{out}/triples")
+                 .where(F.col("pred") == pipeline.KG + "linkedTo").collect()}
+    assert linked_to == {"ent:sun", "ent:istanbul"}
