@@ -162,18 +162,15 @@ def compile_template(template: str, row_record: Mapping[str, Column],
                 # and CSVW row records are strings)
                 cols.append(ev)
     out = F.concat(*cols) if cols else F.lit("")
-    if base and not re.match(r"^[A-Za-z][\w+.-]*:", template):
+    if base and template_reads_base(template):
         # RFC 3986 resolution against base, decided on the *expanded* value:
         # absolute IRIs pass through, '#frag' appends to base, relative paths
         # resolve against the base directory. r6: when the template's
         # leading LITERAL already decides the branch (it usually does —
-        # '#row-{n}', 'item/{id}', 'urn:x:{id}'), resolve at PLAN time and
-        # skip the per-row scheme regex + branch entirely.
-        head = parts[0][1] if parts and parts[0][0] == "lit" else ""
-        mode = _static_resolution(head)
-        if mode == "abs":
-            pass
-        elif mode == "frag":
+        # '#row-{n}', 'item/{id}'), resolve at PLAN time and skip the
+        # per-row scheme regex + branch entirely.
+        mode = _static_resolution(_head(parts))
+        if mode == "frag":
             out = F.concat(F.lit(base), out)
         elif mode == "rel":
             out = F.concat(F.lit(_dir_of(base)), out)
@@ -185,6 +182,18 @@ def compile_template(template: str, row_record: Mapping[str, Column],
                 .otherwise(F.concat(F.lit(_dir_of(base)), out))
             )
     return out
+
+
+def _head(parts) -> str:
+    return parts[0][1] if parts and parts[0][0] == "lit" else ""
+
+
+def template_reads_base(template: str) -> bool:
+    """Whether ``compile_template(template, …, base)`` reads ``base``: not
+    when the template, or its leading literal, is already absolute
+    (``http://ex.org/{id}``, ``urn:x:{id}``)."""
+    return not (re.match(r"^[A-Za-z][\w+.-]*:", template)
+                or _static_resolution(_head(parse_template(template))) == "abs")
 
 
 def _static_resolution(head: str) -> str | None:

@@ -14,11 +14,22 @@ plan is a straight projection inside whole-stage codegen. The only shuffle a
 table conversion can introduce is the optional global ``row_number`` (used
 for small fixture parity); at scale, numbering is partitioned by a grouping
 key (e.g. ``conv_id``) or taken from an existing ordinal column.
+
+Building that plan is a Python↔JVM round trip per Column, thousands per
+table, while the plan itself only names the columns it reads. So a
+conversion is compiled once per process for each key (the spec, the input's
+column names and the options: ``_compile``, a small LRU) into stages of
+Columns, and each call replays the stages on its own DataFrame. The web
+service's requests share one descriptor under a fresh temp-dir URL each; the
+key leaves the URL out whenever no expression reads it (``_reads_url``).
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
+from dataclasses import dataclass, field, replace
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -26,9 +37,11 @@ from pyspark.sql import functions as F
 from ..functions import cells
 from ..functions.terms import (TRIPLE_DDL, iri_object, literal_object, skolem,
                                triple)
-from ..functions.uritemplate import compile_template, variables
+from ..functions.uritemplate import (compile_template, template_reads_base,
+                                     variables)
 from ..sources.local import local_frame
-from ..spec import CSVW, RDF, XSD, ColumnSpec, TableSpec, expand_iri
+from ..spec import (CSVW, RDF, XSD, ColumnSpec, TableSpec, expand_iri,
+                    iri_reads_base)
 
 RDF_FIRST = RDF + "first"
 RDF_REST = RDF + "rest"
@@ -45,10 +58,10 @@ def _resolve_url(table: TableSpec) -> str:
     return expand_iri(table.url, table.base) if table.base else table.url
 
 
-def _row_numbers(df: DataFrame, table: TableSpec,
-                 partition_by: str | None = None, *,
-                 allow_arrival_order: bool = False) -> DataFrame:
-    """1-based logical row number (reference rowNum: convertor.ts:360-370).
+def _row_number_columns(table: TableSpec, partition_by: str | None = None,
+                        allow_arrival_order: bool = False) -> tuple[Column, Column]:
+    """(``__row``, ``__source_row``): the 1-based logical row number
+    (reference rowNum: convertor.ts:360-370) and its source-file line.
 
     ``order_by`` column → deterministic numbering; with ``partition_by`` the
     sort is per-partition (scale path, no global shuffle to one reducer).
@@ -75,8 +88,7 @@ def _row_numbers(df: DataFrame, table: TableSpec,
             "or pass allow_arrival_order=True to accept non-logical, "
             "partition-encoded row ids (reference rowNum is sequential "
             "1..N — convertor.ts:360-370)")
-    df = df.withColumn(_ROW, rn.cast("long"))
-    return df.withColumn(_SRC_ROW, F.col(_ROW) + F.lit(table.source_row_offset))
+    return rn.cast("long"), F.col(_ROW) + F.lit(table.source_row_offset)
 
 
 def _needs_row_numbers(table: TableSpec, minimal: bool) -> bool:
@@ -99,15 +111,6 @@ def _needs_row_numbers(table: TableSpec, minimal: bool) -> bool:
             if tpl and "{" in tpl and _vars(tpl) & {"_row", "_sourceRow"}:
                 return True
     return False
-
-
-def _maybe_row_numbers(df: DataFrame, table: TableSpec,
-                       partition_by: str | None, minimal: bool,
-                       allow_arrival_order: bool = False) -> DataFrame:
-    if _needs_row_numbers(table, minimal):
-        return _row_numbers(df, table, partition_by,
-                            allow_arrival_order=allow_arrival_order)
-    return df
 
 
 def _default_subject(table_url: str) -> Column:
@@ -228,6 +231,17 @@ _BREAK_SEQ = itertools.count(1)
 #: max typed (parts-staged) columns per codegen segment — 5 measured ≈7.2 KB
 #: of the 8 KB JIT method budget on the lineitem mix (see _codegen_stage_break)
 _TYPED_PER_SEGMENT = 5
+#: compiled conversions a process keeps, least recently used evicted first
+_PROGRAMS_KEPT = 32
+
+#: a compiled stage: a DataFrame method and its arguments; this one, with
+#: no method, is a ``_codegen_stage_break``
+_BREAK: tuple = (None, ())
+
+
+@functools.cache
+def _break_metric() -> Column:
+    return F.count(F.lit(1)).alias("rows")
 
 
 def _codegen_stage_break(df: DataFrame) -> DataFrame:
@@ -242,17 +256,22 @@ def _codegen_stage_break(df: DataFrame) -> DataFrame:
     CollectMetrics node, which does not participate in whole-stage codegen,
     so the parse half and the template/fan-out half each compile into their
     own JIT-compilable method. Cost: one row hand-off between segments and
-    a count accumulator — measured well under the JIT win (r6). The
-    observation name only has to be unique per query; a module counter
-    keeps unions of many tables distinct and carries no data."""
+    a count accumulator — measured well under the JIT win (r6).
+
+    The observation name must be unique within a query. A compiled program
+    is replayed for every table that shares its key, two same-schema tables
+    of one TableGroup included, so the name is drawn here, each time a
+    program is applied, never when it is compiled: a replayed name fails
+    the union with ``DUPLICATED_METRICS_NAME``. It carries no data."""
     return df.observe(f"__csvw2rdf_cg_break_{next(_BREAK_SEQ)}",
-                      F.count(F.lit(1)).alias("rows"))
+                      _break_metric())
 
 
-def _staged_explode(df: DataFrame, arrays: list[Column],
-                    passthrough: list[str]) -> DataFrame:
-    """Explode the concatenation of per-column triple arrays, with each
-    array's CONSTRUCTION staged behind its own single-row Generate barrier.
+def _staged_explode(arrays: list[Column],
+                    passthrough: list[Column]) -> list[tuple]:
+    """Stages exploding the concatenation of per-column triple arrays, with
+    each array's CONSTRUCTION staged behind its own single-row Generate
+    barrier.
 
     Building every column's array-of-structs inside the one explode
     expression compiles into ONE generated Java method
@@ -266,18 +285,74 @@ def _staged_explode(df: DataFrame, arrays: list[Column],
     supports codegen), so no extra row materialization is paid.
 
     Each barrier passes the existing columns through as ``"*"``: every name
-    in a select list is a py4j round trip, and naming ``df.columns`` at
-    every barrier would make the build O(arrays × columns) calls, quadratic
-    in table width (tests/test_plan_shape.py pins the growth)."""
-    names = []
+    in a select list is a py4j round trip, and naming the table's columns
+    at every barrier would make each conversion O(arrays × columns) calls,
+    quadratic in table width (tests/test_plan_shape.py pins the growth)."""
+    star = F.col("*")
+    stages, names = [], []
     for i, arr in enumerate(arrays):
         nm = f"__tr_{i}"
-        df = df.select("*", F.explode(F.array(arr)).alias(nm))
+        stages.append(("select", (star, F.explode(F.array(arr)).alias(nm))))
         names.append(nm)
     flat = (F.flatten(F.array(*[F.col(n) for n in names]))
             if len(names) > 1 else F.col(names[0]))
-    return (df.select(*passthrough, F.explode(flat).alias("t"))
-            .select(*passthrough, "t.*"))
+    return stages + [("select", (*passthrough, F.explode(flat).alias("t"))),
+                     ("select", (*passthrough, F.col("t.*")))]
+
+
+def _reads_url(table: TableSpec, minimal: bool) -> bool:
+    """Whether any expression of the conversion reads the table URL (and so
+    its base). Standard mode always does (row and table nodes, csvw:url);
+    minimal mode only through a default subject, an ordered list's nodes, a
+    column without ``propertyUrl`` (``<url>#name``), or a URL or template
+    that resolves against it."""
+    if not minimal:
+        return True
+    for col in table.columns:
+        if col.suppressOutput:
+            continue
+        if (not col.aboutUrl or not col.propertyUrl
+                or (col.separator is not None and col.ordered)
+                or template_reads_base(col.aboutUrl)):
+            return True
+        for tpl in (col.propertyUrl, col.valueUrl):
+            if tpl and (template_reads_base(tpl) if "{" in tpl
+                        else iri_reads_base(tpl)):
+                return True
+    return False
+
+
+@dataclass(frozen=True)
+class _Key:
+    """What a compiled conversion depends on. The spec enters as its repr,
+    without ``notes`` (no expression reads them) and without ``url`` and
+    ``base`` when no expression reads them: the web service puts every
+    request's table under a fresh temp-dir URL."""
+    spec: str
+    columns: tuple[str, ...]
+    minimal: bool
+    partition_by: str | None
+    default_lang: str
+    allow_arrival_order: bool
+    passthrough: tuple[str, ...]
+    #: the spec compiled on a miss; any spec with an equal key compiles alike
+    table: TableSpec = field(compare=False)
+
+
+class _Program(NamedTuple):
+    """A compiled table conversion: the stages that take an input frame to
+    its triples and, in standard mode, the stages that make the table's own
+    triples from ``spark.range(1)`` and its T8 external triples."""
+    stages: tuple[tuple, ...]
+    table_stages: tuple[tuple, ...] = ()
+    external: tuple = ()
+
+
+def _replay(df: DataFrame, stages: tuple[tuple, ...]) -> DataFrame:
+    for method, args in stages:
+        df = (_codegen_stage_break(df) if method is None
+              else getattr(df, method)(*args))
+    return df
 
 
 def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
@@ -286,6 +361,31 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
                      allow_arrival_order: bool = False,
                      passthrough: tuple[str, ...] = ()) -> DataFrame:
     """Compile and run the full table conversion; returns the triples DF.
+
+    The conversion is compiled once per process for each key (the spec, the
+    input's column names and the options; see ``_Key``) and replayed on each
+    DataFrame: a compiled program is only Columns, which name the columns
+    they read, so building it again for a recurring spec would repeat
+    thousands of identical py4j calls per conversion."""
+    if table.suppressOutput:
+        return local_frame(df.sparkSession, [], TRIPLE_DDL)
+    unread = {} if _reads_url(table, minimal) else {"url": "", "base": ""}
+    spec = replace(table, notes=None, **unread)
+    prog = _compile(_Key(repr(spec), tuple(df.columns), minimal, partition_by,
+                         default_lang, allow_arrival_order, tuple(passthrough),
+                         table))
+    out = _replay(df, prog.stages)
+    if prog.table_stages:
+        spark = df.sparkSession
+        out = out.unionByName(_replay(spark.range(1), prog.table_stages))
+        if prog.external:
+            out = out.unionByName(local_frame(spark, prog.external, TRIPLE_DDL))
+    return out
+
+
+@functools.lru_cache(maxsize=_PROGRAMS_KEPT)
+def _compile(key: _Key) -> _Program:
+    """Compile one table conversion into stages of Columns.
 
     Plan shape (performance-critical): the cell pipeline, the row-record
     bindings, and the per-aboutUrl subject IRIs are materialized as real
@@ -297,11 +397,16 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
     projections separate because the producer expressions are non-cheap and
     multiply referenced.
     """
-    if table.suppressOutput:
-        return local_frame(df.sparkSession, [], TRIPLE_DDL)
-
+    table, minimal = key.table, key.minimal
     url = _resolve_url(table)
-    df = _maybe_row_numbers(df, table, partition_by, minimal, allow_arrival_order)
+    star = F.col("*")
+    stages: list[tuple] = []
+    has_row = _ROW in key.columns
+    if _needs_row_numbers(table, minimal):
+        rn, src_row = _row_number_columns(table, key.partition_by,
+                                          key.allow_arrival_order)
+        stages += [("withColumn", (_ROW, rn)), ("withColumn", (_SRC_ROW, src_row))]
+        has_row = True
 
     # stage 1: P1–P10 per column → array<string> columns (evaluated once),
     # in TWO projections: 1a materializes the normalized cell string (P1+P2),
@@ -325,7 +430,7 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
             stage1b.append(F.array(F.lit(col.default)).alias(cname))
             continue
         src = col.source or col.name
-        if src not in df.columns:
+        if src not in key.columns:
             raise KeyError(f"source column {src!r} for {col.name!r} not in DataFrame")
         nname = f"__norm_{i}"
         stage1a.append(cells.cell_norm(F.col(src), col).alias(nname))
@@ -348,7 +453,7 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         stage1b.append(
             cells.cell_values_from_norm(F.col(nname), col, parts).alias(cname))
     if stage1a:
-        df = df.select("*", *stage1a)
+        stages.append(("select", (star, *stage1a)))
     # Emit the parse intermediates and the cell parses in SEGMENTS of at
     # most _TYPED_PER_SEGMENT typed columns, each segment behind a
     # _codegen_stage_break: a segment's generated consume method must stay
@@ -363,22 +468,22 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         for gi, group in enumerate(parts_groups):
             seg.extend(group)
             if (gi + 1) % _TYPED_PER_SEGMENT == 0:
-                df = _codegen_stage_break(df.select("*", *seg))
+                stages += [("select", (star, *seg)), _BREAK]
                 seg = []
         if seg:
-            df = _codegen_stage_break(df.select("*", *seg))
+            stages += [("select", (star, *seg)), _BREAK]
         seg, typed_in_seg = [], 0
         for bi, expr in enumerate(stage1b):
             seg.append(expr)
             if bi in typed_cells:
                 typed_in_seg += 1
                 if typed_in_seg == _TYPED_PER_SEGMENT:
-                    df = _codegen_stage_break(df.select("*", *seg))
+                    stages += [("select", (star, *seg)), _BREAK]
                     seg, typed_in_seg = [], 0
         if seg:
-            df = _codegen_stage_break(df.select("*", *seg))
+            stages += [("select", (star, *seg)), _BREAK]
     else:
-        df = df.select("*", *stage1b)
+        stages.append(("select", (star, *stage1b)))
 
     # stage 2: row-record bindings (template variables) as columns
     rec_col: dict[str, str] = {}
@@ -388,9 +493,9 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         rec_col[col.name] = rname
         stage2.append(cells.strip_invalid(
             F.array_join(F.col(cell_col[col.name]), ",")).alias(rname))
-    df = df.select("*", *stage2)
+    stages.append(("select", (star, *stage2)))
     record: dict[str, Column] = {n: F.col(c) for n, c in rec_col.items()}
-    if _ROW in df.columns:
+    if has_row:
         record["_row"] = F.col(_ROW).cast("string")
         record["_sourceRow"] = F.col(_SRC_ROW).cast("string")
 
@@ -402,15 +507,15 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
     stage3 = []
     distinct_abouts = dict.fromkeys(
         c.aboutUrl for c in table.columns if not c.suppressOutput)
-    for j, key in enumerate(distinct_abouts):
-        if key and variables(key) & {"_name", "_column", "_sourceColumn"}:
+    for j, about in enumerate(distinct_abouts):
+        if about and variables(about) & {"_name", "_column", "_sourceColumn"}:
             continue
         sname = f"__subj_{j}"
-        subj_col[key] = sname
-        expr = (compile_template(key, record, base=url) if key
+        subj_col[about] = sname
+        expr = (compile_template(about, record, base=url) if about
                 else _default_subject(url))
         stage3.append(expr.alias(sname))
-    df = df.select("*", *stage3)
+    stages.append(("select", (star, *stage3)))
     subjects: dict[str | None, Column] = {k: F.col(v) for k, v in subj_col.items()}
 
     # stage 3.5: per scalar (non-separator) column, the stripped lexical and
@@ -430,7 +535,7 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         stage35.append(cells.is_invalid(item).alias(f"__inv_{i}"))
         scalar_col[col.name] = (f"__lex_{i}", f"__inv_{i}")
     if stage35:
-        df = df.select("*", *stage35)
+        stages.append(("select", (star, *stage35)))
 
     def _scalar(col: ColumnSpec) -> tuple[Column, Column] | None:
         names = scalar_col.get(col.name)
@@ -449,11 +554,14 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         # passthrough columns (e.g. a pre-computed partition bucket) ride
         # through the explode so callers keep their partitioning without
         # re-deriving keys from 10× more triple rows
+        passthrough = [F.col(c) for c in key.passthrough]
         if not per_col:
-            return (df.select(*passthrough,
-                              F.explode(F.array().cast(_EMPTY_TRIPLES)).alias("t"))
-                    .select(*passthrough, "t.*"))
-        return _staged_explode(df, per_col, list(passthrough))
+            empty = F.explode(F.array().cast(_EMPTY_TRIPLES)).alias("t")
+            stages += [("select", (*passthrough, empty)),
+                       ("select", (*passthrough, F.col("t.*")))]
+        else:
+            stages += _staged_explode(per_col, passthrough)
+        return _Program(tuple(stages))
 
     # standard mode (T7): row scaffolding emitted from the same single pass
     row_node = _row_node(url)
@@ -491,10 +599,10 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
     for col in table.columns:
         if col.suppressOutput:
             continue
-        key = col.aboutUrl or ""
-        if key in seen:
+        about = col.aboutUrl or ""
+        if about in seen:
             continue
-        seen.add(key)
+        seen.add(about)
         if col.aboutUrl in subjects:
             subj = subjects[col.aboutUrl]
         elif col.aboutUrl:
@@ -506,28 +614,26 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
         scaffold.append(F.array(triple(row_node, F.lit(CSVW + "describes"), subj, kind,
                                        F.lit(""), F.lit(""))))
 
-    row_triples = _staged_explode(df, per_col + scaffold, [])
+    stages += _staged_explode(per_col + scaffold, [])
 
-    spark = df.sparkSession
     group_node_id = "_:skgroup"
-    table_consts = spark.range(1).select(
-        F.explode(F.array(
-            triple(table_node, F.lit(RDF_TYPE), F.lit(CSVW + "Table"), F.lit("iri"), F.lit(""), F.lit("")),
-            triple(table_node, F.lit(CSVW + "url"), F.lit(url), F.lit("iri"), F.lit(""), F.lit("")),
-            triple(F.lit(group_node_id), F.lit(RDF_TYPE), F.lit(CSVW + "TableGroup"), F.lit("iri"), F.lit(""), F.lit("")),
-            triple(F.lit(group_node_id), F.lit(CSVW + "table"), table_node, F.lit("bnode"), F.lit(""), F.lit("")),
-        )).alias("t")).select("t.*")
-    out = row_triples.unionByName(table_consts)
+    table_triples = F.explode(F.array(
+        triple(table_node, F.lit(RDF_TYPE), F.lit(CSVW + "Table"), F.lit("iri"), F.lit(""), F.lit("")),
+        triple(table_node, F.lit(CSVW + "url"), F.lit(url), F.lit("iri"), F.lit(""), F.lit("")),
+        triple(F.lit(group_node_id), F.lit(RDF_TYPE), F.lit(CSVW + "TableGroup"), F.lit("iri"), F.lit(""), F.lit("")),
+        triple(F.lit(group_node_id), F.lit(CSVW + "table"), table_node, F.lit("bnode"), F.lit(""), F.lit("")),
+    )).alias("t")
+    table_stages = (("select", (table_triples,)), ("select", (F.col("t.*"),)))
 
     # T8: external (non-CSVW) descriptor annotations on the table node
+    external = ()
     if table.external:
         from ..functions.terms import skolem_value
         from .external_props import external_triples
-        ext = external_triples(table.external, skolem_value(url, "table"),
-                               base=url, default_lang=default_lang)
-        if ext:
-            out = out.unionByName(local_frame(spark, ext, TRIPLE_DDL))
-    return out
+        external = tuple(external_triples(
+            table.external, skolem_value(url, "table"), base=url,
+            default_lang=key.default_lang))
+    return _Program(tuple(stages), table_stages, external)
 
 
 def apply_template_iris(triples: DataFrame) -> DataFrame:
@@ -539,15 +645,21 @@ def apply_template_iris(triples: DataFrame) -> DataFrame:
     in the engine API (encoded IRIs are join-stable and round-trip through
     NT serialization). JVM expressions only: two projections, the IDN half
     staged before the decode that reads it several times."""
+    for projection in _template_iri_passes():
+        triples = triples.withColumns(dict(projection))
+    return triples
+
+
+@functools.cache
+def _template_iri_passes() -> tuple[tuple[tuple[str, Column], ...], ...]:
+    """``apply_template_iris``'s two projections, built once per process:
+    they depend on no spec."""
     from ..functions.uritemplate import decode_uri, idn_hosts
     is_iri = {"subj": ~F.col("subj").startswith("_:"), "pred": F.lit(True),
               "obj_lex": F.col("obj_kind") == "iri"}
-
-    def on_iris(df: DataFrame, fn) -> DataFrame:
-        return df.withColumns({c: F.when(cond, fn(F.col(c))).otherwise(F.col(c))
-                               for c, cond in is_iri.items()})
-
-    return on_iris(on_iris(triples, idn_hosts), decode_uri)
+    return tuple(tuple((c, F.when(cond, fn(F.col(c))).otherwise(F.col(c)))
+                       for c, cond in is_iri.items())
+                 for fn in (idn_hosts, decode_uri))
 
 
 def group_to_triples(dfs: dict[str, DataFrame], group, *, minimal: bool = True,
@@ -582,7 +694,9 @@ def issues(df: DataFrame, table: TableSpec,
            allow_arrival_order: bool = False) -> DataFrame:
     """Side-output issues DF: required-cell violations with (table,row,column)
     location (reference: utils/issue-tracker.ts:34-126)."""
-    df = _row_numbers(df, table, allow_arrival_order=allow_arrival_order)
+    rn, src_row = _row_number_columns(table,
+                                      allow_arrival_order=allow_arrival_order)
+    df = df.withColumn(_ROW, rn).withColumn(_SRC_ROW, src_row)
     checks = []
     for col in table.columns:
         if col.virtual or not col.required:

@@ -23,7 +23,9 @@ prefixes are a single-file concern — large multi-file datasets pass
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..spec import DialectSpec, TableSpec
@@ -41,6 +43,20 @@ def _parse_options(d: DialectSpec) -> dict[str, str]:
     if d.trim in (True, "true", "end"):
         opts["ignoreTrailingWhiteSpace"] = "true"
     return opts
+
+
+@functools.lru_cache(maxsize=64)
+def _projection(names: tuple[str, ...], skip_columns: int,
+                options: tuple[tuple[str, str], ...]
+                ) -> tuple[Column, tuple[Column, ...]]:
+    """The ``from_csv`` record and the named cells taken from it, built once
+    per process for each table shape: a recurring table (a web service's
+    repeated descriptor) pays no py4j call to rebuild them."""
+    schema = ", ".join(f"`_c{i}` string"
+                       for i in range(len(names) + skip_columns))
+    record = F.from_csv(F.col("value"), schema, dict(options)).alias("r")
+    return record, tuple(F.col(f"r._c{i + skip_columns}").alias(name)
+                         for i, name in enumerate(names))
 
 
 def read_csv(spark: SparkSession, path: str, table: TableSpec) -> DataFrame:
@@ -80,14 +96,10 @@ def read_csv(spark: SparkSession, path: str, table: TableSpec) -> DataFrame:
     # physical identity) — the spec's RDF-facing `name` may be percent-
     # encoded (header-driven naming) and the mapping stage resolves cells
     # via col.source first
-    names = [c.source or c.name for c in table.columns if not c.virtual]
-    n_cols = len(names) + d.skipColumns
-    schema = ", ".join(f"`_c{i}` string" for i in range(n_cols))
-    parsed = df.select(F.from_csv(F.col("value"), schema,
-                                  _parse_options(d)).alias("r"))
-    cols = [F.col(f"r._c{i + d.skipColumns}").alias(name)
-            for i, name in enumerate(names)]
-    out = parsed.select(*cols)
+    names = tuple(c.source or c.name for c in table.columns if not c.virtual)
+    record, cols = _projection(names, d.skipColumns,
+                               tuple(_parse_options(d).items()))
+    out = df.select(record).select(*cols)
 
     if d.skipBlankRows:
         non_blank = None

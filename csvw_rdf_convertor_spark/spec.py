@@ -108,11 +108,18 @@ def expand_iri(value: str, base: str = "") -> str:
     m = re.match(r"^([A-Za-z][\w.-]*):(?!//)(.*)$", value)
     if m and m.group(1) in PREFIXES:
         return PREFIXES[m.group(1)] + m.group(2)
-    if re.match(r"^[A-Za-z][\w+.-]*://", value) or value.startswith("urn:"):
-        return value
-    if base:
+    if base and iri_reads_base(value):
         return urllib.parse.urljoin(base, value)
     return value
+
+
+def iri_reads_base(value: str) -> bool:
+    """Whether ``expand_iri(value, base)`` reads ``base``: not for a known
+    prefixed name or an absolute (``scheme://``, ``urn:``) IRI."""
+    m = re.match(r"^([A-Za-z][\w.-]*):(?!//)(.*)$", value)
+    return not ((m and m.group(1) in PREFIXES)
+                or re.match(r"^[A-Za-z][\w+.-]*://", value)
+                or value.startswith("urn:"))
 
 
 def datatype_iri(base: str) -> str:

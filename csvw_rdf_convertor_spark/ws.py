@@ -86,17 +86,21 @@ def _content_length(value: str | None) -> int:
     return length
 
 
+def _json(data: bytes, what: str):
+    try:
+        return json.loads(data.decode("utf-8"))
+    except ValueError as exc:
+        raise RequestError(400, f"invalid JSON {what}: {exc}") from exc
+
+
 def _parse_body(content_type: str, body: bytes) -> tuple[dict, dict]:
     """→ (options, files{name: text})."""
     if content_type.startswith("application/json"):
-        try:
-            doc = json.loads(body.decode("utf-8"))
-        except ValueError as exc:
-            raise RequestError(400, f"invalid JSON body: {exc}") from exc
+        doc = _json(body, "body")
         opts = doc.get("options") if isinstance(doc, dict) else None
         if not isinstance(opts, dict):
             raise RequestError(400, "body must carry an 'options' object")
-        return opts, dict(doc.get("files") or {})
+        return _checked(opts, doc.get("files") or {})
     if content_type.startswith("multipart/form-data"):
         msg = BytesParser(policy=_HTTP_POLICY).parsebytes(
             b"Content-Type: " + content_type.encode("latin-1")
@@ -106,14 +110,35 @@ def _parse_body(content_type: str, body: bytes) -> tuple[dict, dict]:
             name = part.get_param("name", header="content-disposition")
             payload = part.get_payload(decode=True) or b""
             if name == "options":
-                opts = json.loads(payload.decode("utf-8"))
+                opts = _json(payload, "options part")
             elif name:
                 files[part.get_filename() or name] = \
                     payload.decode("utf-8")
         if not isinstance(opts, dict):
             raise RequestError(400, "multipart body missing 'options' part")
-        return opts, files
+        return _checked(opts, files)
     raise RequestError(415, f"unsupported content type {content_type!r}")
+
+
+def _checked(opts: dict, files) -> tuple[dict, dict]:
+    """(options, files) once every option the handlers read as a string is
+    one and every map an object of strings: a body of another shape answers
+    400 here, not a 500 from deep inside a handler."""
+    for name in ("descriptor", "baseIri", "format"):
+        if opts.get(name) is not None and not isinstance(opts[name], str):
+            raise RequestError(400, f"options.{name} must be a string")
+    turtle = opts.get("turtle") or {}
+    if not isinstance(turtle, dict):
+        raise RequestError(400, "options.turtle must be an object")
+    for value, what in ((files, "'files'"),
+                        (opts.get("pathOverrides") or {},
+                         "options.pathOverrides"),
+                        (turtle.get("prefixes") or {},
+                         "options.turtle.prefixes")):
+        if not (isinstance(value, dict)
+                and all(isinstance(v, str) for v in value.values())):
+            raise RequestError(400, f"{what} must be an object of strings")
+    return opts, files
 
 
 def _check_local(files: dict, val: str, what: str) -> None:

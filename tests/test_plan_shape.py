@@ -311,6 +311,58 @@ def test_mapping_build_py4j_calls_grow_linearly_with_width(spark,
     assert c32 <= 2.2 * c16, (c16, c32)
 
 
+#: py4j commands one build of the 8-column mixed table sent when every
+#: conversion built its Columns afresh, counted as below
+PRE_CACHE_BUILD_COMMANDS = 9_446
+#: a warm request of that table sent 4,111 commands (7,131 with PySpark's
+#: call-site capture on, as in this test session) when every conversion
+#: built its Columns afresh, and about 330 when it replays them
+WARM_REQUEST_COMMANDS = 500
+
+
+def test_warm_request_py4j_budget(spark, py4j_commands):
+    """A web-service request for a spec the process has converted before
+    replays the conversion's compiled Columns instead of building them
+    again, and a cache miss costs no more than a build did without one."""
+    import http.client
+    import json
+    import threading
+
+    from csvw_rdf_convertor_spark import ws
+    body = json.dumps({
+        "options": {"input": "meta.json", "format": "ntriples",
+                    "minimal": True},
+        "files": {"meta.json": json.dumps(_mixed_descriptor(MIXED_COLS)),
+                  "items.csv": MIXED_CSV}}).encode("utf-8")
+    srv = ws.make_server()
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+
+    def post():
+        conn = http.client.HTTPConnection(*srv.server_address, timeout=300)
+        conn.request("POST", "/csvw2rdf", body,
+                     {"Content-Type": "application/json"})
+        resp = conn.getresponse()
+        payload = resp.read()
+        conn.close()
+        assert resp.status == 200, payload
+
+    try:
+        post()  # cold: compiles the conversion
+        warm = py4j_commands(post)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert warm <= WARM_REQUEST_COMMANDS, warm
+
+    table = _mixed_table(MIXED_COLS, "http://example.org/")
+    df = spark.createDataFrame(
+        [], ", ".join(f"{n} string" for n, _dt in MIXED_COLS))
+    csvw2rdf._compile.cache_clear()
+    miss = py4j_commands(csvw2rdf.table_to_triples, df, table,
+                         minimal=True, allow_arrival_order=True)
+    assert miss <= PRE_CACHE_BUILD_COMMANDS, miss
+
+
 
 
 

@@ -204,6 +204,36 @@ def test_bad_body_400(server):
     assert status == 400
 
 
+#: JSON bodies whose maps are not objects of strings, or whose string
+#: options are not strings; each once answered 500 or 422 from inside a
+#: handler
+MALFORMED_BODIES = {
+    **{f"{name}-not-string": {
+        "options": {"input": "meta.json", name: value},
+        "files": {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV}}
+       for name, value in (("descriptor", 5), ("baseIri", 5),
+                           ("format", ["ntriples"]))},
+    "file-text-not-string": {"options": {"input": "meta.json"},
+                             "files": {"meta.json": 5}},
+    "files-not-object": {"options": {"input": "meta.json"},
+                         "files": ["meta.json"]},
+    "pathOverrides-not-object": {
+        "options": {"input": "meta.json", "pathOverrides": ["a"]},
+        "files": {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV}},
+    "turtle-prefixes-not-strings": {
+        "options": {"input": "meta.json", "turtle": {"prefixes": {"ex": 1}}},
+        "files": {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV}},
+}
+
+
+@pytest.mark.parametrize("shape", list(MALFORMED_BODIES))
+def test_malformed_body_shape_400(server, shape):
+    status, _m, data = _post(server, "/csvw2rdf",
+                             json.dumps(MALFORMED_BODIES[shape]).encode(),
+                             "application/json")
+    assert status == 400, data
+
+
 def test_rdf2csvw_server_local_descriptor(server, tmp_path):
     """options.descriptor naming a server-local file must drive the
     conversion (it was silently ignored unless uploaded — inference ran
