@@ -78,10 +78,17 @@ COMMON_PREFIXES: dict[str, str] = {
 _URL_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
+#: the session ``_session`` last tuned; the web service's requests share it
+_tuned = None
+
+
 def _session():
-    """Active session, or a tuned local one (same runtime confs as
-    ``__spark_entry__._tune``: codegen method splitting so the wide cell
-    pipeline stays compiled, pinned UTC for timestamp lexical forms)."""
+    """Active session, or a local one, tuned the first time it is seen (same
+    runtime confs as ``__spark_entry__._tune``: codegen method splitting so
+    the wide cell pipeline stays compiled, pinned UTC for timestamp lexical
+    forms). Tuning is 15 py4j commands and resets the process-wide log
+    level, so a web-service request does not repeat it."""
+    global _tuned
     from pyspark.sql import SparkSession
     spark = SparkSession.getActiveSession() or (
         SparkSession.builder.master(
@@ -90,9 +97,11 @@ def _session():
         .config("spark.sql.shuffle.partitions",
                 os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
         .getOrCreate())
-    spark.conf.set("spark.sql.codegen.methodSplitThreshold", "256")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.sparkContext.setLogLevel("ERROR")
+    if spark is not _tuned:
+        spark.conf.set("spark.sql.codegen.methodSplitThreshold", "256")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.sparkContext.setLogLevel("ERROR")
+        _tuned = spark
     return spark
 
 

@@ -217,8 +217,9 @@ def run(transcripts: DataFrame, out_dir: str, *,
     # the write), and every Python worker task has a fixed cost whatever it
     # does (sources/local.py), so detection starts one task per input split
     # and no more. At scale its parallelism follows the input splits.
-    # persist: link()'s isEmpty probe and the triple write both read
-    # detection, the run's only Python task — without it that task runs twice
+    # persist: link_exact joins the mentions with an aggregate of
+    # themselves, so without it detection, the run's only Python work, runs
+    # twice per input split (4 calls on 2 splits; 6 with link()'s probe)
     ments = mentions_mod.detect_mentions(pending, dictionary).persist()
     aliases = linking.alias_table(spark, dictionary)
     linked = linking.link(ments, aliases).withColumn("bucket", bucket)

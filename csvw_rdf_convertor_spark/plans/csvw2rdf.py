@@ -10,10 +10,14 @@ emitTriple). Here the whole table compiles into ONE declarative plan:
          → union standard-mode scaffolding (T7) → triples DF
 
 All branching on the mapping spec happens at plan-build time; the executed
-plan is a straight projection inside whole-stage codegen. The only shuffle a
-table conversion can introduce is the optional global ``row_number`` (used
-for small fixture parity); at scale, numbering is partitioned by a grouping
-key (e.g. ``conv_id``) or taken from an existing ordinal column.
+plan is a straight projection inside whole-stage codegen. It is staged only
+where a measured codegen limit needs it (``_compile``): the cell pipeline's
+projections, the typed-segment ``observe()`` breaks and stage 3.5's lexical
+and invalid columns; the triple arrays are built inside the one explode.
+The only shuffle a table conversion can introduce is the optional global
+``row_number`` (used for small fixture parity); at scale, numbering is
+partitioned by a grouping key (e.g. ``conv_id``) or taken from an existing
+ordinal column.
 
 Building that plan is a Python↔JVM round trip per Column, thousands per
 table, while the plan itself only names the columns it reads. So a
@@ -134,35 +138,14 @@ def _predicate(col: ColumnSpec, table: TableSpec, record: dict[str, Column]) -> 
     return F.lit(f"{url}#{col.name}")
 
 
-def _object_parts(col: ColumnSpec, item: Column, table: TableSpec,
-                  record: dict[str, Column]):
-    """T4: valueUrl ⇒ IRI object (even for typed columns); else literal with
+def _object_parts(col: ColumnSpec, lex: Column, inv: Column,
+                  table: TableSpec, record: dict[str, Column]):
+    """T4 over a value's stripped lexical form and its invalid flag:
+    valueUrl ⇒ IRI object (even for typed columns); else literal with
     datatype/lang; invalid values demoted to plain string (P10,
-    convertor.ts:772-805, 923-939)."""
-    url = _resolve_url(table)
-    if col.valueUrl:
-        rec = dict(record)
-        rec[col.name] = cells.strip_invalid(item)
-        if "{" in col.valueUrl:
-            return iri_object(compile_template(col.valueUrl, rec, base=url))
-        return iri_object(F.lit(expand_iri(col.valueUrl, url)))
-    dtype_iri = col.datatype.iri
-    lex = cells.strip_invalid(item)
-    dtype = F.when(cells.is_invalid(item), F.lit(XSD + "string")).otherwise(F.lit(dtype_iri))
-    lang = F.lit(col.lang or "") if dtype_iri == XSD + "string" else F.lit("")
-    lang = F.when(cells.is_invalid(item), F.lit("")).otherwise(lang)
-    return literal_object(lex, dtype, lang)
-
-
-def _object_parts_scalar(col: ColumnSpec, lex: Column, inv: Column,
-                         table: TableSpec, record: dict[str, Column]):
-    """T4 over PRE-STAGED (stripped-lexical, invalid-flag) attributes — the
-    scalar-cell fast path. Semantically identical to :func:`_object_parts`
-    with ``item = element_at(values, 1)``; referencing two cheap attributes
-    instead of five copies of the element_at/strip CASE tree keeps the
-    explode expression's generated code under janino's 64 KB per-method
-    limit (see ``table_to_triples`` docstring — past that limit the WHOLE
-    fused mapping stage silently falls back to interpreted execution)."""
+    convertor.ts:772-805, 923-939). A scalar cell passes its stage-3.5
+    attributes, a list item ``cells.strip_invalid``/``cells.is_invalid`` of
+    itself."""
     url = _resolve_url(table)
     if col.valueUrl:
         rec = dict(record)
@@ -179,22 +162,28 @@ def _object_parts_scalar(col: ColumnSpec, lex: Column, inv: Column,
 
 def _column_triples(col: ColumnSpec, values: Column, table: TableSpec,
                     record: dict[str, Column],
-                    subjects: dict[str | None, Column] | None = None,
-                    scalar: tuple[Column, Column] | None = None) -> Column:
+                    subjects: dict[str | None, Column],
+                    scalar: tuple[Column, Column] | None) -> Column:
     """array<triple-struct> for one column of one row (≤1 per value; a chain
-    of 2·n+1 for ordered lists, T6 convertor.ts:836-854)."""
+    of 2·n+1 for ordered lists, T6 convertor.ts:836-854). ``scalar``: a
+    scalar column's staged (lexical, invalid) attributes."""
     url = _resolve_url(table)
-    if subjects is not None and col.aboutUrl in subjects:
+    if col.aboutUrl in subjects:
         subj = subjects[col.aboutUrl]
     else:
         subj = (compile_template(col.aboutUrl, record, base=url)
                 if col.aboutUrl else _default_subject(url))
     pred = _predicate(col, table, record)
 
-    def value_triple(item: Column) -> Column:
-        return triple(subj, pred, *_object_parts(col, item, table, record))
+    def item_parts(item: Column):
+        return _object_parts(col, cells.strip_invalid(item),
+                             cells.is_invalid(item), table, record)
 
-    if col.separator is not None and col.ordered:
+    if col.separator is None:
+        # scalar cell (the overwhelmingly common case): exactly one element
+        out = F.array(triple(subj, pred,
+                             *_object_parts(col, *scalar, table, record)))
+    elif col.ordered:
         # RDF collection: head link + first/rest chain of skolemized nodes
         node = lambda i: skolem(url, "list", col.name, F.col(_ROW), i)  # noqa: E731
         n = F.size(values)
@@ -203,23 +192,15 @@ def _column_triples(col: ColumnSpec, values: Column, table: TableSpec,
                       F.when(n == 0, F.lit("iri")).otherwise(F.lit("bnode")),
                       F.lit(""), F.lit(""))
         firsts = F.transform(values, lambda x, i: triple(
-            node(i), F.lit(RDF_FIRST), *_object_parts(col, x, table, record)))
+            node(i), F.lit(RDF_FIRST), *item_parts(x)))
         rests = F.transform(values, lambda x, i: triple(
             node(i), F.lit(RDF_REST),
             F.when(i == n - 1, F.lit(RDF_NIL)).otherwise(node(i + 1)),
             F.when(i == n - 1, F.lit("iri")).otherwise(F.lit("bnode")),
             F.lit(""), F.lit("")))
         out = F.concat(F.array(head), firsts, rests)
-    elif col.separator is None and scalar is not None:
-        # scalar cell (the overwhelmingly common case): exactly one element,
-        # whose stripped lexical + invalid flag arrive as staged attributes
-        lex, inv = scalar
-        out = F.array(triple(subj, pred,
-                             *_object_parts_scalar(col, lex, inv, table, record)))
-    elif col.separator is None:
-        out = F.array(value_triple(F.element_at(values, 1)))
     else:
-        out = F.transform(values, value_triple)
+        out = F.transform(values, lambda x: triple(subj, pred, *item_parts(x)))
 
     # null cell (NULL array) → no triples
     return F.when(values.isNull(), F.array().cast(_EMPTY_TRIPLES)).otherwise(out)
@@ -269,35 +250,23 @@ def _codegen_stage_break(df: DataFrame) -> DataFrame:
 
 def _staged_explode(arrays: list[Column],
                     passthrough: list[Column]) -> list[tuple]:
-    """Stages exploding the concatenation of per-column triple arrays, with
-    each array's CONSTRUCTION staged behind its own single-row Generate
-    barrier.
+    """Stages exploding the concatenation of per-row triple arrays into one
+    triple row each (T5): one Generate over ``flatten(array(*arrays))``,
+    then the struct's fields as columns.
 
-    Building every column's array-of-structs inside the one explode
-    expression compiles into ONE generated Java method
-    (``methodSplitThreshold`` cannot split within a single expression), and
-    past ~3-4 columns that method exceeds the JVM JIT's 8000-byte
-    DontCompileHugeMethods limit — the stage still *compiles* (janino is
-    fine) but runs in the bytecode INTERPRETER (r6: measured 2.2× on the
-    4-column mapping with the JIT flag flipped, which a frozen bench conf
-    cannot do). One barrier per array keeps each construction in its own
-    method; everything stays inside a single WholeStageCodegen (Generate
-    supports codegen), so no extra row materialization is paid.
-
-    Each barrier passes the existing columns through as ``"*"``: every name
-    in a select list is a py4j round trip, and naming the table's columns
-    at every barrier would make each conversion O(arrays × columns) calls,
-    quadratic in table width (tests/test_plan_shape.py pins the growth)."""
-    star = F.col("*")
-    stages, names = [], []
-    for i, arr in enumerate(arrays):
-        nm = f"__tr_{i}"
-        stages.append(("select", (star, F.explode(F.array(arr)).alias(nm))))
-        names.append(nm)
-    flat = (F.flatten(F.array(*[F.col(n) for n in names]))
-            if len(names) > 1 else F.col(names[0]))
-    return stages + [("select", (*passthrough, F.explode(flat).alias("t"))),
-                     ("select", (*passthrough, F.col("t.*")))]
+    The arrays are built inside the Generate's own expression, off attributes
+    the earlier stages materialized. Measured with
+    ``tests/test_plan_shape._max_method_bytes``: the 8-column mixed table's
+    explode stage is 2,457 B against the JIT's 8,000 B limit, and at 32
+    columns 9,418 B minimal and 12,124 B standard, never the plan's largest
+    stage. A Generate barrier per array (a single-row ``explode(array(arr))``
+    each) made them 1,762, 11,875 and 13,171 B, cost one more eagerly
+    analysed select per array, and on wide tables ran Generates outside
+    whole-stage codegen (5 of 17 at 16 columns, all 33 at 32), so there is
+    none."""
+    flat = F.flatten(F.array(*arrays)) if len(arrays) > 1 else arrays[0]
+    return [("select", (*passthrough, F.explode(flat).alias("t"))),
+            ("select", (*passthrough, F.col("t.*")))]
 
 
 def _reads_url(table: TableSpec, minimal: bool) -> bool:
@@ -396,6 +365,12 @@ def _compile(key: _Key) -> _Program:
     measured ~20× slower on a 7-column table). CollapseProject keeps these
     projections separate because the producer expressions are non-cheap and
     multiply referenced.
+
+    The stages: row numbering if needed, 1a cell norms, the parse
+    intermediates and cell parses in segments behind stage breaks, 2 the
+    row record, 3 the subjects, 3.5 the scalar columns' lexical and invalid
+    flags, then the explode (``_staged_explode``). The 8-column mixed table
+    of a web-service request compiles into 12.
     """
     table, minimal = key.table, key.minimal
     url = _resolve_url(table)
@@ -462,7 +437,9 @@ def _compile(key: _Key) -> _Program:
     # method for the 7-column lineitem was 13.3 KB and ran in the bytecode
     # interpreter, ~2× slower, with nothing in the plan string to show it).
     # Untyped (string/boolean) cells are cheap and ride with any segment;
-    # tables with NO typed columns get no break at all.
+    # tables with NO typed columns get no break at all. On the 8-column
+    # mixed table the largest segment is 7,632 B; without the breaks the
+    # mapping fuses into one 13,603 B method (tests/test_plan_shape.py).
     if parts_groups:
         seg: list[Column] = []
         for gi, group in enumerate(parts_groups):
@@ -521,10 +498,10 @@ def _compile(key: _Key) -> _Program:
     # stage 3.5: per scalar (non-separator) column, the stripped lexical and
     # invalid flag as real columns. The triple structs in the explode then
     # reference two cheap attributes instead of five copies of the
-    # element_at/strip CASE tree — without this the Generate's fused
-    # expression exceeds janino's 64 KB per-method limit and Spark silently
-    # runs the ENTIRE mapping stage interpreted (measured 5-10× slower; the
-    # "Whole-stage codegen disabled for plan" WARN is the only symptom).
+    # element_at/strip CASE tree: without them the 8-column mixed table's
+    # explode stage is 9,080 B, past the JIT's 8,000 B limit, instead of
+    # 2,457 B (tests/test_plan_shape.py), and at 32 columns 36,284 B
+    # instead of 9,418 B.
     stage35 = []
     scalar_col: dict[str, tuple[str, str]] = {}
     for i, col in enumerate(table.columns):
@@ -555,12 +532,8 @@ def _compile(key: _Key) -> _Program:
         # through the explode so callers keep their partitioning without
         # re-deriving keys from 10× more triple rows
         passthrough = [F.col(c) for c in key.passthrough]
-        if not per_col:
-            empty = F.explode(F.array().cast(_EMPTY_TRIPLES)).alias("t")
-            stages += [("select", (*passthrough, empty)),
-                       ("select", (*passthrough, F.col("t.*")))]
-        else:
-            stages += _staged_explode(per_col, passthrough)
+        stages += _staged_explode(
+            per_col or [F.array().cast(_EMPTY_TRIPLES)], passthrough)
         return _Program(tuple(stages))
 
     # standard mode (T7): row scaffolding emitted from the same single pass
@@ -617,13 +590,12 @@ def _compile(key: _Key) -> _Program:
     stages += _staged_explode(per_col + scaffold, [])
 
     group_node_id = "_:skgroup"
-    table_triples = F.explode(F.array(
+    table_stages = tuple(_staged_explode([F.array(
         triple(table_node, F.lit(RDF_TYPE), F.lit(CSVW + "Table"), F.lit("iri"), F.lit(""), F.lit("")),
         triple(table_node, F.lit(CSVW + "url"), F.lit(url), F.lit("iri"), F.lit(""), F.lit("")),
         triple(F.lit(group_node_id), F.lit(RDF_TYPE), F.lit(CSVW + "TableGroup"), F.lit("iri"), F.lit(""), F.lit("")),
         triple(F.lit(group_node_id), F.lit(CSVW + "table"), table_node, F.lit("bnode"), F.lit(""), F.lit("")),
-    )).alias("t")
-    table_stages = (("select", (table_triples,)), ("select", (F.col("t.*"),)))
+    )], []))
 
     # T8: external (non-CSVW) descriptor annotations on the table node
     external = ()

@@ -287,6 +287,30 @@ def test_warm_run_job_count(spark, transcripts, tmp_path):
     assert jobs == 9
 
 
+def test_warm_run_detects_once_per_input_split(spark, transcripts, tmp_path,
+                                               monkeypatch):
+    """Detection, the run's only Python work, runs once per input split:
+    ``link_exact`` joins the mentions with an aggregate of themselves, so
+    without ``ments.persist()`` a split's detection runs again for each
+    reader (6 calls on 2 splits)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = spark.sparkContext.accumulator(0)
+    map_in_pandas = DataFrame.mapInPandas
+
+    def counting(self, func, *args, **kwargs):
+        def counted(batches):
+            calls.add(1)
+            yield from func(batches)
+        return map_in_pandas(self, counted, *args, **kwargs)
+
+    splits = transcripts.repartition(2)
+    pipeline.run(splits, str(tmp_path / "cold"), n_buckets=4)
+    monkeypatch.setattr(DataFrame, "mapInPandas", counting)
+    pipeline.run(splits, str(tmp_path / "warm"), n_buckets=4)
+    assert calls.value == 2
+
+
 def test_resume_reads_manifests_of_both_formats(spark, tmp_path):
     """A manifest directory holding a file of the older format (bucket,
     n_turns, n_mentions, n_links, n_triples, finished_at) next to files of

@@ -90,6 +90,31 @@ def test_csvw2rdf_ntriples(spark, server):
     assert _parse(spark, data.decode(), "nt") == EXPECTED
 
 
+def test_warm_request_leaves_the_session_as_tuned(spark, server,
+                                                  monkeypatch):
+    """The CLI tunes a session the first time it sees it: a warm request
+    sets no conf and leaves the process-wide log level alone."""
+    from pyspark import SparkContext
+    from pyspark.sql.conf import RuntimeConfig
+
+    def request():
+        status, _mime, _data = _post_json(
+            server, "/csvw2rdf",
+            {"input": "meta.json", "format": "ntriples", "minimal": True},
+            {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV})
+        assert status == 200
+
+    request()
+    calls = []
+    for cls, name in ((RuntimeConfig, "set"), (SparkContext, "setLogLevel")):
+        def recording(self, *args, _orig=getattr(cls, name), _name=name):
+            calls.append((_name, args))
+            return _orig(self, *args)
+        monkeypatch.setattr(cls, name, recording)
+    request()
+    assert calls == []
+
+
 def test_csvw2rdf_malformed_escape_passes_through(spark, server):
     """A ``{+link}`` IRI whose escapes are not UTF-8 survives the default
     templateIris pass: 200, and the IRI comes back unchanged."""
