@@ -213,20 +213,16 @@ def parse_number(value: Column, dt: DatatypeSpec) -> Column:
         # the no-pattern path keeps '' = no grouping
         return ldml_number_udf(pattern, dt.base, dec_char or ".",
                                grp_char or ",")(value)
-    p = numeric_parts(value, dt)
-    return parse_number_from_parts(value, p["core"], p["pct"], p["pml"],
-                                   p["grp_ok"], dt,
-                                   raw=p.get("raw"), num=p.get("num"))
+    return parse_number_from_parts(value, numeric_parts(value, dt), dt)
 
 
-def parse_number_from_parts(value: Column, core: Column, pct: Column,
-                            pml: Column, grp_ok: Column,
-                            dt: DatatypeSpec, *, raw: Column | None = None,
-                            num: Column | None = None) -> Column:
-    """The numeric parse proper, over (ideally attribute) intermediates —
-    see :func:`numeric_parts`. ``raw``/``num`` are the pre-staged parsed
-    numbers numeric_parts emits for the decimal/integer families."""
+def parse_number_from_parts(value: Column, parts: dict[str, Column],
+                            dt: DatatypeSpec) -> Column:
+    """The numeric parse proper, over the (ideally attribute) intermediates
+    :func:`numeric_parts` returns for ``dt``, the parsed ``num`` (and the
+    integer family's unscaled ``raw``) included."""
     base = dt.base
+    core, pct, pml = parts["core"], parts["pct"], parts["pml"]
     if base in ("double", "float", "number"):
         ok = core.rlike(f"^{DOUBLE_RE}$")
         num = (
@@ -240,17 +236,11 @@ def parse_number_from_parts(value: Column, core: Column, pct: Column,
         lex = _canonical_double(num, core, pct | pml)
     elif base == "decimal":
         ok = core.rlike(f"^{DECIMAL_RE}$")
-        if num is None:
-            numc = core.try_cast("decimal(38,10)")
-            num = F.when(pct, numc / 100).when(pml, numc / 1000).otherwise(numc)
+        num = parts["num"]
         lex = _canonical_decimal_str(num, core)
     else:  # integer family
         ok = core.rlike(f"^{INTEGER_RE}$")
-        if raw is None:
-            raw = core.try_cast("decimal(38,0)")  # >38-digit lexicals → null
-        if num is None:
-            numc = raw.try_cast("decimal(38,10)")
-            num = F.when(pct, numc / 100).when(pml, numc / 1000).otherwise(numc)
+        raw, num = parts["raw"], parts["num"]
         lo, hi = INT_RANGES.get(base, (None, None))
         if lo is not None:  # bounds as strings: 2^64-1 overflows a JVM long literal
             ok = ok & (raw >= F.lit(str(lo)).cast("decimal(38,0)"))
@@ -264,7 +254,7 @@ def parse_number_from_parts(value: Column, core: Column, pct: Column,
                .when(pct | pml, _canonical_decimal_str(num, core))
                .otherwise(raw.cast("string")))
 
-    ok = ok & grp_ok
+    ok = ok & parts["grp_ok"]
     ok = _apply_min_max(ok, num, dt)
     cond = ok & num.isNotNull()
     if base in ("double", "float", "number"):
@@ -588,10 +578,7 @@ def parse_scalar_from_parts(v: Column, col: ColumnSpec,
     :func:`scalar_parse_parts`)."""
     dt = col.datatype
     if dt.base in NUMERIC_TYPES:
-        return parse_number_from_parts(v, parts["core"], parts["pct"],
-                                       parts["pml"], parts["grp_ok"], dt,
-                                       raw=parts.get("raw"),
-                                       num=parts.get("num"))
+        return parse_number_from_parts(v, parts, dt)
     return parse_datetime_from_parts(v, parts["ts"], parts["tz"], dt)
 
 

@@ -27,9 +27,6 @@ with every half masked/sliced to 52 bits so ``h1 + 64*h2 < 65·2^52 < 2^59``
 (`tests/test_hash_family.py`) asserts the two families produce identical
 pair/duplicate sets on synthetic corpora, so the gate queries (pinned to
 md5) keep certifying the algorithm the production family runs.
-
-The ``sql_*`` twins build the DuckDB-side expression strings so the Spark
-md5 expression and its oracle live next to each other and cannot drift.
 """
 
 from __future__ import annotations
@@ -74,11 +71,6 @@ def pair52_from_hex(hex_col: Column) -> Column:
         hex_to_long(F.substring(hex_col, HEX52 + 1, HEX52)).alias("h2"))
 
 
-def perm_value(pair: Column, j: int) -> Column:
-    """j-th MinHash permutation value from a (h1, h2) pair, j ≥ 1."""
-    return pair["h1"] + F.lit(j) * pair["h2"]
-
-
 # --- xxhash64 family (production) ------------------------------------------
 
 def xx_pair52(col: Column) -> Column:
@@ -102,17 +94,3 @@ def key_hash(col: Column, family: str = "xxhash64") -> Column:
     if family == "md5":
         return phash60(col)
     return fasthash64(col)
-
-
-# --- DuckDB twins (oracle SQL fragments) -----------------------------------
-
-def sql_phash60(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, {HEX60}))::BIGINT"
-
-
-def sql_h1(hex_expr: str) -> str:
-    return f"('0x' || substr({hex_expr}, 1, {HEX52}))::BIGINT"
-
-
-def sql_h2(hex_expr: str) -> str:
-    return f"('0x' || substr({hex_expr}, {HEX52 + 1}, {HEX52}))::BIGINT"

@@ -19,7 +19,7 @@ RDF isomorphism, reproducible across retries/resume (SURVEY.md §7.3.1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..spec import XSD
@@ -72,8 +72,3 @@ def literal_object(lex: Column, dtype: str | Column = "", lang: str | Column = "
     d = F.when(lg != "", F.lit("")).otherwise(d)
     d = F.when(d == XSD + "string", F.lit("")).otherwise(d)
     return lex, F.lit("literal"), d, lg
-
-
-def canonical_triples(df: DataFrame) -> DataFrame:
-    """Project to the canonical column order (drop lineage extras)."""
-    return df.select(*[F.col(c) for c in TRIPLE_COLS])

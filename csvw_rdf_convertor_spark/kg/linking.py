@@ -20,10 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ops.minhash import (char_shingles, jaccard, lsh_bands,
-                           shingle_pairs, signature_from_pairs)
 from ..sources.local import local_frame
 from .mentions import alias_owners
+from .minhash import (char_shingles, jaccard, lsh_bands, shingle_pairs,
+                      signature_from_pairs)
 
 N_PERM = 32
 # 16 bands × 2 rows: P(block | jaccard=0.4) ≈ 0.94 — typo-level similarity

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.ntriples import to_ntriples_lines
-from ..functions.terms import TRIPLE_COLS, skolem
+from ..functions.terms import TRIPLE_COLS, skolem, triple
 from ..plans.csvw2rdf import table_to_triples
 from ..sources.local import local_frame
 from ..spec import RDF, XSD, parse_descriptor
@@ -106,20 +106,15 @@ def _mention_triple_array(mention_col, entity_col, score4_col, turn_iri, m_node)
     """``score4_col`` is the ALREADY-rendered 4-decimal score string — the
     caller stages it (with the skolem and turn IRI) as a real column so the
     5-way fan-out references attributes (r6 staging, see mention_triples)."""
-    def t(subj, pred, obj, kind, dtype=""):
-        if isinstance(obj, str):
-            obj = F.lit(obj)
-        return F.struct(subj.alias("subj"), F.lit(pred).alias("pred"),
-                        obj.alias("obj_lex"), F.lit(kind).alias("obj_kind"),
-                        F.lit(dtype).alias("obj_dtype"), F.lit("").alias("obj_lang"),
-                        F.lit("").alias("graph"))
-
     return F.array(
-        t(turn_iri, KG + "mentions", m_node, "bnode"),
-        t(m_node, RDF + "type", KG + "Mention", "iri"),
-        t(m_node, KG + "surfaceForm", mention_col, "literal"),
-        t(m_node, KG + "linkedTo", entity_col, "iri"),
-        t(m_node, KG + "linkScore", score4_col, "literal", XSD + "double"),
+        triple(turn_iri, F.lit(KG + "mentions"), m_node, F.lit("bnode")),
+        triple(m_node, F.lit(RDF + "type"), F.lit(KG + "Mention"),
+               F.lit("iri")),
+        triple(m_node, F.lit(KG + "surfaceForm"), mention_col,
+               F.lit("literal")),
+        triple(m_node, F.lit(KG + "linkedTo"), entity_col, F.lit("iri")),
+        triple(m_node, F.lit(KG + "linkScore"), score4_col, F.lit("literal"),
+               F.lit(XSD + "double")),
     )
 
 

@@ -175,7 +175,7 @@ def cdc_chunks(docs: DataFrame, *, k: int = 8, boundary_bits: int = 6,
     if k < 2 or boundary_bits < 1 or min_size < 1:
         raise ValueError(f"bad {k=} {boundary_bits=} {min_size=}")
     from ..functions import phash
-    from ..functions.staging import as_leaves
+    from .staging import as_leaves
     from .winnow import seq1
     mod = 1 << boundary_bits
 

@@ -12,7 +12,7 @@ HOFs are CodegenFallback.
 The robust fixes are positional:
 
 1. expensive array as the ARGUMENT of one ``aggregate``/``transform``
-   (arguments evaluate once per row) — ops/minhash.signature_from_pairs,
+   (arguments evaluate once per row) — kg/minhash.signature_from_pairs,
    ops/text.ngrams_fold; or
 2. **this module**: pass the computed column through
    ``explode(array(struct(...)))``. CollapseProject cannot merge through a

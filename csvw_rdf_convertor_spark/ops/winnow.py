@@ -99,7 +99,7 @@ def winnow_fingerprints(docs: DataFrame, *, k: int = K_DEFAULT,
     rows (no complete window exists).
 
     Implementation: normalized text and the k-gram hash array are each
-    staged behind a ``functions/staging.as_leaves`` Generate barrier, so
+    staged behind a ``ops/staging.as_leaves`` Generate barrier, so
     the window-min transform's ``slice`` lambda reads leaf attributes —
     without the barriers CollapseProject inlines the hash transform into
     the lambda and the plan goes O(n²·k) per document (measured 37×:
@@ -107,7 +107,7 @@ def winnow_fingerprints(docs: DataFrame, *, k: int = K_DEFAULT,
     ``_fold_fps`` and is equality-tested against this plan)."""
     if k < 2 or w < 1:
         raise ValueError(f"need k >= 2 and w >= 1, got {k=} {w=}")
-    from ..functions.staging import as_leaves
+    from .staging import as_leaves
     s1 = as_leaves(docs, [id_col], _nrm=_norm(F.col(text_col)))
     hs = F.transform(
         seq1(F.length("_nrm") - k + 1),

@@ -125,10 +125,6 @@ class _Context:
         return self.terms.get(term, {})
 
 
-def _is_node_object(v: Any) -> bool:
-    return isinstance(v, dict) and "@value" not in v
-
-
 def _containers(tdef: dict) -> set[str]:
     """A term's @container entry may be a string or a list (json-ld 1.1)."""
     c = tdef.get("@container")

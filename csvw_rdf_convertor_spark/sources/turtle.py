@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from ..spec import PREFIXES, XSD
 from .. functions.ntriples import escape_literal
-from .local import local_frame
 
 _NS_RE = r"^(.*[#/])([A-Za-z_][\w.-]*)$"
 
@@ -98,17 +97,6 @@ def to_turtle_lines(triples: DataFrame,
                 .otherwise(F.concat(g, F.lit(" { "), stmt, F.lit(" }")))
     lines = triples.select(stmt.alias("line"))
     return header, lines
-
-
-def write_turtle(triples: DataFrame, path: str,
-                 prefix_map: dict[str, str] | None = None) -> None:
-    """Header as part-00000-like prefix file + distributed statement lines.
-    (A single .ttl file would force coalesce(1); keep it distributed and let
-    consumers cat header + parts — same contract as any Spark text sink.)"""
-    header, lines = to_turtle_lines(triples, prefix_map)
-    local_frame(triples.sparkSession, [(h,) for h in header], "line string") \
-        .coalesce(1).write.mode("overwrite").text(f"{path}/_prefixes")
-    lines.write.mode("overwrite").text(f"{path}/statements")
 
 
 # --- pretty (buffered) Turtle writer -----------------------------------------

@@ -293,6 +293,37 @@ def test_python_row_code_stays_in_its_modules():
     assert found == PYTHON_ROW_MODULES
 
 
+def test_core_does_not_import_ops():
+    """The converter, the web service and the kg pipeline must not depend
+    on the training-data operators: no module outside ``ops/`` imports
+    ``ops`` or anything under it, at module level or inside a function."""
+    import ast
+    from pathlib import Path
+
+    import csvw_rdf_convertor_spark
+    root = Path(csvw_rdf_convertor_spark.__file__).parent
+    ops = f"{root.name}.ops"
+    found = set()
+    for p in sorted(root.rglob("*.py")):
+        rel = p.relative_to(root)
+        if rel.parts[0] == "ops":
+            continue
+        package = [root.name, *rel.parent.parts]
+        for node in ast.walk(ast.parse(p.read_text("utf-8"))):
+            if isinstance(node, ast.Import):
+                targets = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = ".".join(package[:len(package) - node.level + 1]
+                                if node.level else [])
+                module = ".".join(filter(None, (base, node.module)))
+                targets = [module, *(f"{module}.{a.name}" for a in node.names)]
+            else:
+                continue
+            if any(t == ops or t.startswith(ops + ".") for t in targets):
+                found.add(rel.as_posix())
+    assert not found, found
+
+
 def test_mapping_build_py4j_calls_grow_linearly_with_width(spark,
                                                            py4j_commands):
     """Building the mapping plan must cost O(columns) py4j calls: each call
