@@ -283,13 +283,6 @@ def _write_distributed(triples, fmt: str, path: str,
 # rdf2csvw
 # --------------------------------------------------------------------------
 
-def _table_file_name(name: str) -> str:
-    """Output file per table (rdf2csvw/handler.ts:108: path separators and
-    ':' sanitized to '_'); inferred tables get a .csv suffix."""
-    safe = re.sub(r"[/\\:]", "_", name)
-    return safe if safe.lower().endswith(".csv") else safe + ".csv"
-
-
 def _write_single_csv(df, path: str, dialect=None) -> None:
     """One CSV file per table, streamed partition-at-a-time (the reference
     writes one file per table; for part-file output use
@@ -317,21 +310,19 @@ def _inferred_descriptor(tables) -> dict:
     out = []
     for t in tables:
         cols = [{"name": p.name, "titles": p.name, "propertyUrl": p.pred}
-                for p in t.patterns if p.pred not in t.multivalued]
-        entry = {"url": _table_file_name(t.name),
+                for p in t.patterns]
+        entry = {"url": t.file,
                  "tableSchema": {"columns": [{"name": "subj",
                                               "titles": "subj"}] + cols}}
         if t.type_iri != "unknown_type":
             entry["rdfs:comment"] = f"rows typed {t.type_iri}"
         out.append(entry)
-        for pred in t.multivalued:
-            from .plans.rdf2csvw import _local_name
-            col = _local_name(pred)
-            out.append({"url": _table_file_name(f"{t.name}_{col}"),
+        for link in t.links:
+            out.append({"url": link.file,
                         "tableSchema": {"columns": [
                             {"name": t.name, "titles": t.name},
-                            {"name": col, "titles": col,
-                             "propertyUrl": pred}]}})
+                            {"name": link.column, "titles": link.column,
+                             "propertyUrl": link.pred}]}})
     return {"@context": "http://www.w3.org/ns/csvw", "tables": out}
 
 
@@ -357,6 +348,7 @@ def cmd_rdf2csvw(args) -> int:
 
     if args.descriptor:
         from .descriptor_norm import normalize_descriptor
+        from .plans.rdf2csvw import table_file_name
         from .plans.rdf2csvw_run import convert_parsed, table_output_name
         from .spec import parse_descriptor
         with open(args.descriptor, encoding="utf-8") as f:
@@ -381,7 +373,7 @@ def cmd_rdf2csvw(args) -> int:
                     for t in group.tables}
         descriptor_out = norm
         for name, df in tables.items():
-            _write_single_csv(df, os.path.join(outdir, _table_file_name(name)),
+            _write_single_csv(df, os.path.join(outdir, table_file_name(name)),
                               dialects.get(name))
     else:
         from .plans.rdf2csvw import infer_tables, reconstruct_tables
@@ -389,8 +381,9 @@ def cmd_rdf2csvw(args) -> int:
                                 use_vocab_metadata=args.useVocabMetadata)
         tables = reconstruct_tables(triples, inferred)
         descriptor_out = _inferred_descriptor(inferred)
+        files = {o.name: o.file for t in inferred for o in (t, *t.links)}
         for name, df in tables.items():
-            _write_single_csv(df, os.path.join(outdir, _table_file_name(name)))
+            _write_single_csv(df, os.path.join(outdir, files[name]))
 
     with open(os.path.join(outdir, "descriptor.json"), "w",
               encoding="utf-8") as f:

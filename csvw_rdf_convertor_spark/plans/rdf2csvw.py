@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from itertools import groupby
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -111,7 +112,7 @@ def merge_datatypes(types: list[str]) -> str:
     return common[0] if common else ANY_ATOMIC
 
 
-# --- A1/A2/A3/A4: schema inference aggregates --------------------------------
+# --- A1/A3/A4: schema inference aggregates (A2 is in infer_tables) ----------
 
 def subjects_by_type(triples: DataFrame) -> DataFrame:
     """A1: one inferred table per rdf:type object; untyped subjects →
@@ -122,14 +123,6 @@ def subjects_by_type(triples: DataFrame) -> DataFrame:
                .join(typed.select("subj").distinct(), "subj", "left_anti")
                .withColumn("type_iri", F.lit("unknown_type")))
     return typed.unionByName(untyped)
-
-
-def multivalued_predicates(triples: DataFrame) -> DataFrame:
-    """A2: predicates needing a link table — >1 value for some subject
-    (schema-inferrer.ts:135-197; the limit-2 probe W3 becomes count>1)."""
-    return (triples.groupBy("subj", "pred").agg(F.count("*").alias("n"))
-            .groupBy("pred").agg(F.max("n").alias("max_per_subject"))
-            .withColumn("multivalued", F.col("max_per_subject") > 1))
 
 
 def merged_column_datatypes(triples: DataFrame) -> DataFrame:
@@ -285,12 +278,24 @@ class TriplePattern:
 
 
 @dataclass(frozen=True)
-class InferredTable:
-    """One inferred output table (reference: rdf2csvw/schema/table-schema.ts)."""
+class LinkTable:
+    """A multi-valued predicate's (subject, value) rows; the subject column
+    is named after the owning table (schema-inferrer.ts:135-197)."""
     name: str
+    file: str
+    pred: str
+    column: str
+
+
+@dataclass(frozen=True)
+class InferredTable:
+    """One inferred output table (reference: rdf2csvw/schema/table-schema.ts):
+    single-valued columns, and a link table per multi-valued predicate."""
+    name: str
+    file: str
     type_iri: str               # rdf:type object, or 'unknown_type'
     patterns: tuple[TriplePattern, ...]
-    multivalued: tuple[str, ...] = ()   # predicates split into link tables
+    links: tuple[LinkTable, ...] = ()
 
 
 def _local_name(iri: str) -> str:
@@ -302,11 +307,31 @@ def _local_name(iri: str) -> str:
     return iri
 
 
+def table_file_name(name: str) -> str:
+    """Output file per table (rdf2csvw/handler.ts:108: path separators and
+    ':' sanitized to '_'); inferred tables get a .csv suffix."""
+    safe = re.sub(r"[/\\:]", "_", name)
+    return safe if safe.lower().endswith(".csv") else safe + ".csv"
+
+
+def _unique(name: str, taken: set[str], key=lambda n: n) -> str:
+    """``name``, or ``name_<n>`` (n = ``len(taken)``, counting up) when
+    ``key(name)`` is taken; the key of the name returned is then taken."""
+    out, n = name, len(taken)
+    while key(out) in taken:
+        out, n = f"{name}_{n}", n + 1
+    taken.add(key(out))
+    return out
+
+
 def infer_tables(triples: DataFrame, *,
                  use_vocab_metadata: bool = True) -> list[InferredTable]:
     """Full schema inference: one table per rdf:type (A1), columns from the
-    predicates its subjects use, multi-valued predicates flagged for link
+    predicates its subjects use, multi-valued predicates split into link
     tables (A2), names from IRI local names with label override (A5).
+
+    The graph is a set (a repeated triple is one value). A ``_<n>`` suffix
+    makes every column name unique, and every table name per output file.
 
     ``use_vocab_metadata=False`` skips the A5 label pass and names tables
     purely from IRI local names (the CLI's ``--no-useVocabMetadata``;
@@ -318,11 +343,12 @@ def infer_tables(triples: DataFrame, *,
     """
     typed = subjects_by_type(triples)
     data = triples.where(F.col("pred") != RDF_TYPE)
-    # max values per (subj,pred) within the type — two-stage agg, no window
+    # distinct values per (subj,pred) within the type — two-stage agg
+    value = F.struct("obj_lex", "obj_kind", "obj_dtype", "obj_lang")
     sp = (data.join(typed, "subj")
-          .groupBy("type_iri", "pred", "subj").agg(F.count("*").alias("k"))
-          .groupBy("type_iri", "pred")
-          .agg(F.max("k").alias("max_per_subj"), F.sum("k").alias("n")))
+          .groupBy("type_iri", "pred", "subj")
+          .agg(F.size(F.collect_set(value)).alias("k"))
+          .groupBy("type_iri", "pred").agg(F.max("k").alias("max_per_subj")))
     # The label dict is only ever probed with TYPE IRIs — semi-join against
     # the distinct type objects before collecting, so the collect is bounded
     # by the vocabulary size, not the number of labeled entities (on a large
@@ -336,37 +362,33 @@ def infer_tables(triples: DataFrame, *,
                      .join(type_iris, "subj", "left_semi").collect()}
     else:
         label_map = {}
+    files: set[str] = set()
     out: list[InferredTable] = []
-    for type_iri, rows in _group_rows(sp.collect(), "type_iri").items():
-        pats, multi = [], []
-        seen: set[str] = set()
-        for r in sorted(rows, key=lambda r: r.pred):
+    # rows sort by (type_iri, pred): names are decided in a fixed order
+    for type_iri, rows in groupby(sorted(sp.collect()), lambda r: r.type_iri):
+        name = _unique(label_map.get(type_iri) or _local_name(type_iri),
+                       files, table_file_name)
+        cols, pats, links = {"subj"}, [], []
+        for r in rows:
             col = _local_name(r.pred)
-            if col in seen:
-                col = f"{col}_{len(seen)}"
-            seen.add(col)
             if r.max_per_subj > 1:
-                multi.append(r.pred)
-            pats.append(TriplePattern(col, r.pred, required=False))
-        name = label_map.get(type_iri) or _local_name(type_iri)
-        out.append(InferredTable(name=name, type_iri=type_iri,
-                                 patterns=tuple(pats), multivalued=tuple(multi)))
+                link = _unique(f"{name}_{col}", files, table_file_name)
+                links.append(LinkTable(link, table_file_name(link), r.pred,
+                                       _unique(col, {name})))
+            else:
+                pats.append(TriplePattern(_unique(col, cols), r.pred))
+        out.append(InferredTable(name, table_file_name(name), type_iri,
+                                 tuple(pats), tuple(links)))
     return sorted(out, key=lambda t: t.name)
-
-
-def _group_rows(rows, key):
-    out: dict = {}
-    for r in rows:
-        out.setdefault(r[key], []).append(r)
-    return out
 
 
 def reconstruct_tables(triples: DataFrame,
                        tables: list[InferredTable] | None = None,
                        ) -> dict[str, DataFrame]:
-    """rdf2csvw end-to-end: infer schema, then per table match its subjects'
-    BGP and rebuild rows; multi-valued predicates become link tables
-    (``<table>_<pred>`` with (subject, value)) like schema-inferrer.ts:135-197.
+    """rdf2csvw end-to-end: infer schema, then rebuild each table's rows
+    with one conditional aggregation over its subjects' triples (every such
+    subject has one: its rdf:type, or any triple when untyped) and its link
+    tables' distinct (subject, value) rows, keyed by their inferred names.
 
     ``tables`` lets a caller that already ran :func:`infer_tables` (e.g. the
     CLI, which also writes the inferred schema as ``descriptor.json``) skip
@@ -378,30 +400,13 @@ def reconstruct_tables(triples: DataFrame,
     for t in tables:
         subjects = typed.where(F.col("type_iri") == t.type_iri).select("subj")
         scoped = triples.join(subjects, "subj", "left_semi")
-        single = [p for p in t.patterns if p.pred not in t.multivalued]
-        # Single-valued columns (inference guarantees ≤1 value per subject)
-        # reconstruct with ONE conditional aggregation — one shuffle on subj
-        # — instead of K left joins (K shuffled slices for a K-column table;
-        # a 100×-scale plan upgrade, VERDICT r4 #5). Subjects with no data
-        # predicates are kept by seeding NULL rows into the same groupBy,
-        # which stays narrow (union, no extra Exchange).
-        seed = subjects.distinct().select(
-            "subj", F.lit(None).cast("string").alias("pred"),
-            F.lit(None).cast("string").alias("obj_lex"))
-        base = (scoped.where(F.col("pred").isin([p.pred for p in single]))
-                .select("subj", "pred", "obj_lex")
-                .unionByName(seed)) if single else seed
-        df = base.groupBy("subj").agg(*[
-            F.max(F.when(F.col("pred") == p.pred, F.col("obj_lex")))
-            .alias(p.name) for p in single]) if single else \
-            seed.select("subj").distinct()
-        out[t.name] = df
-        for pred in t.multivalued:
-            col = _local_name(pred)
-            link = (scoped.where(F.col("pred") == pred)
-                    .select(F.col("subj").alias(t.name),
-                            F.col("obj_lex").alias(col)))
-            out[f"{t.name}_{col}"] = link
+        out[t.name] = match_patterns(scoped, list(t.patterns),
+                                     assume_single_valued=True)
+        for link in t.links:
+            out[link.name] = (scoped.where(F.col("pred") == link.pred)
+                              .select(F.col("subj").alias(t.name),
+                                      F.col("obj_lex").alias(link.column))
+                              .distinct())
     return out
 
 

@@ -16,10 +16,10 @@ import pytest
 from csvw_rdf_convertor_spark.cli import (
     COMMON_PREFIXES,
     _pairs,
-    _table_file_name,
     infer_format,
     main,
 )
+from csvw_rdf_convertor_spark.plans.rdf2csvw import table_file_name
 
 FOAF_NAME = "http://xmlns.com/foaf/0.1/name"
 EX_ID = "http://ex.org/def#id"
@@ -83,8 +83,8 @@ def test_pairs_coercion():
 
 def test_table_file_name():
     # rdf2csvw/handler.ts:108 sanitization + .csv suffix for inferred names
-    assert _table_file_name("people.csv") == "people.csv"
-    assert _table_file_name("a/b:c") == "a_b_c.csv"
+    assert table_file_name("people.csv") == "people.csv"
+    assert table_file_name("a/b:c") == "a_b_c.csv"
 
 
 def test_csvw2rdf_ntriples(spark, workdir):
@@ -229,6 +229,73 @@ def test_rdf2csvw_inferred_schema(spark, workdir, tmp_path):
                "-o", str(outdir2), "--no-useVocabMetadata"])
     assert rc == 0
     assert (outdir2 / "T.csv").exists()  # IRI local name, no label pass
+
+
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
+
+
+def _rdf2csvw_inferred(tmp_path, lines: list[str]) -> tuple[dict, list]:
+    """Run ``rdf2csvw`` without a descriptor over N-Triples ``lines`` →
+    ({CSV file: (header, sorted data rows)}, the descriptor's table urls)."""
+    import csv
+
+    (tmp_path / "g.nt").write_text("\n".join(lines) + "\n", encoding="utf-8")
+    outdir = tmp_path / "out"
+    assert main(["rdf2csvw", "-i", str(tmp_path / "g.nt"),
+                 "-o", str(outdir)]) == 0
+    out = {}
+    for f in outdir.glob("*.csv"):
+        rows = list(csv.reader(f.read_text(encoding="utf-8").splitlines()))
+        out[f.name] = (rows[0], sorted(map(tuple, rows[1:])))
+    desc = json.loads((outdir / "descriptor.json").read_text())
+    return out, [t["url"] for t in desc["tables"]]
+
+
+def test_rdf2csvw_inferred_graph_is_a_set(spark, tmp_path):
+    """A repeated triple (or rdf:type) is one value: ``name`` stays a column
+    instead of turning into a link table, and a link table holds each
+    (subject, value) row once."""
+    lines = [f"<http://ex.org/p1> <{RDF_TYPE}> <http://ex.org/Person> .",
+             f"<http://ex.org/p1> <{RDF_TYPE}> <http://ex.org/Person> .",
+             f"<http://ex.org/p1> <{FOAF_NAME}> \"Ann\" .",
+             f"<http://ex.org/p1> <{FOAF_NAME}> \"Ann\" .",
+             f"<http://ex.org/p2> <{RDF_TYPE}> <http://ex.org/Person> .",
+             f"<http://ex.org/p2> <{FOAF_NAME}> \"Bob\" .",
+             "<http://ex.org/p2> <http://ex.org/email> \"b@x\" .",
+             "<http://ex.org/p2> <http://ex.org/email> \"b@x\" .",
+             "<http://ex.org/p2> <http://ex.org/email> \"bob@y\" ."]
+    got, urls = _rdf2csvw_inferred(tmp_path, lines)
+    assert got["Person.csv"] == (["subj", "name"], [
+        ("http://ex.org/p1", "Ann"), ("http://ex.org/p2", "Bob")])
+    assert got["Person_email.csv"] == (["Person", "email"], [
+        ("http://ex.org/p2", "b@x"), ("http://ex.org/p2", "bob@y")])
+    assert sorted(urls) == ["Person.csv", "Person_email.csv"]
+
+
+@pytest.mark.parametrize("labeled", [False, True])
+def test_rdf2csvw_inferred_names_are_unique_per_file(spark, tmp_path,
+                                                     labeled):
+    """Two types with one local name (or one label) write two tables, and
+    their link tables two files; descriptor.json lists each file once."""
+    lines = []
+    for ns in ("http://a.org/", "http://b.org/"):
+        t = f"{ns}Person" if not labeled else f"{ns}T"
+        lines += [f"<{ns}s> <{RDF_TYPE}> <{t}> .",
+                  f"<{ns}s> <{FOAF_NAME}> \"{ns}\" .",
+                  f"<{ns}s> <http://ex.org/email> \"1\" .",
+                  f"<{ns}s> <http://ex.org/email> \"2\" ."]
+        if labeled:
+            lines.append(f"<{t}> <{RDFS_LABEL}> \"Person\" .")
+    got, urls = _rdf2csvw_inferred(tmp_path, lines)
+    assert len(urls) == len(set(urls)) and set(urls) == set(got)
+    got.pop("unknown_type.csv", None)  # the labels' own subjects
+    assert len(got) == 4
+    rows = sorted(r for f, (_h, rs) in got.items() if "email" not in f
+                  for r in rs)
+    assert rows == [("http://a.org/s", "http://a.org/"),
+                    ("http://b.org/s", "http://b.org/")]
+    assert sum(len(rs) for f, (_h, rs) in got.items() if "email" in f) == 4
 
 
 def test_validate_clean(workdir, capsys):

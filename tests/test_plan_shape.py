@@ -164,6 +164,21 @@ def test_single_valued_pivot_reconstruction_one_exchange(spark):
     chain = match_patterns(t, pats)
     assert sorted(map(tuple, out.collect())) == \
         sorted(map(tuple, chain.collect()))
+    # reconstruct_tables builds a typed table the same way, over its
+    # subjects' triples: the scoping semi-join's two exchanges on subj, which
+    # the aggregation reuses, and no third one for a seed of its subjects
+    types = [(f"urn:s#{i}", rdf2csvw.RDF_TYPE, "urn:T#thing", "iri")
+             for i in range(4)]
+    typed = (spark.createDataFrame(
+        rows + types,
+        "subj string, pred string, obj_lex string, obj_kind string")
+        .withColumn("obj_dtype", F.lit("")).withColumn("obj_lang", F.lit(""))
+        .withColumn("graph", F.lit("")))
+    thing = rdf2csvw.reconstruct_tables(typed)["thing"]
+    plan = _plan(thing)
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert sorted(map(tuple, thing.collect())) == \
+        sorted(map(tuple, out.collect()))
 
 
 #: HotSpot's DontCompileHugeMethods limit: a method with more bytecode than

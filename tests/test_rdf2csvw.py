@@ -34,17 +34,6 @@ def test_subjects_by_type_and_unknown(spark):
     assert got == {("s1", "T1"), ("s2", "T1"), ("s3", "T2"), ("s4", "unknown_type")}
 
 
-def test_multivalued_predicates(spark):
-    t = _triples(spark, [
-        ("s1", "p1", "a", "literal", "", ""),
-        ("s1", "p1", "b", "literal", "", ""),
-        ("s1", "p2", "c", "literal", "", ""),
-        ("s2", "p2", "d", "literal", "", ""),
-    ])
-    got = {r.pred: r.multivalued for r in rdf2csvw.multivalued_predicates(t).collect()}
-    assert got == {"p1": True, "p2": False}
-
-
 def test_datatype_lattice_merge():
     assert rdf2csvw.merge_datatypes([XSD + "int", XSD + "short"]) == XSD + "int"
     assert rdf2csvw.merge_datatypes([XSD + "int", XSD + "integer"]) == XSD + "integer"

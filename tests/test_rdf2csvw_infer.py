@@ -38,8 +38,10 @@ def test_infer_tables(spark):
     # label carrier itself (Person IRI is an untyped subject with prefLabel)
     assert "people" in tables
     ppl = tables["people"]
-    assert {p.pred for p in ppl.patterns} == {EX + "name", EX + "email"}
-    assert ppl.multivalued == (EX + "email",)
+    assert [p.pred for p in ppl.patterns] == [EX + "name"]
+    assert [(lk.name, lk.file, lk.pred, lk.column) for lk in ppl.links] == \
+        [("people_email", "people_email.csv", EX + "email", "email")]
+    assert ppl.file == "people.csv"
     assert "unknown_type" in tables
 
 
@@ -55,6 +57,19 @@ def test_reconstruct_tables(spark):
     # untyped subjects land in unknown_type
     unk = out["unknown_type"]
     assert any(r.subj == EX + "u1" for r in unk.collect())
+
+
+def test_repeated_triples_are_one_value(spark):
+    """The graph is a set: a repeated rdf:type, name or email triple neither
+    turns ``name`` into a link table nor repeats a link-table row."""
+    t = spark.createDataFrame(TRIPLES + TRIPLES[:3], SCHEMA)
+    tables = rdf2csvw.infer_tables(t)
+    ppl = {tb.name: tb for tb in tables}["people"]
+    assert [p.pred for p in ppl.patterns] == [EX + "name"]
+    assert [lk.pred for lk in ppl.links] == [EX + "email"]
+    link = rdf2csvw.reconstruct_tables(t, tables)["people_email"]
+    assert sorted(map(tuple, link.collect())) == [
+        (EX + "p1", "a@x.org"), (EX + "p1", "alice@y.org")]
 
 
 def test_infer_tables_label_collect_is_type_bounded(spark):
