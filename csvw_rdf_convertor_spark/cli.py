@@ -399,12 +399,13 @@ def cmd_rdf2csvw(args) -> int:
 def validation_issues(inp: str | None, base_iri: str | None,
                       overrides) -> "list":
     """Descriptor + data validation core (validate/handler.ts:21-64):
-    structural issues from normalization + document validation, then
-    distributed row-level checks (required cells) when the CSVs resolve.
-    Shared by the CLI command and the web service (ws.py)."""
+    property-value issues from normalization (one walk), spec-level issues
+    from the parsed group, then distributed row-level checks (required
+    cells) when the CSVs resolve. Shared by the CLI command and the web
+    service (ws.py)."""
     from .descriptor_norm import normalize_descriptor
     from .spec import parse_descriptor
-    from .validation import Issue, validate_document, validate_group
+    from .validation import Issue, validate_group
 
     from .sources.resolve import FetchCache, locate_metadata
     cache = FetchCache(overrides)
@@ -427,7 +428,6 @@ def validation_issues(inp: str | None, base_iri: str | None,
     issues: list[Issue] = []
     norm = normalize_descriptor(raw, base=base, loader=cache.load_json,
                                 issues=issues, url=inp or "")
-    issues.extend(validate_document(norm))
     group = None
     try:
         group = parse_descriptor(norm, base)

@@ -23,7 +23,10 @@ Pieces mirrored, with reference lines:
   W3C context's plural aliases (``#table``→``tables`` etc.), matching
   compactCsvwNs + shortenProps (descriptor.ts:287-316);
 - value compaction: ``{"@value": v}`` unwrap and singleton-array collapse
-  for non-``@set`` terms, as jsonld.compact would produce.
+  for non-``@set`` terms, as jsonld.compact would produce;
+- the post-compaction validate chain (validation/{table-group,table,schema,
+  column,dialect,datatype,template,inherited-properties}.ts): this module is
+  the only place a descriptor property value is judged.
 
 Inherited-property cascading and external-prop splitting stay where they
 already live (spec.py:_merge_inherited, plans/external_props.py).
@@ -38,7 +41,7 @@ import copy
 import re
 from typing import Any, Callable
 
-from .spec import CSVW
+from .spec import CSVW, DATATYPE_URIS, DATE_TYPES, NUMERIC_TYPES
 from .validation import Issue
 
 #: Compact aliases from the public W3C csvw ``@context``
@@ -261,7 +264,26 @@ def load_referenced_subdescriptors(raw: dict, loader: Loader,
             obj[key] = _compact_keys(sub)
 
 
-# --- post-compaction structural validation (validation/*.ts) ----------------
+# --- post-compaction validation (validation/*.ts) ---------------------------
+#
+# The one walk that judges descriptor property values. Each invalid value is
+# dropped (or coerced to the reference's default) with exactly one "Invalid
+# value" warning at its ``$.…`` location, so parse_descriptor only ever sees
+# values it can use.
+
+#: BCP 47-ish tag of an inherited ``lang`` (validation/generic.ts validateLang
+#: — bcp47-validate); stricter than the context ``@language`` rule above
+_LANG_RE = re.compile(r"^[A-Za-z]{2,3}(-[A-Za-z0-9]{1,8})*$|^\*$")
+
+#: legal characters of an LDML number pattern (validation/datatype.ts:19)
+_NUMBER_PATTERN_RE = re.compile(r"^[0#,.eE+%‰-]+$")
+
+_TEXT_DIRECTIONS = ("ltr", "rtl", "auto", "inherit")
+
+#: transformation definition keys (validation/template.ts:5-14)
+_TEMPLATE_KEYS = {"notes", "url", "scriptFormat", "targetFormat", "source",
+                  "titles", "@id", "@type"}
+
 
 def _is_lang_tag(k: str) -> bool:
     return k == "@none" or bool(_BCP47.match(k))
@@ -283,10 +305,18 @@ def _valid_titles(val: Any) -> bool:
     return False
 
 
-def _drop(obj: dict, key: str, issues: list[Issue], loc: str) -> None:
+_DELETE = object()
+
+
+def _drop(obj: dict, key: str, issues: list[Issue], loc: str,
+          to: Any = _DELETE) -> None:
+    """Warn about ``obj[key]``, then delete it, or coerce it to ``to``."""
     issues.append(Issue("warning", "", loc,
                         f"Invalid value for {key}: {obj[key]!r}"))
-    del obj[key]
+    if to is _DELETE:
+        del obj[key]
+    else:
+        obj[key] = to
 
 
 #: dialect property → type/validate (validation/dialect.ts:12-51); invalid →
@@ -313,12 +343,24 @@ _DIALECT_CHECKS: dict[str, Callable[[Any], bool]] = {
                                                    "end"),
 }
 
+#: keys a dialect may hold (validation/dialect.ts:52-68)
+_DIALECT_KEYS = {*_DIALECT_CHECKS, "notes", "@id", "@type"}
+
 #: column name variable syntax (validation/column.ts:34)
 _URI_VAR_RE = re.compile(
     r"^([a-z0-9]|(%[0-9a-f]{2}))([a-z0-9_.]|(%[0-9a-f]{2}))*$", re.I)
 
 
 def _sanitize_dialect(d: dict, issues: list[Issue], loc: str) -> None:
+    """validation/dialect.ts:70-101: ``@type`` must be Dialect (error),
+    unknown keys warn (an inherited property here is misplaced), and each
+    option is checked against its type and value domain."""
+    if d.get("@type") not in (None, "Dialect"):
+        issues.append(Issue("error", "", f"{loc}.@type",
+                            "Dialect must have type Dialect"))
+    for k in sorted(set(d) - _DIALECT_KEYS):
+        issues.append(Issue("warning", "", f"{loc}.{k}",
+                            f"unknown dialect property {k!r}"))
     for k, check in _DIALECT_CHECKS.items():
         if k in d and not check(d[k]):
             _drop(d, k, issues, f"{loc}.{k}")
@@ -327,12 +369,110 @@ def _sanitize_dialect(d: dict, issues: list[Issue], loc: str) -> None:
         lt = lt if isinstance(lt, list) else [lt]
         kept = [t for t in lt if isinstance(t, str)]
         if len(kept) != len(lt):
-            issues.append(Issue("warning", "", f"{loc}.lineTerminators",
-                                "removing invalid line terminators"))
+            _drop(d, "lineTerminators", issues, f"{loc}.lineTerminators")
         if kept:
             d["lineTerminators"] = kept
         else:
             d.pop("lineTerminators", None)
+
+
+def _check_transformations(obj: dict, issues: list[Issue], loc: str) -> None:
+    """validation/template.ts:25-32: allowed keys and ``@type`` Template,
+    plus the warning that transformations are validated but never executed
+    (SURVEY §2.10)."""
+    ts = obj.get("transformations")
+    if ts is None:
+        return
+    ts = ts if isinstance(ts, list) else [ts]
+    if ts:
+        issues.append(Issue("warning", "", f"{loc}.transformations",
+                            "transformations are validated but not executed"))
+    for i, tmpl in enumerate(ts):
+        if not isinstance(tmpl, dict):
+            continue
+        tloc = f"{loc}.transformations[{i}]"
+        if tmpl.get("@type") not in (None, "Template"):
+            issues.append(Issue("error", "", f"{tloc}.@type",
+                                "Template must have type Template"))
+        for k in sorted(set(tmpl) - _TEMPLATE_KEYS):
+            issues.append(Issue("warning", "", f"{tloc}.{k}",
+                                f"unknown transformation property {k!r}"))
+
+
+def _is_regex(fmt: str) -> bool:
+    try:
+        re.compile(fmt)
+    except re.error:
+        return False
+    return True
+
+
+def _sanitize_datatype(obj: dict, issues: list[Issue], loc: str) -> None:
+    """Datatype validation (validation/datatype.ts:47-117): an unknown or
+    non-object datatype is dropped; an unknown base becomes 'string'; a
+    numeric format becomes ``{pattern}``, an illegal pattern dropped; a
+    boolean format needs '|'; other non-date formats must compile as a
+    regex."""
+    dt = obj.get("datatype")
+    if dt is None:
+        return
+    if not isinstance(dt, dict):
+        if not (isinstance(dt, str) and dt in DATATYPE_URIS):
+            _drop(obj, "datatype", issues, loc)
+        return
+    b = dt.get("base")
+    if b is not None and not (isinstance(b, str) and b in DATATYPE_URIS):
+        _drop(dt, "base", issues, f"{loc}.base", to="string")
+    base = dt.get("base", "string")
+    fmt = dt.get("format")
+    if fmt is None:
+        return
+    floc = f"{loc}.format"
+    if base in NUMERIC_TYPES:
+        if isinstance(fmt, str):
+            if _NUMBER_PATTERN_RE.match(fmt):
+                dt["format"] = {"pattern": fmt}
+            else:
+                _drop(dt, "format", issues, floc, to={})
+        elif not isinstance(fmt, dict):
+            _drop(dt, "format", issues, floc)
+        elif "pattern" in fmt and not (
+                isinstance(fmt["pattern"], str)
+                and _NUMBER_PATTERN_RE.match(fmt["pattern"])):
+            _drop(fmt, "pattern", issues, f"{floc}.pattern")
+    elif base == "boolean":
+        if not (isinstance(fmt, str) and "|" in fmt):
+            _drop(dt, "format", issues, floc)
+    elif base not in DATE_TYPES:
+        if not (isinstance(fmt, str) and _is_regex(fmt)):
+            _drop(dt, "format", issues, floc)
+
+
+def _sanitize_inherited(obj: dict, issues: list[Issue], loc: str) -> None:
+    """Inherited property values at ONE descriptor level, in place — the
+    reference runs validateInheritedProperties per level (table-group.ts:60,
+    table.ts:66, column.ts:52; inherited-properties.ts:6-63 + generic.ts
+    validateObject): a wrong-typed value is dropped, a non-string
+    aboutUrl/propertyUrl/valueUrl becomes ''."""
+    for k in ("null", "separator", "default"):
+        v = obj.get(k)
+        if v is not None and not isinstance(v, str) and not (
+                k == "null" and isinstance(v, list)
+                and all(isinstance(x, str) for x in v)):
+            _drop(obj, k, issues, f"{loc}.{k}")
+    lang = obj.get("lang")
+    if lang is not None and not (
+            isinstance(lang, str) and _LANG_RE.match(lang)):
+        _drop(obj, "lang", issues, f"{loc}.lang")
+    if obj.get("textDirection") not in (None, *_TEXT_DIRECTIONS):
+        _drop(obj, "textDirection", issues, f"{loc}.textDirection")
+    for k in ("ordered", "required"):
+        if k in obj and not isinstance(obj[k], bool):
+            _drop(obj, k, issues, f"{loc}.{k}")
+    for k in ("aboutUrl", "propertyUrl", "valueUrl"):
+        if k in obj and not isinstance(obj[k], str):
+            _drop(obj, k, issues, f"{loc}.{k}", to="")
+    _sanitize_datatype(obj, issues, f"{loc}.datatype")
 
 
 def _sanitize_column(c: dict, issues: list[Issue], loc: str) -> None:
@@ -342,12 +482,10 @@ def _sanitize_column(c: dict, issues: list[Issue], loc: str) -> None:
         if k in c and not isinstance(c[k], bool):
             _drop(c, k, issues, f"{loc}.{k}")
     name = c.get("name")
-    if name is not None and not isinstance(name, str):
+    if name not in (None, "") and not (
+            isinstance(name, str) and _URI_VAR_RE.match(name)):
         _drop(c, "name", issues, f"{loc}.name")
-    elif name and not _URI_VAR_RE.match(name):
-        issues.append(Issue("warning", "", f"{loc}.name",
-                            f"Column name {name!r} is invalid"))
-        del c["name"]
+    _sanitize_inherited(c, issues, loc)
 
 
 def _sanitize_child_object(obj: dict, key: str, issues: list[Issue],
@@ -364,22 +502,6 @@ def _sanitize_child_object(obj: dict, key: str, issues: list[Issue],
     return val
 
 
-def _sanitize_inherited_inplace(obj: dict, issues: list[Issue],
-                                loc: str) -> None:
-    """Apply spec._sanitize_inherited (typed-value coercion of inherited
-    properties + datatype format validation) to ONE descriptor level, in
-    place — the reference runs validateInheritedProperties per level
-    (table-group.ts:60, table.ts:66, column.ts:52)."""
-    from .spec import _sanitize_inherited
-    new = _sanitize_inherited(obj)
-    dropped = set(obj) - set(new)
-    for k in dropped:
-        issues.append(Issue("warning", "", f"{loc}.{k}",
-                            f"Invalid value for {k}: {obj[k]!r}"))
-    obj.clear()
-    obj.update(new)
-
-
 def _sanitize_table(t: dict, issues: list[Issue], loc: str,
                     ctx_base: str = "") -> None:
     if not isinstance(t.get("url"), str):
@@ -393,42 +515,45 @@ def _sanitize_table(t: dict, issues: list[Issue], loc: str,
     if "tableDirection" in t and t["tableDirection"] not in (
             "ltr", "rtl", "auto"):
         _drop(t, "tableDirection", issues, f"{loc}.tableDirection")
-    _sanitize_inherited_inplace(t, issues, loc)
+    _sanitize_inherited(t, issues, loc)
+    _check_transformations(t, issues, loc)
     d = _sanitize_child_object(t, "dialect", issues, loc)
     if d is not None:
         _sanitize_dialect(d, issues, f"{loc}.dialect")
     s = _sanitize_child_object(t, "tableSchema", issues, loc)
     if s is not None:
-        _sanitize_inherited_inplace(s, issues, f"{loc}.tableSchema")
+        sloc = f"{loc}.tableSchema"
+        _sanitize_inherited(s, issues, sloc)
+        _check_transformations(s, issues, sloc)
         cols = s.get("columns")
         if cols is not None:
             cols = cols if isinstance(cols, list) else [cols]
             kept = [c for c in cols if isinstance(c, dict)]
             if len(kept) != len(cols):
-                issues.append(Issue("warning", "", f"{loc}.columns",
+                issues.append(Issue("warning", "", f"{sloc}.columns",
                                     "removing non-object column entries"))
             for i, c in enumerate(kept):
-                _sanitize_column(c, issues, f"{loc}.columns[{i}]")
-                _sanitize_inherited_inplace(c, issues, f"{loc}.columns[{i}]")
+                _sanitize_column(c, issues, f"{sloc}.columns[{i}]")
             s["columns"] = kept
 
 
 def sanitize_descriptor(doc: dict, issues: list[Issue]) -> None:
-    """Structural validation/coercion of a compact-form descriptor, in place
-    — the reference's validateTableGroup/validateTable chain
+    """Validate and coerce a compact-form descriptor in place — the
+    reference's validateTableGroup/validateTable chain
     (validation/table-group.ts:55-70, table.ts:50-70, dialect.ts:78-101,
-    schema.ts:30-53, column.ts:46-62): wrong-typed values are dropped with a
-    warning so downstream defaults apply; non-object dialect/tableSchema
-    children become ``{}``; non-object column entries are removed. Inherited
-    property VALUE sanitization lives in spec._sanitize_inherited (applied
-    post-merge, same end state as the reference's per-level pass)."""
+    schema.ts:30-53, column.ts:46-62, inherited-properties.ts,
+    template.ts): wrong-typed values are dropped with a warning so
+    downstream defaults apply; non-object dialect/tableSchema children
+    become ``{}``; non-object column entries are removed. Every issue about
+    a property value comes from this walk."""
     ctx = doc.get("@context")
     ctx_base = ""
     if isinstance(ctx, list) and len(ctx) > 1 and isinstance(ctx[1], dict) \
             and isinstance(ctx[1].get("@base"), str):
         ctx_base = ctx[1]["@base"]
     if isinstance(doc.get("tables"), list):
-        _sanitize_inherited_inplace(doc, issues, "$")
+        _sanitize_inherited(doc, issues, "$")
+        _check_transformations(doc, issues, "$")
         d = _sanitize_child_object(doc, "dialect", issues, "$")
         if d is not None:
             _sanitize_dialect(d, issues, "$.dialect")

@@ -345,7 +345,9 @@ def infer_tables(triples: DataFrame, *,
     data = triples.where(F.col("pred") != RDF_TYPE)
     # distinct values per (subj,pred) within the type — two-stage agg
     value = F.struct("obj_lex", "obj_kind", "obj_dtype", "obj_lang")
-    sp = (data.join(typed, "subj")
+    # left join: a type whose subjects carry only rdf:type still gets a
+    # (subj-only) table, from its one null-pred row
+    sp = (typed.join(data, "subj", "left")
           .groupBy("type_iri", "pred", "subj")
           .agg(F.size(F.collect_set(value)).alias("k"))
           .groupBy("type_iri", "pred").agg(F.max("k").alias("max_per_subj")))
@@ -365,11 +367,14 @@ def infer_tables(triples: DataFrame, *,
     files: set[str] = set()
     out: list[InferredTable] = []
     # rows sort by (type_iri, pred): names are decided in a fixed order
-    for type_iri, rows in groupby(sorted(sp.collect()), lambda r: r.type_iri):
+    by_type = sorted(sp.collect(), key=lambda r: (r.type_iri, r.pred or ""))
+    for type_iri, rows in groupby(by_type, lambda r: r.type_iri):
         name = _unique(label_map.get(type_iri) or _local_name(type_iri),
                        files, table_file_name)
         cols, pats, links = {"subj"}, [], []
         for r in rows:
+            if r.pred is None:
+                continue
             col = _local_name(r.pred)
             if r.max_per_subj > 1:
                 link = _unique(f"{name}_{col}", files, table_file_name)

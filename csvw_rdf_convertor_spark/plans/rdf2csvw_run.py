@@ -58,7 +58,11 @@ def convert_parsed(triples: DataFrame, group) -> dict[str, DataFrame]:
     """:func:`convert` for a descriptor that is ALREADY normalized+parsed —
     callers that also need the normalized document or the parsed group
     (the CLI writes both) run the pipeline once and pass the group here
-    instead of paying (and trusting) a second normalize/parse pass."""
+    instead of paying (and trusting) a second normalize/parse pass.
+
+    The graph is a set: a repeated triple is deduplicated once here, so no
+    pattern frame binds it twice."""
+    triples = triples.distinct()
     out: dict[str, DataFrame] = {}
     for table in group.tables:
         if not table.columns or table.suppressOutput:

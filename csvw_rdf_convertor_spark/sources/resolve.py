@@ -140,21 +140,6 @@ def locate_metadata(csv_url: str, cache: FetchCache | None = None,
     return None
 
 
-def resolve_descriptor(csv_url: str, *, cache: FetchCache | None = None,
-                       base: str | None = None) -> TableGroupSpec:
-    """csv location → TableGroupSpec (empty schema if nothing found —
-    the reference's fallback binds a url-less table to the CSV)."""
-    cache = cache or FetchCache()
-    meta = locate_metadata(csv_url, cache)
-    if meta is None:
-        raw: dict = {"url": csv_url, "tableSchema": {"columns": []}}
-    else:
-        raw = _load_normalized(meta, cache)
-        if "url" not in raw and "tables" not in raw:
-            raw = {**raw, "url": csv_url}
-    return parse_descriptor(raw, base or "")
-
-
 def _load_normalized(meta_url: str, cache: FetchCache) -> dict:
     """Load a descriptor and run the JSON-LD normalization pass
     (descriptor_norm.normalize_descriptor), so csvw:-prefixed / full-IRI

@@ -371,92 +371,6 @@ def _titles_and_name(raw: Any, default_lang: str = "@none"
     raise ValueError(f"bad titles: {raw!r}")
 
 
-#: BCP 47-ish language tag (validation/generic.ts validateLang — bcp47-validate)
-_LANG_RE = re.compile(r"^[A-Za-z]{2,3}(-[A-Za-z0-9]{1,8})*$|^\*$")
-
-#: legal characters of an LDML number pattern (validation/datatype.ts:19)
-_NUMBER_PATTERN_RE = re.compile(r"^[0#,.eE+%‰-]+$")
-
-
-def _sanitize_datatype(merged: dict) -> None:
-    """Datatype format validation (validation/datatype.ts:47-117): unknown
-    string datatype → dropped; unknown base → 'string'; numeric format
-    coerced to {pattern} with an illegal pattern deleted; boolean format
-    without '|' deleted; other formats must compile as a regex."""
-    dt = merged.get("datatype")
-    if dt is None:
-        return
-    if isinstance(dt, str):
-        if dt not in DATATYPE_URIS:
-            del merged["datatype"]
-        return
-    if not isinstance(dt, dict):
-        del merged["datatype"]
-        return
-    dt = dict(dt)  # inherited dicts are shared across columns — never mutate
-    merged["datatype"] = dt
-    if dt.get("base") is not None and dt["base"] not in DATATYPE_URIS:
-        dt["base"] = "string"
-    base = dt.get("base", "string")
-    fmt = dt.get("format")
-    if fmt is None:
-        return
-    if base in NUMERIC_TYPES:
-        if isinstance(fmt, str):
-            fmt = {"pattern": fmt}
-        if not isinstance(fmt, dict):
-            del dt["format"]
-            return
-        fmt = dict(fmt)
-        if "pattern" in fmt and not (
-                isinstance(fmt["pattern"], str)
-                and _NUMBER_PATTERN_RE.match(fmt["pattern"])):
-            del fmt["pattern"]
-        dt["format"] = fmt
-    elif base == "boolean":
-        if not (isinstance(fmt, str) and "|" in fmt):
-            del dt["format"]
-    elif base in DATE_TYPES or base == "dateTimeStamp":
-        pass
-    else:
-        if not isinstance(fmt, str):
-            del dt["format"]
-        else:
-            try:
-                re.compile(fmt)
-            except re.error:
-                del dt["format"]
-
-
-def _sanitize_inherited(merged: dict) -> dict:
-    """Drop invalid-typed inherited property values, like the reference's
-    validateInheritedProperties (validation/inherited-properties.ts:6-63 +
-    generic.ts validateObject: wrong type / failed validate → warning +
-    delete; aboutUrl/propertyUrl/valueUrl non-strings → '')."""
-    out = dict(merged)
-    for k in ("null", "separator", "default"):
-        v = out.get(k)
-        if v is not None and not isinstance(v, str) and not (
-                k == "null" and isinstance(v, list)
-                and all(isinstance(x, str) for x in v)):
-            del out[k]
-    lang = out.get("lang")
-    if lang is not None and not (
-            isinstance(lang, str) and _LANG_RE.match(lang)):
-        del out["lang"]
-    td = out.get("textDirection")
-    if td is not None and td not in ("ltr", "rtl", "auto", "inherit"):
-        del out["textDirection"]
-    for k in ("ordered", "required"):
-        if k in out and not isinstance(out[k], bool):
-            del out[k]
-    for k in ("aboutUrl", "propertyUrl", "valueUrl"):
-        if k in out and not isinstance(out[k], str):
-            out[k] = ""
-    _sanitize_datatype(out)
-    return out
-
-
 def _exact_lang_title(raw: Any, lang: str) -> str | None:
     """First title under exactly ``lang`` (string/array titles always
     qualify) — the rdf2csvw query compiler's lookup (create-query.ts:44-77:
@@ -478,10 +392,9 @@ def parse_column(raw: dict, index: int, inherited: dict, base: str = "",
     """Column name derivation + inheritance (reference: convertor.ts:566-604).
 
     Invalid-typed values are NOT coerced here — that is the normalization
-    pass's job (descriptor_norm.sanitize_descriptor applies
-    _sanitize_inherited per level, like the reference's validate chain
-    inside normalizeDescriptor); direct parse_descriptor stays strict so
-    validation.validate_group still sees the raw values."""
+    pass's job (descriptor_norm.sanitize_descriptor, like the reference's
+    validate chain inside normalizeDescriptor); direct parse_descriptor
+    stays strict so validation.validate_group still sees the raw values."""
     merged = _merge_inherited(raw, inherited)
     titles, name_title = _titles_and_name(merged.get("titles"), default_lang)
     name = merged.get("name")

@@ -1,10 +1,12 @@
-"""Descriptor-level structural validation (reference: packages/core/src/lib/
-validation/{table-group,table,schema,column,datatype,foreign-key}.ts).
+"""Spec-level validation (reference: packages/core/src/lib/validation/
+{schema,column,datatype,foreign-key}.ts) and the ``Issue`` record.
 
 Validation is driver-side (it inspects the mapping spec, not data) and
-returns a list of issues; hard errors (duplicate names, virtual ordering)
-already raise in ``spec.parse_*``. Row-level checks (required cells, FK
-existence) run distributed — ``plans.csvw2rdf.issues`` and the J5 anti-join.
+returns a list of issues. Descriptor property VALUES are judged earlier, in
+one walk, by ``descriptor_norm.sanitize_descriptor``; hard errors (duplicate
+names, virtual ordering) raise in ``spec.parse_*``. Row-level checks
+(required cells, FK existence) run distributed — ``plans.csvw2rdf.issues``
+and the J5 anti-join.
 """
 
 from __future__ import annotations
@@ -108,177 +110,3 @@ def validate_group(group: TableGroupSpec,
         out.extend(validate_table(t))
     out.extend(validate_foreign_keys(group, foreign_keys))
     return out
-
-
-# --- raw-document validation breadth (VERDICT r3 #5) -------------------------
-#
-# These operate on the RAW descriptor dict (before spec parsing) because the
-# checks concern JSON shape — option domains, unknown keys, property
-# placement — that the parsed spec normalizes away.
-
-#: reference: validation/dialect.ts:14-51 (option schema) and :52-68 (keys)
-_DIALECT_KEYS = {"commentPrefix", "delimiter", "doubleQuote", "encoding",
-                 "header", "headerRowCount", "lineTerminators", "notes",
-                 "quoteChar", "skipBlankRows", "skipColumns",
-                 "skipInitialSpace", "skipRows", "trim", "@id", "@type"}
-_ENCODINGS = {"ascii", "utf8", "utf-8", "utf16le", "ucs2", "base64",
-              "latin1", "binary", "hex"}
-#: reference: validation/template.ts:5-14
-_TEMPLATE_KEYS = {"notes", "url", "scriptFormat", "targetFormat", "source",
-                  "titles", "@id", "@type"}
-#: reference: validation/inherited-properties.ts:20-31
-_INHERITED_KEYS = ("aboutUrl", "datatype", "default", "lang", "null",
-                   "ordered", "propertyUrl", "required", "separator",
-                   "textDirection")
-_TEXT_DIRECTIONS = {"ltr", "rtl", "auto", "inherit"}
-_BCP47 = __import__("re").compile(
-    r"^[A-Za-z]{2,8}(-[A-Za-z0-9]{1,8})*$")
-
-
-def _is_num(v) -> bool:
-    return isinstance(v, (int, float)) and not isinstance(v, bool)
-
-
-def validate_dialect(dialect: dict, table: str = "") -> list[Issue]:
-    """Dialect option-domain checks (validation/dialect.ts:70-96):
-    @type must be 'Dialect' (error), unknown keys warn, each option checked
-    against its type + value domain (warn — the reference substitutes the
-    default and continues)."""
-    issues: list[Issue] = []
-    if not isinstance(dialect, dict):
-        return [Issue("warning", table, "dialect",
-                      "dialect must be an object")]
-    if dialect.get("@type") not in (None, "Dialect"):
-        issues.append(Issue("error", table, "dialect/@type",
-                            "Dialect must have type Dialect"))
-    for k in sorted(set(dialect) - _DIALECT_KEYS):
-        issues.append(Issue("warning", table, f"dialect/{k}",
-                            f"unknown dialect property {k!r}"))
-
-    def bad(key, msg):
-        issues.append(Issue("warning", table, f"dialect/{key}", msg))
-
-    checks = {
-        "commentPrefix": lambda v: isinstance(v, str),
-        "delimiter": lambda v: isinstance(v, str),
-        "doubleQuote": lambda v: isinstance(v, bool),
-        "encoding": lambda v: isinstance(v, str)
-        and v.lower() in _ENCODINGS,
-        "header": lambda v: isinstance(v, bool),
-        "headerRowCount": lambda v: _is_num(v) and v >= 0,
-        "lineTerminators": lambda v: isinstance(v, (str, list)),
-        "quoteChar": lambda v: isinstance(v, str) or v is None,
-        "skipBlankRows": lambda v: isinstance(v, bool),
-        "skipColumns": lambda v: _is_num(v) and v >= 0,
-        "skipInitialSpace": lambda v: isinstance(v, bool),
-        "skipRows": lambda v: _is_num(v) and v >= 0,
-        "trim": lambda v: isinstance(v, bool)
-        or v in ("true", "false", "start", "end"),
-    }
-    for k, ok in checks.items():
-        if k in dialect and not ok(dialect[k]):
-            bad(k, f"invalid value for dialect.{k}: {dialect[k]!r}")
-    for i, t in enumerate(dialect.get("lineTerminators", [])
-                          if isinstance(dialect.get("lineTerminators"), list)
-                          else []):
-        if not isinstance(t, str):
-            bad("lineTerminators",
-                f"removing invalid line terminator at [{i}]")
-    return issues
-
-
-def validate_transformations(transformations, table: str = "") -> list[Issue]:
-    """Transformation-definition checks (validation/template.ts:25-32):
-    allowed keys + @type 'Template'; plus the reference-wide behavioral
-    warning that transformations are validated but NEVER executed
-    (SURVEY §2.10; types/descriptor/transformation-definition.ts)."""
-    issues: list[Issue] = []
-    if transformations is None:
-        return issues
-    if not isinstance(transformations, list):
-        transformations = [transformations]
-    if transformations:
-        issues.append(Issue("warning", table, "transformations",
-                            "transformations are validated but not executed"))
-    for i, tmpl in enumerate(transformations):
-        if not isinstance(tmpl, dict):
-            continue
-        if tmpl.get("@type") not in (None, "Template"):
-            issues.append(Issue("error", table, f"transformations[{i}]/@type",
-                                "Template must have type Template"))
-        for k in sorted(set(tmpl) - _TEMPLATE_KEYS):
-            issues.append(Issue(
-                "warning", table, f"transformations[{i}]/{k}",
-                f"unknown transformation property {k!r}"))
-    return issues
-
-
-def validate_inherited_properties(props: dict, table: str,
-                                  location: str) -> list[Issue]:
-    """Inherited-property value checks (validation/inherited-properties.ts:
-    7-18 schema + :49-60 URL-template string check): lang must be BCP47,
-    textDirection in its 4-value domain, null a string or string list,
-    ordered/required booleans, aboutUrl/propertyUrl/valueUrl strings."""
-    issues: list[Issue] = []
-
-    def warn(key, msg):
-        issues.append(Issue("warning", table, f"{location}/{key}", msg))
-
-    v = props.get("lang")
-    if v is not None and not (isinstance(v, str) and _BCP47.match(v)):
-        warn("lang", f"invalid BCP47 language tag {v!r}")
-    v = props.get("textDirection")
-    if v is not None and v not in _TEXT_DIRECTIONS:
-        warn("textDirection",
-             f"textDirection must be one of {sorted(_TEXT_DIRECTIONS)}")
-    v = props.get("null")
-    if v is not None and not (isinstance(v, str) or (
-            isinstance(v, list) and all(isinstance(x, str) for x in v))):
-        warn("null", "null must be a string or list of strings")
-    for key in ("ordered", "required"):
-        v = props.get(key)
-        if v is not None and not isinstance(v, bool):
-            warn(key, f"{key} must be a boolean")
-    for key in ("separator", "default"):
-        v = props.get(key)
-        if v is not None and not isinstance(v, str):
-            warn(key, f"{key} must be a string")
-    for key in ("aboutUrl", "propertyUrl", "valueUrl"):
-        v = props.get(key)
-        if v is not None and not isinstance(v, str):
-            warn(key, f"invalid value for {key}: expected a string")
-    return issues
-
-
-def validate_document(doc: dict) -> list[Issue]:
-    """Walk a raw descriptor document: dialect at group+table level,
-    transformations at group/table/schema level, inherited properties at
-    every level of the cascade (tableGroup → table → schema → column) —
-    the placement rule itself is enforced by each object's allowed-keys
-    check (an inherited property on a dialect is an unknown key there)."""
-    issues: list[Issue] = []
-    tables = doc.get("tables")
-    single = tables is None
-    tables = [doc] if single else [t for t in tables if isinstance(t, dict)]
-    if not single:
-        if "dialect" in doc:
-            issues.extend(validate_dialect(doc["dialect"], ""))
-        issues.extend(validate_transformations(doc.get("transformations"), ""))
-        issues.extend(validate_inherited_properties(doc, "", "tableGroup"))
-    for t in tables:
-        url = t.get("url", "")
-        if "dialect" in t:
-            issues.extend(validate_dialect(t["dialect"], url))
-        issues.extend(validate_transformations(t.get("transformations"), url))
-        issues.extend(validate_inherited_properties(t, url, "table"))
-        schema = t.get("tableSchema")
-        if isinstance(schema, dict):
-            issues.extend(validate_inherited_properties(schema, url,
-                                                        "tableSchema"))
-            issues.extend(validate_transformations(
-                schema.get("transformations"), url))
-            for i, col in enumerate(schema.get("columns", [])):
-                if isinstance(col, dict):
-                    issues.extend(validate_inherited_properties(
-                        col, url, f"column[{i}]"))
-    return issues

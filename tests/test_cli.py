@@ -273,6 +273,40 @@ def test_rdf2csvw_inferred_graph_is_a_set(spark, tmp_path):
     assert sorted(urls) == ["Person.csv", "Person_email.csv"]
 
 
+def test_rdf2csvw_inferred_type_without_data_keeps_its_table(spark,
+                                                             tmp_path):
+    """A type whose subjects have no predicate besides rdf:type still gets
+    a subj-only table and a descriptor entry."""
+    lines = [f"<http://ex.org/a> <{RDF_TYPE}> <http://ex.org/Tag> .",
+             f"<http://ex.org/b> <{RDF_TYPE}> <http://ex.org/Person> .",
+             f"<http://ex.org/b> <{FOAF_NAME}> \"B\" ."]
+    got, urls = _rdf2csvw_inferred(tmp_path, lines)
+    assert got["Tag.csv"] == (["subj"], [("http://ex.org/a",)])
+    assert got["Person.csv"] == (["subj", "name"], [("http://ex.org/b", "B")])
+    assert sorted(urls) == ["Person.csv", "Tag.csv"]
+
+
+def test_rdf2csvw_with_descriptor_graph_is_a_set(spark, tmp_path):
+    """A repeated triple binds once on the descriptor-driven path too."""
+    desc = {"@context": "http://www.w3.org/ns/csvw", "url": "people.csv",
+            "tableSchema": {"aboutUrl": "http://ex/p/{id}", "columns": [
+                {"name": "id", "titles": "id",
+                 "propertyUrl": "http://ex/id"},
+                {"name": "name", "titles": "name",
+                 "propertyUrl": "http://ex/name"}]}}
+    (tmp_path / "meta.json").write_text(json.dumps(desc), encoding="utf-8")
+    (tmp_path / "g.nt").write_text("\n".join([
+        '<http://ex/p/1> <http://ex/id> "1" .',
+        '<http://ex/p/1> <http://ex/id> "1" .',
+        '<http://ex/p/1> <http://ex/name> "Ann" .']) + "\n",
+        encoding="utf-8")
+    outdir = tmp_path / "out"
+    assert main(["rdf2csvw", "-i", str(tmp_path / "g.nt"), "-o", str(outdir),
+                 "-d", str(tmp_path / "meta.json")]) == 0
+    got = (outdir / "people.csv").read_text().strip().splitlines()
+    assert got == ["id,name", "1,Ann"]
+
+
 @pytest.mark.parametrize("labeled", [False, True])
 def test_rdf2csvw_inferred_names_are_unique_per_file(spark, tmp_path,
                                                      labeled):

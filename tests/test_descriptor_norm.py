@@ -195,7 +195,7 @@ def test_referenced_dialect_by_id_object(tmp_path):
 
 def test_resolve_descriptor_accepts_prefixed_metadata(tmp_path):
     """End-to-end: a csvw:-prefixed metadata file next to the CSV resolves."""
-    from csvw_rdf_convertor_spark.sources.resolve import resolve_descriptor
+    from csvw_rdf_convertor_spark.sources.resolve import resolve_with_header
 
     csv = tmp_path / "t.csv"
     csv.write_text("a,b\n1,x\n")
@@ -207,7 +207,7 @@ def test_resolve_descriptor_accepts_prefixed_metadata(tmp_path):
             {"csvw:name": "a", "csvw:datatype": "integer"},
             {"csvw:name": "b"}]},
     }))
-    spec = resolve_descriptor(str(csv))
+    spec = resolve_with_header(str(csv))
     names = [c.name for c in spec.tables[0].columns]
     assert names == ["a", "b"]
     assert spec.tables[0].columns[0].datatype.base == "integer"

@@ -8,7 +8,7 @@ from csvw_rdf_convertor_spark.sources.resolve import (
     FetchCache,
     PathOverrides,
     locate_metadata,
-    resolve_descriptor,
+    resolve_with_header,
 )
 
 META = {
@@ -23,7 +23,7 @@ def test_sidecar_metadata_discovery(tmp_path):
     (tmp_path / "tree-ops.csv-metadata.json").write_text(json.dumps(META))
     found = locate_metadata(str(csv))
     assert found and found.endswith("tree-ops.csv-metadata.json")
-    g = resolve_descriptor(str(csv))
+    g = resolve_with_header(str(csv))
     assert g.tables[0].columns[0].name == "GID"
     assert g.tables[0].columns[0].aboutUrl == "#g-{GID}"
 
@@ -38,9 +38,9 @@ def test_directory_default_metadata(tmp_path):
 def test_empty_schema_fallback(tmp_path):
     csv = tmp_path / "lonely.csv"
     csv.write_text("a\n1\n")
-    g = resolve_descriptor(str(csv))
+    g = resolve_with_header(str(csv))
     assert g.tables[0].url == str(csv)
-    assert g.tables[0].columns == ()
+    assert [c.name for c in g.tables[0].columns] == ["a"]
 
 
 def test_path_overrides_longest_prefix():

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import json
+import re
+
+from csvw_rdf_convertor_spark import cli
+from csvw_rdf_convertor_spark.descriptor_norm import normalize_descriptor
 from csvw_rdf_convertor_spark.spec import parse_descriptor
 from csvw_rdf_convertor_spark.validation import validate_group
 
@@ -52,10 +57,12 @@ def test_foreign_key_wiring():
     assert any("c.csv" in i.message for i in bad)
 
 
-# --- raw-document validation breadth (VERDICT r3 #5) -------------------------
+# --- property-value validation: one walk in descriptor_norm -----------------
 
-from csvw_rdf_convertor_spark.validation import (validate_dialect,  # noqa: E402
-                                                 validate_document)
+def _document_issues(doc):
+    issues = []
+    normalize_descriptor(doc, issues=issues)
+    return issues
 
 
 def _msgs(issues):
@@ -71,14 +78,14 @@ def test_bad_dialect_fixture():
                        "trim": "sideways", "skipRows": -1,
                        "lineTerminators": ["\n", 7],
                        "frobnicate": True}}
-    issues = validate_document(doc)
+    issues = _document_issues(doc)
     locs = [loc for _lvl, loc in _msgs(issues)]
-    assert ("error", "dialect/@type") in _msgs(issues)
-    assert "dialect/encoding" in locs
-    assert "dialect/trim" in locs
-    assert "dialect/skipRows" in locs
-    assert "dialect/frobnicate" in locs
-    assert any("line terminator" in i.message for i in issues)
+    assert ("error", "$.dialect.@type") in _msgs(issues)
+    assert "$.dialect.encoding" in locs
+    assert "$.dialect.trim" in locs
+    assert "$.dialect.skipRows" in locs
+    assert "$.dialect.frobnicate" in locs
+    assert ("warning", "$.dialect.lineTerminators") in _msgs(issues)
 
 
 def test_bad_transformation_fixture():
@@ -87,10 +94,10 @@ def test_bad_transformation_fixture():
     doc = {"url": "t.csv",
            "transformations": [{"url": "s.xsl", "targetFormat": "http://x",
                                 "@type": "Transform", "script": "inline"}]}
-    issues = validate_document(doc)
+    issues = _document_issues(doc)
     assert any("not executed" in i.message for i in issues)
-    assert ("error", "transformations[0]/@type") in _msgs(issues)
-    assert any(i.location == "transformations[0]/script" for i in issues)
+    assert ("error", "$.transformations[0].@type") in _msgs(issues)
+    assert any(i.location == "$.transformations[0].script" for i in issues)
 
 
 def test_bad_inherited_properties_fixture():
@@ -102,21 +109,23 @@ def test_bad_inherited_properties_fixture():
                          "columns": [{"name": "c", "ordered": "yes",
                                       "aboutUrl": 42}]}}],
         "null": 7}
-    issues = validate_document(doc)
+    issues = _document_issues(doc)
     locs = [loc for _lvl, loc in _msgs(issues)]
-    assert "tableGroup/null" in locs        # group level
-    assert "table/lang" in locs             # table level
-    assert "tableSchema/textDirection" in locs
-    assert "column[0]/ordered" in locs
-    assert "column[0]/aboutUrl" in locs
+    col = "$.tables[0].tableSchema.columns[0]"
+    assert "$.null" in locs                 # group level
+    assert "$.tables[0].lang" in locs       # table level
+    assert "$.tables[0].tableSchema.textDirection" in locs
+    assert f"{col}.ordered" in locs
+    assert f"{col}.aboutUrl" in locs
     assert all(i.level == "warning" for i in issues)
 
 
 def test_inherited_property_on_dialect_is_placement_violation():
     """Placement rule: an inherited property on a Dialect object is an
     unknown key there (the reference's validateAllowedKeys)."""
-    issues = validate_dialect({"aboutUrl": "http://x/{id}"}, "t.csv")
-    assert any(i.location == "dialect/aboutUrl" for i in issues)
+    issues = _document_issues(
+        {"url": "t.csv", "dialect": {"aboutUrl": "http://x/{id}"}})
+    assert any(i.location == "$.dialect.aboutUrl" for i in issues)
 
 
 def test_clean_descriptor_has_no_document_issues():
@@ -124,4 +133,77 @@ def test_clean_descriptor_has_no_document_issues():
            "dialect": {"delimiter": ";", "header": True, "trim": "start"},
            "tableSchema": {"lang": "cs", "textDirection": "ltr",
                            "columns": [{"name": "c", "required": True}]}}
-    assert validate_document(doc) == []
+    assert _document_issues(doc) == []
+
+
+# --- invariant over the validate core (cli.validation_issues) ---------------
+
+#: compact-form descriptor with a bad value for each property-value rule at
+#: each level; no value changes shape in normalization unless it is invalid
+BAD_VALUES = {
+    "@context": ["http://www.w3.org/ns/csvw", {"@language": "en"}],
+    "null": 7, "lang": "*", "textDirection": "rtl",
+    "dialect": {"encoding": "klingon", "trim": "sideways", "skipRows": -1,
+                "headerRowCount": "one", "lineTerminators": ["\n", 7],
+                "delimiter": ";"},
+    "tables": [{
+        "url": "a.csv", "lang": "??bad??", "propertyUrl": 5,
+        "tableDirection": "up",
+        "dialect": {"header": "yes", "doubleQuote": 0, "quoteChar": 1},
+        "tableSchema": {
+            "textDirection": "up", "valueUrl": [1, 2], "default": 1,
+            "required": "no",
+            "columns": [
+                {"name": "c", "titles": 5, "ordered": "yes", "aboutUrl": 42,
+                 "lang": "*", "separator": 3, "virtual": "no",
+                 "datatype": {"base": "bogus", "format": "[unclosed"}},
+                {"name": "c d", "null": ["", 1],
+                 "datatype": {"base": "integer",
+                              "format": {"pattern": "abc"}}},
+                {"name": "e", "suppressOutput": 1,
+                 "datatype": {"base": "boolean", "format": "yes"}},
+                {"name": "f", "datatype": "notatype", "lang": "cs",
+                 "textDirection": "auto"},
+                {"name": "g", "datatype": {"base": "decimal", "format": 5}},
+                {"name": "h", "datatype": {"base": "double",
+                                           "format": "x"}}]}}]}
+
+_GONE = object()
+
+
+def _leaves(obj, path="$"):
+    """(``$.…`` path, value) of every value that is not an object or an
+    array of objects."""
+    if isinstance(obj, dict) and obj:
+        for k, v in obj.items():
+            yield from _leaves(v, f"{path}.{k}")
+    elif (isinstance(obj, list) and obj
+          and all(isinstance(x, dict) for x in obj)):
+        for i, v in enumerate(obj):
+            yield from _leaves(v, f"{path}[{i}]")
+    else:
+        yield path, obj
+
+
+def test_validation_issues_name_each_changed_value_once(tmp_path):
+    """Each value that normalization drops or coerces gets exactly one
+    "Invalid value" warning at its path, and no issue names a value that
+    the normalized document still holds."""
+    meta = tmp_path / "meta.json"
+    meta.write_text(json.dumps(BAD_VALUES))
+    issues = cli.validation_issues(str(meta), None, None)
+    doc = normalize_descriptor(BAD_VALUES)
+    again = []
+    assert normalize_descriptor(doc, issues=again) == doc   # idempotent
+    assert not [i for i in again if i.message.startswith("Invalid value")]
+    norm = dict(_leaves(doc))
+    changed = [p for p, v in _leaves(BAD_VALUES)
+               if norm.get(p, _GONE) != v]
+    invalid = [i.location for i in issues
+               if i.message.startswith("Invalid value for ")]
+    assert sorted(invalid) == sorted(changed)
+    held = {(p.rsplit(".", 1)[-1], repr(v)) for p, v in norm.items()}
+    for i in issues:
+        key = re.split(r"[./]", i.location)[-1]
+        assert not any(k == key and i.message.endswith(f" {r}")
+                       for k, r in held), i

@@ -212,6 +212,34 @@ def test_validate_clean_is_empty_stream(server):
     assert data.decode().strip() == ""
 
 
+def test_validate_reports_each_descriptor_fault_once(server):
+    bad = {"@context": "http://www.w3.org/ns/csvw",
+           "null": 7,
+           "tables": [{
+               "url": "people.csv", "lang": "??bad??",
+               "dialect": {"@type": "Table", "encoding": "klingon",
+                           "frobnicate": True},
+               "tableSchema": {"textDirection": "up", "columns": [
+                   {"name": "id", "ordered": "yes", "aboutUrl": 42}]}}]}
+    status, _mime, data = _post_json(
+        server, "/validate", {"input": "meta.json"},
+        {"meta.json": json.dumps(bad)})
+    assert status == 200
+    issues = [json.loads(line) for line in data.decode().splitlines()
+              if line.strip()]
+    col = "$.tables[0].tableSchema.columns[0]"
+    assert sorted((i["type"], i["location"]) for i in issues) == sorted([
+        ("warning", "$.null"),
+        ("warning", "$.tables[0].lang"),
+        ("error", "$.tables[0].dialect.@type"),
+        ("warning", "$.tables[0].dialect.frobnicate"),
+        ("warning", "$.tables[0].dialect.encoding"),
+        ("warning", "$.tables[0].tableSchema.textDirection"),
+        ("warning", f"{col}.ordered"),
+        ("warning", f"{col}.aboutUrl"),
+    ])
+
+
 def test_remote_input_is_a_seam(server):
     status, _mime, data = _post_json(
         server, "/csvw2rdf", {"input": "https://example.com/meta.json"})
