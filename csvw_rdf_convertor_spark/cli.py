@@ -173,8 +173,9 @@ def _stream_lines(lines_df, out, header: list[str] | None = None) -> int:
 # --------------------------------------------------------------------------
 
 def cmd_csvw2rdf(args) -> int:
-    from .plans.csvw2rdf import apply_template_iris, group_to_triples
-    from .sources.csv_source import read_csv
+    from .plans.csvw2rdf import (ROW, apply_template_iris, group_to_triples,
+                                 needs_row_numbers)
+    from .sources.csv_source import file_order_row, read_csv
     from .sources.parse import serialize_rdf
     from .sources.resolve import FetchCache, resolve_with_header
 
@@ -205,18 +206,22 @@ def cmd_csvw2rdf(args) -> int:
                                     url=args.input or "")
         group = parse_descriptor(norm, base)
 
+    minimal = bool(args.minimal)
     dfs = {}
     for t in group.tables:
         if t.suppressOutput:
             continue
         url = cache.overrides.apply(t.url)
-        dfs[t.url] = read_csv(spark, _resolve_local(url, base_dir), t)
-    # arrival order = the reference's sequential file-order rowNum
-    # (convertor.ts:360-370): the CLI converts single files, whose one-
-    # partition text scan yields sequential ids; multi-file datasets go
-    # through the engine API with an explicit order_by (spec.with_order)
-    triples = group_to_triples(dfs, group, minimal=bool(args.minimal),
-                               allow_arrival_order=True)
+        df = read_csv(spark, _resolve_local(url, base_dir), t)
+        # the reference's rowNum is the sequential file order
+        # (convertor.ts:360-370): numbered by the scan itself, at any split
+        # count, and only when the conversion reads it; multi-file datasets
+        # go through the engine API with an explicit order_by
+        # (spec.with_order)
+        if needs_row_numbers(t, minimal):
+            df = df.withColumn(ROW, file_order_row(df))
+        dfs[t.url] = df
+    triples = group_to_triples(dfs, group, minimal=minimal)
     if args.templateIris:  # reference CLI default: true (command.ts:55-59)
         triples = apply_template_iris(triples)
 
@@ -435,18 +440,22 @@ def validation_issues(inp: str | None, base_iri: str | None,
         issues.append(Issue("error", "", "$", str(exc)))
     if group is not None:
         issues.extend(validate_group(group))
-        # row-level checks run distributed when the table CSVs resolve
+        # the required-cell check runs distributed, for each table that
+        # has a required column and whose CSV resolves
+        from .plans.csvw2rdf import ROW
         from .plans.csvw2rdf import issues as data_issues
-        from .sources.csv_source import read_csv
+        from .sources.csv_source import file_order_row, read_csv
         spark = None
         for t in group.tables:
             path = _resolve_local(cache.overrides.apply(t.url), base_dir)
-            if not (t.columns and os.path.exists(path)):
+            if not (any(c.required and not c.virtual for c in t.columns)
+                    and os.path.exists(path)):
                 continue
             spark = spark or _session()
             df = read_csv(spark, path, t)
-            # single-file scan → arrival order IS the file-order row number
-            for r in data_issues(df, t, allow_arrival_order=True).collect():
+            # issues are located by file-order row number, as in csvw2rdf
+            df = df.withColumn(ROW, file_order_row(df))
+            for r in data_issues(df, t).collect():
                 issues.append(Issue("error", r.table, f"row {r.row}",
                                     f"{r.column}: {r.message}"))
     return issues

@@ -550,7 +550,9 @@ def sanitize_descriptor(doc: dict, issues: list[Issue]) -> None:
     ctx_base = ""
     if isinstance(ctx, list) and len(ctx) > 1 and isinstance(ctx[1], dict) \
             and isinstance(ctx[1].get("@base"), str):
-        ctx_base = ctx[1]["@base"]
+        # applied to the table urls below, then dropped: a second pass over
+        # the normalized document must not prefix them again
+        ctx_base = ctx[1].pop("@base")
     if isinstance(doc.get("tables"), list):
         _sanitize_inherited(doc, issues, "$")
         _check_transformations(doc, issues, "$")

@@ -61,20 +61,18 @@ def render_object(lex: Column, kind: Column, dtype: Column, lang: Column) -> Col
 def to_ntriples_lines(triples: DataFrame, keep: list[str] = ()) -> DataFrame:
     """triples DF → DF of N-Triples (or N-Quads) lines (+ ``keep`` columns
     carried through, e.g. a partition bucket for a partitioned text sink)."""
-    head, g, line = _line_columns()
-    return triples.select(*keep, head, g).select(*keep, line)
+    return triples.select(*keep, _line_column())
 
 
 @functools.cache
-def _line_columns() -> tuple[Column, Column, Column]:
-    """``to_ntriples_lines``' Columns, built once per process: they depend
-    on no spec."""
+def _line_column() -> Column:
+    """``to_ntriples_lines``' Column, built once per process: it depends on
+    no spec."""
     s = render_subject(F.col("subj"))
     p = F.concat(F.lit("<"), F.col("pred"), F.lit(">"))
     o = render_object(F.col("obj_lex"), F.col("obj_kind"), F.col("obj_dtype"), F.col("obj_lang"))
     g = F.when(F.col("graph") != "", F.concat(F.lit(" <"), F.col("graph"), F.lit(">"))).otherwise(F.lit(""))
-    return (F.concat_ws(" ", s, p, o).alias("head"), g.alias("g"),
-            F.concat(F.col("head"), F.col("g"), F.lit(" .")).alias("line"))
+    return F.concat(F.concat_ws(" ", s, p, o), g, F.lit(" .")).alias("line")
 
 
 def write_ntriples(triples: DataFrame, path: str) -> None:

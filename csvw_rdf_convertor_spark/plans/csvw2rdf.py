@@ -52,7 +52,8 @@ RDF_REST = RDF + "rest"
 RDF_NIL = RDF + "nil"
 RDF_TYPE = RDF + "type"
 
-_ROW = "__row"
+#: the 1-based logical row number; a frame that already carries it keeps it
+ROW = "__row"
 _SRC_ROW = "__source_row"
 _EMPTY_TRIPLES = "array<struct<subj:string,pred:string,obj_lex:string,obj_kind:string,obj_dtype:string,obj_lang:string,graph:string>>"
 
@@ -62,19 +63,20 @@ def _resolve_url(table: TableSpec) -> str:
     return expand_iri(table.url, table.base) if table.base else table.url
 
 
-def _row_number_columns(table: TableSpec, partition_by: str | None = None,
-                        allow_arrival_order: bool = False) -> tuple[Column, Column]:
-    """(``__row``, ``__source_row``): the 1-based logical row number
-    (reference rowNum: convertor.ts:360-370) and its source-file line.
+def _row_number(table: TableSpec, partition_by: str | None = None,
+                allow_arrival_order: bool = False) -> Column:
+    """The 1-based logical row number (reference rowNum:
+    convertor.ts:360-370) of a frame that does not carry ``ROW``.
 
     ``order_by`` column → deterministic numbering; with ``partition_by`` the
     sort is per-partition (scale path, no global shuffle to one reducer).
     Without ``order_by`` the plan CONSUMES row numbers it cannot define:
-    the reference's rowNum is the sequential 1..N source order, but a
-    distributed scan has no arrival order — so this raises unless the
-    caller explicitly opts into non-logical ids
-    (``allow_arrival_order=True``, fixture/debug only: values come from
-    ``monotonically_increasing_id`` and are neither sequential nor stable).
+    the reference's rowNum is the sequential 1..N source order, which only
+    the scan knows — the CLI adds it as ``ROW`` from
+    ``csv_source.file_order_row``. So this raises unless the caller
+    explicitly opts into arrival order (``allow_arrival_order=True``:
+    ``monotonically_increasing_id() + 1``, sequential only within one
+    partition, from 2^33 in the next).
     """
     if table.order_by:
         if partition_by:
@@ -92,11 +94,12 @@ def _row_number_columns(table: TableSpec, partition_by: str | None = None,
             "or pass allow_arrival_order=True to accept non-logical, "
             "partition-encoded row ids (reference rowNum is sequential "
             "1..N — convertor.ts:360-370)")
-    return rn.cast("long"), F.col(_ROW) + F.lit(table.source_row_offset)
+    return rn.cast("long")
 
 
-def _needs_row_numbers(table: TableSpec, minimal: bool) -> bool:
-    """Row numbering costs a sort (global or per-partition) — add it only
+def needs_row_numbers(table: TableSpec, minimal: bool) -> bool:
+    """Row numbering costs a sort (an ``order_by`` window) or, for a file's
+    own order, a count job over a scan of several splits — add it only
     when something consumes it: standard-mode scaffolding, a default (no
     aboutUrl) subject, an ordered-list skolem, or a template referencing the
     ``_row``/``_sourceRow`` specials. Streaming plans (no monotonic ids) and
@@ -120,12 +123,12 @@ def _needs_row_numbers(table: TableSpec, minimal: bool) -> bool:
 def _default_subject(table_url: str) -> Column:
     """Per-row default cell subject (fresh bnode in the reference,
     convertor.ts:683 → deterministic skolem of (table, row))."""
-    return skolem(table_url, "cellsubj", F.col(_ROW))
+    return skolem(table_url, "cellsubj", F.col(ROW))
 
 
 def _row_node(table_url: str) -> Column:
     """Standard-mode row node (convertor.ts:619)."""
-    return skolem(table_url, "row", F.col(_ROW))
+    return skolem(table_url, "row", F.col(ROW))
 
 
 def _predicate(col: ColumnSpec, table: TableSpec, record: dict[str, Column]) -> Column:
@@ -185,7 +188,7 @@ def _column_triples(col: ColumnSpec, values: Column, table: TableSpec,
                              *_object_parts(col, *scalar, table, record)))
     elif col.ordered:
         # RDF collection: head link + first/rest chain of skolemized nodes
-        node = lambda i: skolem(url, "list", col.name, F.col(_ROW), i)  # noqa: E731
+        node = lambda i: skolem(url, "list", col.name, F.col(ROW), i)  # noqa: E731
         n = F.size(values)
         head = triple(subj, pred,
                       F.when(n == 0, F.lit(RDF_NIL)).otherwise(node(F.lit(0))),
@@ -376,12 +379,13 @@ def _compile(key: _Key) -> _Program:
     url = _resolve_url(table)
     star = F.col("*")
     stages: list[tuple] = []
-    has_row = _ROW in key.columns
-    if _needs_row_numbers(table, minimal):
-        rn, src_row = _row_number_columns(table, key.partition_by,
-                                          key.allow_arrival_order)
-        stages += [("withColumn", (_ROW, rn)), ("withColumn", (_SRC_ROW, src_row))]
-        has_row = True
+    has_row = needs_row_numbers(table, minimal)
+    if has_row:
+        if ROW not in key.columns:
+            stages.append(("withColumn", (ROW, _row_number(
+                table, key.partition_by, key.allow_arrival_order))))
+        stages.append(("withColumn", (_SRC_ROW, F.col(ROW) + F.lit(
+            table.source_row_offset))))
 
     # stage 1: P1–P10 per column → array<string> columns (evaluated once),
     # in TWO projections: 1a materializes the normalized cell string (P1+P2),
@@ -473,7 +477,7 @@ def _compile(key: _Key) -> _Program:
     stages.append(("select", (star, *stage2)))
     record: dict[str, Column] = {n: F.col(c) for n, c in rec_col.items()}
     if has_row:
-        record["_row"] = F.col(_ROW).cast("string")
+        record["_row"] = F.col(ROW).cast("string")
         record["_sourceRow"] = F.col(_SRC_ROW).cast("string")
 
     parsed: dict[str, Column] = {n: F.col(c) for n, c in cell_col.items()}
@@ -543,7 +547,7 @@ def _compile(key: _Key) -> _Program:
         F.array(
             triple(table_node, F.lit(CSVW + "row"), row_node, F.lit("bnode"), F.lit(""), F.lit("")),
             triple(row_node, F.lit(RDF_TYPE), F.lit(CSVW + "Row"), F.lit("iri"), F.lit(""), F.lit("")),
-            triple(row_node, F.lit(CSVW + "rownum"), F.col(_ROW).cast("string"),
+            triple(row_node, F.lit(CSVW + "rownum"), F.col(ROW).cast("string"),
                    F.lit("literal"), F.lit(XSD + "integer"), F.lit("")),
             triple(row_node, F.lit(CSVW + "url"),
                    F.concat(F.lit(url + "#row="), F.col(_SRC_ROW).cast("string")),
@@ -635,8 +639,7 @@ def _template_iri_passes() -> tuple[tuple[tuple[str, Column], ...], ...]:
 
 
 def group_to_triples(dfs: dict[str, DataFrame], group, *, minimal: bool = True,
-                     default_lang: str = "",
-                     allow_arrival_order: bool = False) -> DataFrame:
+                     default_lang: str = "") -> DataFrame:
     """Convert every (non-suppressed) table of a TableGroupSpec and union.
 
     Standard mode also re-emits group-scope external annotations on the
@@ -648,8 +651,7 @@ def group_to_triples(dfs: dict[str, DataFrame], group, *, minimal: bool = True,
         if t.suppressOutput:
             continue
         spark = dfs[t.url].sparkSession
-        part = table_to_triples(dfs[t.url], t, minimal=minimal,
-                                allow_arrival_order=allow_arrival_order)
+        part = table_to_triples(dfs[t.url], t, minimal=minimal)
         out = part if out is None else out.unionByName(part)
     if out is None:
         raise ValueError("no unsuppressed tables")
@@ -666,9 +668,9 @@ def issues(df: DataFrame, table: TableSpec,
            allow_arrival_order: bool = False) -> DataFrame:
     """Side-output issues DF: required-cell violations with (table,row,column)
     location (reference: utils/issue-tracker.ts:34-126)."""
-    rn, src_row = _row_number_columns(table,
-                                      allow_arrival_order=allow_arrival_order)
-    df = df.withColumn(_ROW, rn).withColumn(_SRC_ROW, src_row)
+    if ROW not in df.columns:
+        df = df.withColumn(ROW, _row_number(
+            table, allow_arrival_order=allow_arrival_order))
     checks = []
     for col in table.columns:
         if col.virtual or not col.required:
@@ -676,7 +678,7 @@ def issues(df: DataFrame, table: TableSpec,
         src = col.source or col.name
         checks.append(F.when(
             cells.required_violation(F.col(src), col),
-            F.struct(F.lit(table.url).alias("table"), F.col(_ROW).alias("row"),
+            F.struct(F.lit(table.url).alias("table"), F.col(ROW).alias("row"),
                      F.lit(col.name).alias("column"),
                      F.lit("required cell is null").alias("message"))))
     if not checks:

@@ -16,19 +16,28 @@ Dialect mapping:
   skipRows+headerRowCount → prefix filter, skipColumns → positional select,
   skipBlankRows → all-empty filter.
 
-Scale note: the prefix skip needs a global row index (one window). Header
-prefixes are a single-file concern — large multi-file datasets pass
-``skipRows=0`` with driver-side headers and the window is skipped entirely.
+Scale note: the scan stays in the input's own splits, with no shuffle.
+The prefix skip is narrow: a line is dropped when it lies in the file's
+first split (``input_file_block_start() = 0``) and its position in that
+split is below ``skipRows + headerRowCount``, so the prefix must fit in the
+first split (Spark splits from 4 MB at default settings). Headers are a
+per-file concept: multi-file datasets pass ``skipRows=0`` with driver-side
+headers. ``file_order_row`` numbers the rows 1..N in file order at any split
+count, paying one narrow count job when the scan has several splits.
 """
 
 from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..spec import DialectSpec, TableSpec
+
+#: ``monotonically_increasing_id()`` holds the partition index in its upper
+#: 31 bits and the row's position within the partition in these lower 33
+_POSITION = (1 << 33) - 1
 
 
 def _parse_options(d: DialectSpec) -> dict[str, str]:
@@ -76,21 +85,16 @@ def read_csv(spark: SparkSession, path: str, table: TableSpec) -> DataFrame:
 
     skip_total = d.skipRows + d.header_row_count
     if skip_total:
-        # global prefix skip: a window over the file order — valid only for
-        # a SINGLE file (header prefixes are a per-file concept, and the
-        # window is a one-partition sort). Multi-file datasets must arrive
-        # pre-stripped (skipRows=0, header=false); guard so the fixture path
-        # can't silently ship on a big scan (VERDICT r01 "what's wrong" #4).
         if len(df.inputFiles()) > 1:
             raise ValueError(
                 "skipRows/header prefix skipping needs a single input file: "
-                "the global row-order window is a one-partition sort and "
-                "per-file header semantics don't extend across files — "
+                "a partition can pack several small files, so a line's "
+                "position in its split is not its position in its file — "
                 "pass pre-stripped multi-file data with skipRows=0, "
                 "header=false")
-        w = Window.orderBy(F.monotonically_increasing_id())
-        df = (df.withColumn("__idx", F.row_number().over(w))
-              .where(F.col("__idx") > skip_total).drop("__idx"))
+        position = F.monotonically_increasing_id().bitwiseAND(_POSITION)
+        df = df.where((F.input_file_block_start() != 0)
+                      | (position >= skip_total))
 
     # physical columns are named by their *source* name (the title-derived
     # physical identity) — the spec's RDF-facing `name` may be percent-
@@ -109,3 +113,23 @@ def read_csv(spark: SparkSession, path: str, table: TableSpec) -> DataFrame:
         if non_blank is not None:
             out = out.where(non_blank)
     return out
+
+
+def file_order_row(df: DataFrame) -> Column:
+    """The 1-based number of each row of a single-file ``read_csv`` frame in
+    file order (the reference's sequential rowNum, convertor.ts:360-370),
+    as a Column to add to ``df`` itself.
+
+    A row's position within its partition is the low bits of
+    ``monotonically_increasing_id()``; one partition needs nothing more. A
+    scan of several splits (one partition each, in file order) adds each
+    partition's start: the JVM's ``zipWithIndex`` counts the rows of every
+    partition but the last in one narrow job when it is built (PySpark's
+    would start a Python worker per task)."""
+    rows = df.select()._jdf.queryExecution().toRdd()
+    position = F.monotonically_increasing_id().bitwiseAND(_POSITION) + 1
+    if rows.getNumPartitions() < 2:
+        return position
+    starts = [p.startIndex() for p in rows.zipWithIndex().partitions()]
+    return position + F.element_at(F.array(*map(F.lit, starts)),
+                                   F.spark_partition_id() + 1)

@@ -218,3 +218,18 @@ def test_singleton_type_list_collapses():
     assert out["@type"] == "Table"
     out2 = normalize_descriptor({"@type": ["Table", "TableGroup"]})
     assert out2["@type"] == ["Table", "TableGroup"]
+
+
+def test_context_base_applies_once():
+    """The ``@context`` ``@base`` prefixes each table url (a plain string
+    concatenation, as in the reference) on the first pass and leaves the
+    normalized document, so normalizing it again changes nothing: the CLI
+    writes normalized descriptors that may be read back."""
+    ctx = ["http://www.w3.org/ns/csvw", {"@base": "http://ex/"}]
+    for doc, urls in (({"@context": ctx, "url": "t.csv"}, ["http://ex/t.csv"]),
+                      ({"@context": ctx, "tables": [{"url": "a.csv"},
+                                                    {"url": "b.csv"}]},
+                       ["http://ex/a.csv", "http://ex/b.csv"])):
+        once = normalize_descriptor(doc)
+        assert [t["url"] for t in once.get("tables", [once])] == urls
+        assert normalize_descriptor(once) == once

@@ -4,6 +4,9 @@ even if results are still correct."""
 
 from __future__ import annotations
 
+import contextlib
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -265,8 +268,6 @@ def test_csvw2rdf_request_plans_no_python(spark, tmp_path, monkeypatch):
     the CLI streams has no Python evaluation node, each of which starts the
     Python daemon and a worker per task. Its largest generated method,
     serialization included, stays JIT-compilable."""
-    import json
-
     from csvw_rdf_convertor_spark import cli
     (tmp_path / "items.csv").write_text(MIXED_CSV, encoding="utf-8")
     (tmp_path / "meta.json").write_text(
@@ -375,20 +376,23 @@ PRE_CACHE_BUILD_COMMANDS = 9_446
 WARM_REQUEST_COMMANDS = 500
 
 
-def test_warm_request_py4j_budget(spark, py4j_commands):
-    """A web-service request for a spec the process has converted before
-    replays the conversion's compiled Columns instead of building them
-    again, and a cache miss costs no more than a build did without one."""
+#: a web-service request for the 8-column mixed table, the shape of the
+#: benchmark's: minimal mode, N-Triples back
+MIXED_WS_BODY = {
+    "options": {"input": "meta.json", "format": "ntriples", "minimal": True},
+    "files": {"meta.json": json.dumps(_mixed_descriptor(MIXED_COLS)),
+              "items.csv": MIXED_CSV}}
+
+
+@contextlib.contextmanager
+def _ws_poster():
+    """A web service in a thread; yields ``post()``, which sends it
+    ``MIXED_WS_BODY`` on ``/csvw2rdf`` and checks the answer is a 200."""
     import http.client
-    import json
     import threading
 
     from csvw_rdf_convertor_spark import ws
-    body = json.dumps({
-        "options": {"input": "meta.json", "format": "ntriples",
-                    "minimal": True},
-        "files": {"meta.json": json.dumps(_mixed_descriptor(MIXED_COLS)),
-                  "items.csv": MIXED_CSV}}).encode("utf-8")
+    body = json.dumps(MIXED_WS_BODY).encode("utf-8")
     srv = ws.make_server()
     threading.Thread(target=srv.serve_forever, daemon=True).start()
 
@@ -402,11 +406,19 @@ def test_warm_request_py4j_budget(spark, py4j_commands):
         assert resp.status == 200, payload
 
     try:
-        post()  # cold: compiles the conversion
-        warm = py4j_commands(post)
+        yield post
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_warm_request_py4j_budget(spark, py4j_commands):
+    """A web-service request for a spec the process has converted before
+    replays the conversion's compiled Columns instead of building them
+    again, and a cache miss costs no more than a build did without one."""
+    with _ws_poster() as post:
+        post()  # cold: compiles the conversion
+        warm = py4j_commands(post)
     assert warm <= WARM_REQUEST_COMMANDS, warm
 
     table = _mixed_table(MIXED_COLS, "http://example.org/")
@@ -416,6 +428,39 @@ def test_warm_request_py4j_budget(spark, py4j_commands):
     miss = py4j_commands(csvw2rdf.table_to_triples, df, table,
                          minimal=True, allow_arrival_order=True)
     assert miss <= PRE_CACHE_BUILD_COMMANDS, miss
+
+
+def test_warm_request_runs_one_spark_job(spark, monkeypatch):
+    """A warm ``POST /csvw2rdf`` of a headered CSV runs one Spark job, with
+    neither an ``Exchange`` nor a ``Window`` in its plan: the header skip is
+    a narrow filter, so scan, mapping and serialization stay in the input's
+    own split. Skipping the header with a row-number window cost a
+    single-partition exchange and an adaptive shuffle stage: 2 jobs."""
+    from csvw_rdf_convertor_spark import cli
+    sc = spark.sparkContext
+    group = "test_plan_shape:warm_request"
+    frames = []
+    main, stream = cli.main, cli._stream_lines
+
+    def grouped(argv):  # the request thread's jobs, under the test's group
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return main(argv)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    with _ws_poster() as post:
+        post()  # cold
+        monkeypatch.setattr(cli, "main", grouped)
+        monkeypatch.setattr(cli, "_stream_lines",
+                            lambda df, *a: frames.append(df) or stream(df, *a))
+        post()
+    # job starts reach the status store through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    (lines,) = frames
+    plan = lines._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Window" not in plan, plan
 
 
 

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import contextlib
+import io
+import json
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,8 +119,9 @@ def test_ntriples_write_read_files(spark, tmp_path):
 
 
 def test_multi_file_csv_with_skip_rows_raises(spark, tmp_path):
-    """skipRows/header prefix skipping is a single-file concept: the global
-    row-order window must refuse multi-file inputs (scale guard)."""
+    """skipRows/header prefix skipping is a single-file concept: one
+    partition can pack several small files, so the narrow prefix skip must
+    refuse multi-file inputs (scale guard)."""
     import pytest as _pytest
 
     from csvw_rdf_convertor_spark.spec import parse_descriptor
@@ -129,3 +135,92 @@ def test_multi_file_csv_with_skip_rows_raises(spark, tmp_path):
     from csvw_rdf_convertor_spark.sources.csv_source import read_csv
     with _pytest.raises(ValueError, match="single input file"):
         read_csv(spark, str(d), table).collect()
+
+
+#: a ``spark.sql.files.maxPartitionBytes`` that cuts the files below, about
+#: 12 kB each, into several splits (Spark's own default cuts from 4 MB)
+SMALL_SPLIT_BYTES = "2048"
+
+#: (file prefix, comment line inserted before every n-th data row, dialect):
+#: a plain header row, and comment lines (also in later splits) around two
+#: skipped rows and the header, which the comment filter drops first
+SPLIT_SHAPES = {
+    "header": ("", 0, {}),
+    "comments_skip_rows": ("# top\njunk,1\njunk,2\n", 50,
+                           {"commentPrefix": "#", "skipRows": 2}),
+}
+
+#: data rows whose ``name`` cell is empty: a required-cell error each
+EMPTY_NAME_EVERY = 97
+
+
+@pytest.fixture
+def small_splits(spark):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, SMALL_SPLIT_BYTES)
+    yield
+    spark.conf.set(key, old)
+
+
+def _split_table(tmp_path, shape: str, n: int = 1000) -> dict:
+    """Write ``rows.csv`` (data row i holds id i) and its ``meta.json``;
+    → the descriptor."""
+    prefix, comment_every, dialect = SPLIT_SHAPES[shape]
+    lines = [prefix + "id,name"]
+    for i in range(n):
+        if comment_every and i % comment_every == 0:
+            lines.append(f"# comment before {i}")
+        lines.append(f"{i}," + ("" if i % EMPTY_NAME_EVERY == 0 else f"n{i}"))
+    (tmp_path / "rows.csv").write_text("\n".join(lines) + "\n")
+    desc = {"@context": "http://www.w3.org/ns/csvw", "url": "rows.csv",
+            "dialect": dialect,
+            "tableSchema": {"aboutUrl": "http://ex.org/r/{id}",
+                            "columns": [{"name": "id", "titles": "id"},
+                                        {"name": "name", "titles": "name",
+                                         "required": True}]}}
+    (tmp_path / "meta.json").write_text(json.dumps(desc))
+    return desc
+
+
+@pytest.mark.parametrize("shape", sorted(SPLIT_SHAPES))
+def test_headered_file_scans_in_several_splits(spark, tmp_path, small_splits,
+                                               shape):
+    """The prefix skip is narrow: a headered file of several splits scans
+    in several partitions, with every data row and no prefix row."""
+    desc = _split_table(tmp_path, shape)
+    df = read_csv(spark, str(tmp_path / "rows.csv"),
+                  parse_descriptor(desc, f"{tmp_path}/").tables[0])
+    assert df.rdd.getNumPartitions() > 1
+    assert [r.id for r in df.collect()] == [str(i) for i in range(1000)]
+
+
+@pytest.mark.parametrize("shape", sorted(SPLIT_SHAPES))
+def test_multi_split_row_numbers_follow_file_order(spark, tmp_path,
+                                                   small_splits, shape):
+    """Standard-mode ``csvw:rownum`` is 1..N in file order, and ``validate``
+    locates each required-cell error at that number, whatever the split
+    count: one partition numbered them so before the skip went narrow, and
+    ``monotonically_increasing_id() + 1`` alone mints 2^33 + 1 in the
+    second split."""
+    from csvw_rdf_convertor_spark import cli
+    from csvw_rdf_convertor_spark.sources.parse import read_rdf
+    csvw = "http://www.w3.org/ns/csvw#"
+    _split_table(tmp_path, shape)
+    out = tmp_path / "out.nt"
+    assert cli.main(["csvw2rdf", "-i", str(tmp_path / "meta.json"),
+                     "-o", str(out), "--format", "ntriples"]) == 0
+    by_node: dict = {}
+    for s, p, o, *_ in read_rdf(spark, str(out)).collect():
+        if p in (csvw + "rownum", csvw + "describes"):
+            by_node.setdefault(s, {})[p] = o
+    ids = {int(d[csvw + "rownum"]): d[csvw + "describes"]
+           for d in by_node.values()}
+    assert ids == {i + 1: f"http://ex.org/r/{i}" for i in range(1000)}
+
+    err = io.StringIO()
+    with contextlib.redirect_stderr(err):
+        assert cli.main(["validate", "-i", str(tmp_path / "meta.json")]) == 1
+    rows = [int(m) for m in re.findall(r"row (\d+): name: required",
+                                       err.getvalue())]
+    assert sorted(rows) == [i + 1 for i in range(0, 1000, EMPTY_NAME_EVERY)]
