@@ -172,10 +172,22 @@ def _stream_lines(lines_df, out, header: list[str] | None = None) -> int:
 # csvw2rdf
 # --------------------------------------------------------------------------
 
+def _file_numbered(df, table):
+    """``df`` with the reference's rowNum (convertor.ts:360-370), the
+    sequential file order, as ``ROW``, numbered by the scan itself at any
+    split count; unchanged when the table numbers its rows by an
+    ``order_by`` column (multi-file datasets set one, spec.with_order)."""
+    from .plans.csvw2rdf import ROW
+    from .sources.csv_source import file_order_row
+    if table.order_by:
+        return df
+    return df.withColumn(ROW, file_order_row(df))
+
+
 def cmd_csvw2rdf(args) -> int:
-    from .plans.csvw2rdf import (ROW, apply_template_iris, group_to_triples,
+    from .plans.csvw2rdf import (apply_template_iris, group_to_triples,
                                  needs_row_numbers)
-    from .sources.csv_source import file_order_row, read_csv
+    from .sources.csv_source import read_csv
     from .sources.parse import serialize_rdf
     from .sources.resolve import FetchCache, resolve_with_header
 
@@ -213,14 +225,10 @@ def cmd_csvw2rdf(args) -> int:
             continue
         url = cache.overrides.apply(t.url)
         df = read_csv(spark, _resolve_local(url, base_dir), t)
-        # the reference's rowNum is the sequential file order
-        # (convertor.ts:360-370): numbered by the scan itself, at any split
-        # count, and only when the conversion reads it; multi-file datasets
-        # go through the engine API with an explicit order_by
-        # (spec.with_order)
-        if needs_row_numbers(t, minimal):
-            df = df.withColumn(ROW, file_order_row(df))
-        dfs[t.url] = df
+        # numbered only when the conversion reads row numbers: on a scan
+        # of several splits, numbering costs a count job
+        dfs[t.url] = (_file_numbered(df, t) if needs_row_numbers(t, minimal)
+                      else df)
     triples = group_to_triples(dfs, group, minimal=minimal)
     if args.templateIris:  # reference CLI default: true (command.ts:55-59)
         triples = apply_template_iris(triples)
@@ -442,19 +450,17 @@ def validation_issues(inp: str | None, base_iri: str | None,
         issues.extend(validate_group(group))
         # the required-cell check runs distributed, for each table that
         # has a required column and whose CSV resolves
-        from .plans.csvw2rdf import ROW
         from .plans.csvw2rdf import issues as data_issues
-        from .sources.csv_source import file_order_row, read_csv
+        from .plans.csvw2rdf import required_columns
+        from .sources.csv_source import read_csv
         spark = None
         for t in group.tables:
             path = _resolve_local(cache.overrides.apply(t.url), base_dir)
-            if not (any(c.required and not c.virtual for c in t.columns)
-                    and os.path.exists(path)):
+            if not (required_columns(t) and os.path.exists(path)):
                 continue
             spark = spark or _session()
-            df = read_csv(spark, path, t)
-            # issues are located by file-order row number, as in csvw2rdf
-            df = df.withColumn(ROW, file_order_row(df))
+            # issues are located by row number, as csvw2rdf numbers rows
+            df = _file_numbered(read_csv(spark, path, t), t)
             for r in data_issues(df, t).collect():
                 issues.append(Issue("error", r.table, f"row {r.row}",
                                     f"{r.column}: {r.message}"))

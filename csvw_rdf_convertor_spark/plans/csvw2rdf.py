@@ -63,8 +63,7 @@ def _resolve_url(table: TableSpec) -> str:
     return expand_iri(table.url, table.base) if table.base else table.url
 
 
-def _row_number(table: TableSpec, partition_by: str | None = None,
-                allow_arrival_order: bool = False) -> Column:
+def _row_number(table: TableSpec, partition_by: str | None = None) -> Column:
     """The 1-based logical row number (reference rowNum:
     convertor.ts:360-370) of a frame that does not carry ``ROW``.
 
@@ -72,29 +71,22 @@ def _row_number(table: TableSpec, partition_by: str | None = None,
     sort is per-partition (scale path, no global shuffle to one reducer).
     Without ``order_by`` the plan CONSUMES row numbers it cannot define:
     the reference's rowNum is the sequential 1..N source order, which only
-    the scan knows — the CLI adds it as ``ROW`` from
-    ``csv_source.file_order_row``. So this raises unless the caller
-    explicitly opts into arrival order (``allow_arrival_order=True``:
-    ``monotonically_increasing_id() + 1``, sequential only within one
-    partition, from 2^33 in the next).
+    the scan knows, so this raises: the CLI gives such frames ``ROW`` from
+    ``csv_source.file_order_row``.
     """
-    if table.order_by:
-        if partition_by:
-            w = Window.partitionBy(partition_by).orderBy(table.order_by)
-        else:
-            w = Window.orderBy(table.order_by)
-        rn = F.row_number().over(w)
-    elif allow_arrival_order:
-        rn = F.monotonically_increasing_id() + 1
-    else:
+    if not table.order_by:
         raise ValueError(
             "this conversion consumes row numbers (standard mode, default "
             "subjects, ordered lists, or {_row}/{_sourceRow} templates) but "
             "the table has no order_by column; set one via spec.with_order, "
-            "or pass allow_arrival_order=True to accept non-logical, "
-            "partition-encoded row ids (reference rowNum is sequential "
+            f"or give the frame its file-order row numbers as {ROW!r} "
+            "(csv_source.file_order_row; reference rowNum is sequential "
             "1..N — convertor.ts:360-370)")
-    return rn.cast("long")
+    if partition_by:
+        w = Window.partitionBy(partition_by).orderBy(table.order_by)
+    else:
+        w = Window.orderBy(table.order_by)
+    return F.row_number().over(w).cast("long")
 
 
 def needs_row_numbers(table: TableSpec, minimal: bool) -> bool:
@@ -305,7 +297,6 @@ class _Key:
     minimal: bool
     partition_by: str | None
     default_lang: str
-    allow_arrival_order: bool
     passthrough: tuple[str, ...]
     #: the spec compiled on a miss; any spec with an equal key compiles alike
     table: TableSpec = field(compare=False)
@@ -330,7 +321,6 @@ def _replay(df: DataFrame, stages: tuple[tuple, ...]) -> DataFrame:
 def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
                      partition_by: str | None = None,
                      default_lang: str = "",
-                     allow_arrival_order: bool = False,
                      passthrough: tuple[str, ...] = ()) -> DataFrame:
     """Compile and run the full table conversion; returns the triples DF.
 
@@ -344,8 +334,7 @@ def table_to_triples(df: DataFrame, table: TableSpec, *, minimal: bool = True,
     unread = {} if _reads_url(table, minimal) else {"url": "", "base": ""}
     spec = replace(table, notes=None, **unread)
     prog = _compile(_Key(repr(spec), tuple(df.columns), minimal, partition_by,
-                         default_lang, allow_arrival_order, tuple(passthrough),
-                         table))
+                         default_lang, tuple(passthrough), table))
     out = _replay(df, prog.stages)
     if prog.table_stages:
         spark = df.sparkSession
@@ -382,8 +371,8 @@ def _compile(key: _Key) -> _Program:
     has_row = needs_row_numbers(table, minimal)
     if has_row:
         if ROW not in key.columns:
-            stages.append(("withColumn", (ROW, _row_number(
-                table, key.partition_by, key.allow_arrival_order))))
+            stages.append(("withColumn",
+                           (ROW, _row_number(table, key.partition_by))))
         stages.append(("withColumn", (_SRC_ROW, F.col(ROW) + F.lit(
             table.source_row_offset))))
 
@@ -664,25 +653,27 @@ def group_to_triples(dfs: dict[str, DataFrame], group, *, minimal: bool = True,
     return out
 
 
-def issues(df: DataFrame, table: TableSpec,
-           allow_arrival_order: bool = False) -> DataFrame:
+def required_columns(table: TableSpec) -> list[ColumnSpec]:
+    """The columns whose every cell ``issues`` checks: the required
+    non-virtual ones. A table without any needs no scan to validate."""
+    return [c for c in table.columns if c.required and not c.virtual]
+
+
+def issues(df: DataFrame, table: TableSpec) -> DataFrame:
     """Side-output issues DF: required-cell violations with (table,row,column)
-    location (reference: utils/issue-tracker.ts:34-126)."""
-    if ROW not in df.columns:
-        df = df.withColumn(ROW, _row_number(
-            table, allow_arrival_order=allow_arrival_order))
-    checks = []
-    for col in table.columns:
-        if col.virtual or not col.required:
-            continue
-        src = col.source or col.name
-        checks.append(F.when(
-            cells.required_violation(F.col(src), col),
-            F.struct(F.lit(table.url).alias("table"), F.col(ROW).alias("row"),
-                     F.lit(col.name).alias("column"),
-                     F.lit("required cell is null").alias("message"))))
-    if not checks:
+    location (reference: utils/issue-tracker.ts:34-126). Rows are located by
+    the frame's ``ROW`` or, without it, by the table's ``order_by``."""
+    cols = required_columns(table)
+    if not cols:
         return local_frame(df.sparkSession, [],
                            "table string, row long, column string, message string")
+    if ROW not in df.columns:
+        df = df.withColumn(ROW, _row_number(table))
+    checks = [F.when(
+        cells.required_violation(F.col(col.source or col.name), col),
+        F.struct(F.lit(table.url).alias("table"), F.col(ROW).alias("row"),
+                 F.lit(col.name).alias("column"),
+                 F.lit("required cell is null").alias("message")))
+        for col in cols]
     arr = F.array_compact(F.array(*checks))
     return df.select(F.explode(arr).alias("i")).select("i.*")

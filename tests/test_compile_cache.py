@@ -11,6 +11,7 @@ import pytest
 
 from csvw_rdf_convertor_spark import cli
 from csvw_rdf_convertor_spark.plans import csvw2rdf
+from csvw_rdf_convertor_spark.sources.csv_source import file_order_row
 from csvw_rdf_convertor_spark.spec import parse_descriptor
 
 EX = "http://example.org/"
@@ -37,12 +38,14 @@ def _table(base: str, **schema):
 
 @pytest.fixture
 def frame(spark):
-    return spark.createDataFrame(ROWS, "id string, price string, name string")
+    """``ROWS``, numbered in their order as the CLI numbers a CSV scan."""
+    df = spark.createDataFrame(ROWS, "id string, price string, name string")
+    return df.withColumn(csvw2rdf.ROW, file_order_row(df))
 
 
 def _triples(frame, table, minimal=True) -> set[tuple]:
     return {tuple(r) for r in csvw2rdf.table_to_triples(
-        frame, table, minimal=minimal, allow_arrival_order=True).collect()}
+        frame, table, minimal=minimal).collect()}
 
 
 def test_same_schema_tables_of_one_group_convert_cold_and_warm(tmp_path):

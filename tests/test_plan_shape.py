@@ -256,7 +256,7 @@ def test_mixed_type_mapping_stays_under_jit_method_limit(spark, tmp_path):
     (tmp_path / "items.csv").write_text(MIXED_CSV, encoding="utf-8")
     table = _mixed_table(MIXED_COLS, f"{tmp_path}/")
     df = table_to_triples(read_csv(spark, str(tmp_path / "items.csv"), table),
-                          table, minimal=True, allow_arrival_order=True)
+                          table, minimal=True)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Generate ") == 1, plan
     assert _max_method_bytes(spark, df) < JIT_HUGE_METHOD_BYTES
@@ -359,7 +359,7 @@ def test_mapping_build_py4j_calls_grow_linearly_with_width(spark,
 
     def build(n):
         df, table = builds[n]
-        table_to_triples(df, table, minimal=True, allow_arrival_order=True)
+        table_to_triples(df, table, minimal=True)
 
     build(8)  # warm-up: first-use class loading and caches
     c16 = py4j_commands(build, 16)
@@ -425,8 +425,7 @@ def test_warm_request_py4j_budget(spark, py4j_commands):
     df = spark.createDataFrame(
         [], ", ".join(f"{n} string" for n, _dt in MIXED_COLS))
     csvw2rdf._compile.cache_clear()
-    miss = py4j_commands(csvw2rdf.table_to_triples, df, table,
-                         minimal=True, allow_arrival_order=True)
+    miss = py4j_commands(csvw2rdf.table_to_triples, df, table, minimal=True)
     assert miss <= PRE_CACHE_BUILD_COMMANDS, miss
 
 
@@ -489,8 +488,7 @@ DRIVER_FRAMES = {
             triples_df(spark, [_TRIPLE])),
     "rdf2csvw_run.triples_df": lambda spark: triples_df(spark, [_TRIPLE]),
     "csvw2rdf.issues":
-        lambda spark: csvw2rdf.issues(*_one_column(spark),
-                                      allow_arrival_order=True),
+        lambda spark: csvw2rdf.issues(*_one_column(spark)),
     "csvw2rdf.table_to_triples[suppressed]":
         lambda spark: csvw2rdf.table_to_triples(
             *_one_column(spark, suppressOutput=True)),

@@ -224,3 +224,36 @@ def test_multi_split_row_numbers_follow_file_order(spark, tmp_path,
     rows = [int(m) for m in re.findall(r"row (\d+): name: required",
                                        err.getvalue())]
     assert sorted(rows) == [i + 1 for i in range(0, 1000, EMPTY_NAME_EVERY)]
+
+
+def test_cli_numbers_rows_by_order_by(spark, tmp_path):
+    """A table with an ``order_by`` column numbers its rows by that column,
+    not by file order, in standard-mode ``csvw:rownum`` and in ``validate``
+    row locations alike."""
+    from csvw_rdf_convertor_spark import cli
+    from csvw_rdf_convertor_spark.sources.parse import read_rdf
+    csvw = "http://www.w3.org/ns/csvw#"
+    (tmp_path / "rows.csv").write_text("id,name\nc,nc\na,\nb,nb\n")
+    (tmp_path / "meta.json").write_text(json.dumps({
+        "@context": "http://www.w3.org/ns/csvw", "url": "rows.csv",
+        "order_by": "id",
+        "tableSchema": {"aboutUrl": "http://ex.org/r/{id}",
+                        "columns": [{"name": "id", "titles": "id"},
+                                    {"name": "name", "titles": "name",
+                                     "required": True}]}}))
+    out = tmp_path / "out.nt"
+    assert cli.main(["csvw2rdf", "-i", str(tmp_path / "meta.json"),
+                     "-o", str(out), "--format", "ntriples"]) == 0
+    by_node: dict = {}
+    for s, p, o, *_ in read_rdf(spark, str(out)).collect():
+        if p in (csvw + "rownum", csvw + "describes"):
+            by_node.setdefault(s, {})[p] = o
+    assert {d[csvw + "describes"]: d[csvw + "rownum"]
+            for d in by_node.values()} == {
+        "http://ex.org/r/a": "1", "http://ex.org/r/b": "2",
+        "http://ex.org/r/c": "3"}
+
+    err = io.StringIO()
+    with contextlib.redirect_stderr(err):
+        assert cli.main(["validate", "-i", str(tmp_path / "meta.json")]) == 1
+    assert re.findall(r"row (\d+): name: required", err.getvalue()) == ["1"]
