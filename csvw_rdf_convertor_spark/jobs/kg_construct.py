@@ -11,6 +11,12 @@ Run on a cluster::
 
 The job builds NO master/executor config of its own — sizing (N vs 4N
 executors, memory, AQE) belongs to ``spark-submit`` flags / cluster defaults.
+That includes write parallelism: ``--n-buckets 4096`` above sets how finely
+a run commits and resumes, not how many tasks write. The bucket shuffles
+hash into ``spark.sql.shuffle.partitions`` (or
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum``) partitions,
+which AQE merges up to ``spark.sql.adaptive.advisoryPartitionSizeInBytes``;
+a bucket never spans two write tasks.
 It only sets the confs the engine itself requires to be correct and fast
 (UTC session TZ for timestamp-lexical determinism; codegen method split so
 the wide cell pipeline stays compiled — see ``plans/csvw2rdf.py``).
@@ -65,8 +71,12 @@ def main(argv: list[str] | None = None) -> int:
                     default="parquet")
     ap.add_argument("--output", required=True, help="KG output root")
     ap.add_argument("--n-buckets", type=int, default=8,
-                    help="conv_id hash buckets = resume/commit granularity "
-                         "(size so one bucket's triples fit one task)")
+                    help="conv_id hash buckets = commit/resume granularity "
+                         "only; write parallelism comes from "
+                         "spark.sql.shuffle.partitions (or AQE's "
+                         "initialPartitionNum) and the advisory partition "
+                         "size. One bucket is written by one task, so keep "
+                         "a bucket's triples within what one task can write")
     ap.add_argument("--no-resume", action="store_true",
                     help="ignore an existing manifest (full rebuild)")
     ap.add_argument("--write-nt", action="store_true",

@@ -287,6 +287,107 @@ def test_warm_run_job_count(spark, transcripts, tmp_path):
     assert jobs == 9
 
 
+def _triple_write_tasks(spark, monkeypatch, fn):
+    """(Tasks of the stage that writes ``triples/`` while ``fn()`` runs,
+    and what it returns). The triple write's jobs run under a job group of
+    their own; the last of them runs the write, in its result stage, which
+    has the job's highest stage id (Spark creates parents first)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    group = f"triple-write-{id(fn)}"
+    parquet = DataFrameWriter.parquet
+
+    def grouped(self, path, *args, **kwargs):
+        if not path.endswith("/triples"):
+            return parquet(self, path, *args, **kwargs)
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return parquet(self, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", grouped)
+    out = fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    write_job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return st.getStageInfo(max(write_job.stageIds)).numTasks, out
+
+
+def test_warm_run_write_is_sized_by_aqe(spark, transcripts, tmp_path,
+                                        monkeypatch):
+    """The bucket shuffles name no partition count, so AQE coalesces them:
+    a small run writes its triples in one task, one file per bucket, where
+    ``repartition(n_buckets, "bucket")`` pinned one task per bucket."""
+    pipeline.run(transcripts, str(tmp_path / "cold"), n_buckets=4)
+    out = tmp_path / "warm"
+    tasks, m = _triple_write_tasks(spark, monkeypatch, lambda: pipeline.run(
+        transcripts, str(out), n_buckets=4))
+    assert tasks == 1 and m.buckets_done == 4
+    assert sorted(len(list(d.glob("*.parquet")))
+                  for d in (out / "triples").glob("bucket=*")) == [1, 1, 1, 1]
+
+
+#: predicates only mention triples carry; every other triple is a turn's
+MENTION_PREDICATES = {pipeline.KG + p for p in
+                      ("mentions", "surfaceForm", "linkedTo", "linkScore")}
+
+
+def _files_per_side(bucket_dir) -> dict[str, int]:
+    """Parquet files of one ``triples/bucket=b/`` directory that hold turn
+    triples and that hold mention triples."""
+    import pyarrow.parquet as pq
+
+    sides = {"turn": 0, "mention": 0}
+    for f in bucket_dir.glob("*.parquet"):
+        preds = set(pq.read_table(f, columns=["pred"])["pred"].to_pylist())
+        sides["mention"] += bool(preds & MENTION_PREDICATES)
+        sides["turn"] += bool(preds - MENTION_PREDICATES)
+    return sides
+
+
+def test_uncoalesced_write_keeps_buckets_whole(spark, transcripts, tmp_path,
+                                               monkeypatch):
+    """With AQE coalescing off, as when buckets are large, the write runs
+    in ``spark.sql.shuffle.partitions`` tasks. Each bucket still lies in
+    one task per side: at most one parquet file of turn triples and one of
+    mention triples per bucket, and dropping one bucket's manifest row
+    redoes that bucket alone, exactly once."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = tmp_path / "kg"
+        tasks, m1 = _triple_write_tasks(spark, monkeypatch, lambda: pipeline.run(
+            transcripts, str(out), n_buckets=4))
+        assert tasks > 1 and m1.buckets_done == 4
+        dirs = sorted((out / "triples").glob("bucket=*"))
+        assert len(dirs) == 4
+        for d in dirs:
+            assert all(n <= 1 for n in _files_per_side(d).values()), d
+        sink = spark.read.parquet(str(out / "triples"))
+        first = sorted(sink.where("bucket = 0").collect())
+
+        def other_buckets():
+            return {f: f.stat().st_mtime_ns for d in dirs[1:]
+                    for f in d.glob("*.parquet")}
+        kept = other_buckets()
+
+        man = spark.read.parquet(str(out / "manifest")).where("bucket != 0")
+        man.write.parquet(str(out / "manifest2"))
+        spark.read.parquet(str(out / "manifest2")).write.mode("overwrite") \
+            .parquet(str(out / "manifest"))
+        m2 = pipeline.run(transcripts, str(out), n_buckets=4)
+        assert (m2.buckets_done, m2.buckets_skipped) == (1, 3)
+        assert m2.triples == len(first)
+        sink = spark.read.parquet(str(out / "triples"))
+        assert sorted(sink.where("bucket = 0").collect()) == first
+        assert other_buckets() == kept
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_warm_run_detects_once_per_input_split(spark, transcripts, tmp_path,
                                                monkeypatch):
     """Detection, the run's only Python work, runs once per input split:
