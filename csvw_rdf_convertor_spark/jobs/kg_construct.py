@@ -29,8 +29,11 @@ parquet path in this sandbox, or ``--synth N`` for a deterministic
 generated corpus (tests/smoke).
 
 Output layout and the resume/exactly-once contract are ``kg.pipeline.run``'s
-(partitioned triples + a manifest of finished buckets). The job prints ONE
-JSON line of the run's totals on stdout — schedulable/parsable.
+(partitioned triples + a manifest of finished buckets). The parquet triple
+sink is zstd; an Iceberg sink takes its codec from the table property
+``write.parquet.compression-codec`` (zstd by default), not from this code.
+The job prints ONE JSON line of the run's totals on stdout —
+schedulable/parsable.
 """
 
 from __future__ import annotations

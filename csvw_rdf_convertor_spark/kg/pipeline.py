@@ -37,7 +37,9 @@ Scale contract (north rule):
   ``groupBy("bucket")`` over the sink;
 - in production the sinks are partitioned Iceberg tables (snapshot commits
   give the same atomicity); in this sandbox they are partitioned parquet
-  behind the same writer seam.
+  behind the same writer seam, the triples in zstd, the codec an Iceberg
+  table writes by default (``write.parquet.compression-codec``), so the
+  stand-in stores what production would per triple.
 """
 
 from __future__ import annotations
@@ -177,7 +179,7 @@ def run(transcripts: DataFrame, out_dir: str, *,
     """Materialize the KG for every bucket not yet in the manifest.
 
     Layout under ``out_dir``:
-      triples/   parquet partitioned by bucket (prod: Iceberg table)
+      triples/   zstd parquet partitioned by bucket (prod: Iceberg table)
       ntriples/  optional N-Triples text
       manifest/  parquet (bucket, finished_at), one row per bucket a run
                  committed — the resume checkpoint, nothing else
@@ -252,9 +254,17 @@ def run(transcripts: DataFrame, out_dir: str, *,
         F.count_if(F.col("pred") == KG + "linkedTo").alias("links"))
     # dynamic partition overwrite = idempotent per-bucket commit (the parquet
     # stand-in for an Iceberg partition-overwrite snapshot): a re-run of a
-    # bucket replaces its files instead of appending duplicates
+    # bucket replaces its files instead of appending duplicates.
+    # zstd at its default level, Iceberg's default parquet codec, set on
+    # this write only, never on the caller's session: the 38,395 triples of
+    # a 600-conversation run take 7.83 B/triple against 11.76 in snappy,
+    # Spark's default (−33%), for 0.33 s of write CPU against 0.32 and the
+    # same 0.115 s full scan (4-core host, medians of 20 alternating
+    # writes). Higher levels and a sort within each bucket were measured
+    # and not adopted (CLAUDE.md, "Parquet sinks are zstd").
     (observed.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
+     .option("compression", "zstd")
      .partitionBy("bucket").parquet(f"{out_dir}/triples"))
     ments.unpersist()
     if write_nt:

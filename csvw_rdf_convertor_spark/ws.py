@@ -112,8 +112,12 @@ def _parse_body(content_type: str, body: bytes) -> tuple[dict, dict]:
             if name == "options":
                 opts = _json(payload, "options part")
             elif name:
-                files[part.get_filename() or name] = \
-                    payload.decode("utf-8")
+                name = part.get_filename() or name
+                try:
+                    files[name] = payload.decode("utf-8")
+                except UnicodeDecodeError as exc:
+                    raise RequestError(
+                        400, f"file part {name!r} is not UTF-8: {exc}") from exc
         if not isinstance(opts, dict):
             raise RequestError(400, "multipart body missing 'options' part")
         return _checked(opts, files)
@@ -138,6 +142,12 @@ def _checked(opts: dict, files) -> tuple[dict, dict]:
         if not (isinstance(value, dict)
                 and all(isinstance(v, str) for v in value.values())):
             raise RequestError(400, f"{what} must be an object of strings")
+    # each upload is written to workdir/basename(name): a name with no file
+    # name in it would fail that write after mkdtemp, a 500 that leaks the
+    # workdir
+    for name in files:
+        if os.path.basename(name) in ("", ".", "..") or "\0" in name:
+            raise RequestError(400, f"upload name {name!r} is not a file name")
     return opts, files
 
 

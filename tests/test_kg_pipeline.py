@@ -130,6 +130,28 @@ def _jobs(spark, group: str, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def _codecs(bucket_files) -> set[str]:
+    """Compression codecs of every column chunk of the given parquet files."""
+    import pyarrow.parquet as pq
+
+    codecs = set()
+    for f in bucket_files:
+        md = pq.ParquetFile(f).metadata
+        codecs |= {md.row_group(g).column(c).compression
+                   for g in range(md.num_row_groups)
+                   for c in range(md.num_columns)}
+    return codecs
+
+
+def _forget_bucket(spark, out: str, bucket: int) -> None:
+    """Drop ``bucket``'s manifest rows, as if the run that wrote it had been
+    killed before its checkpoint."""
+    man = spark.read.parquet(f"{out}/manifest").where(F.col("bucket") != bucket)
+    man.write.mode("overwrite").parquet(f"{out}/manifest2")
+    spark.read.parquet(f"{out}/manifest2").write.mode("overwrite") \
+        .parquet(f"{out}/manifest")
+
+
 def test_run_and_resume_exactly_once(spark, transcripts, tmp_path):
     out = str(tmp_path / "kg")
     # no manifest yet: a fresh run of every bucket
@@ -137,6 +159,8 @@ def test_run_and_resume_exactly_once(spark, transcripts, tmp_path):
     assert m1.buckets_done == 4 and m1.buckets_skipped == 0
     assert m1.turns == transcripts.count()
     assert m1.triples > m1.turns * 5
+    assert _codecs((tmp_path / "kg" / "triples").glob("bucket=*/*.parquet")) \
+        == {"ZSTD"}
     total_before = spark.read.parquet(f"{out}/triples").count()
 
     # rerun: everything is checkpointed → no new triples, all buckets
@@ -151,13 +175,36 @@ def test_run_and_resume_exactly_once(spark, transcripts, tmp_path):
 
     # simulate a killed run: drop one bucket's manifest rows → only that
     # bucket is recomputed
-    man = spark.read.parquet(f"{out}/manifest")
-    keep = man.where(F.col("bucket") != 0)
-    keep.write.mode("overwrite").parquet(f"{out}/manifest2")
-    spark.read.parquet(f"{out}/manifest2").write.mode("overwrite") \
-        .parquet(f"{out}/manifest")
+    _forget_bucket(spark, out, 0)
     m3 = pipeline.run(transcripts, out, n_buckets=4)
     assert m3.buckets_done == 1 and m3.buckets_skipped == 3
+
+
+def test_resume_over_a_snappy_sink(spark, transcripts, tmp_path):
+    """An output written while the sink was snappy parquet resumes in
+    place: dropping bucket 0's manifest row redoes bucket 0 alone, in zstd,
+    leaves the other buckets' snappy files untouched, and the whole sink
+    reads back with the same rows."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "kg"
+    pipeline.run(transcripts, str(out), n_buckets=4)
+    triples = out / "triples"
+    for f in triples.glob("bucket=*/*.parquet"):
+        pq.write_table(pq.ParquetFile(f).read(), f, compression="snappy")
+        # Hadoop's local file system checks each file against its .crc
+        f.with_name(f".{f.name}.crc").unlink()
+    before = sorted(spark.read.parquet(str(triples)).collect())
+    others = sorted(triples.glob("bucket=[123]/*.parquet"))
+    kept = {f: f.stat().st_mtime_ns for f in others}
+    assert _codecs(others) == {"SNAPPY"}
+
+    _forget_bucket(spark, str(out), 0)
+    m = pipeline.run(transcripts, str(out), n_buckets=4)
+    assert (m.buckets_done, m.buckets_skipped) == (1, 3)
+    assert _codecs(triples.glob("bucket=0/*.parquet")) == {"ZSTD"}
+    assert {f: f.stat().st_mtime_ns for f in others} == kept
+    assert sorted(spark.read.parquet(str(triples)).collect()) == before
 
 
 def test_nt_sink_is_exactly_once_on_rerun(spark, tmp_path):
@@ -374,10 +421,7 @@ def test_uncoalesced_write_keeps_buckets_whole(spark, transcripts, tmp_path,
                     for f in d.glob("*.parquet")}
         kept = other_buckets()
 
-        man = spark.read.parquet(str(out / "manifest")).where("bucket != 0")
-        man.write.parquet(str(out / "manifest2"))
-        spark.read.parquet(str(out / "manifest2")).write.mode("overwrite") \
-            .parquet(str(out / "manifest"))
+        _forget_bucket(spark, str(out), 0)
         m2 = pipeline.run(transcripts, str(out), n_buckets=4)
         assert (m2.buckets_done, m2.buckets_skipped) == (1, 3)
         assert m2.triples == len(first)

@@ -150,28 +150,47 @@ def test_csvw2rdf_turtle_default_format(spark, server):
     assert _parse(spark, data.decode(), "ttl") == EXPECTED
 
 
-def test_csvw2rdf_multipart(spark, server):
+def _post_multipart(addr, path, parts):
+    """POST ``parts``, (name, filename or None, bytes content) triples, as
+    one multipart/form-data body."""
     boundary = "XwsBoundaryX"
-    parts = [
-        ("options", None,
-         json.dumps({"input": "meta.json", "format": "ntriples",
-                     "minimal": True})),
-        ("meta.json", "meta.json", json.dumps(DESCRIPTOR)),
-        ("people.csv", "people.csv", CSV),
-    ]
-    buf = io.StringIO()
+    buf = io.BytesIO()
     for name, filename, content in parts:
-        buf.write(f"--{boundary}\r\n")
         disp = f'form-data; name="{name}"'
         if filename:
             disp += f'; filename="{filename}"'
-        buf.write(f"Content-Disposition: {disp}\r\n\r\n{content}\r\n")
-    buf.write(f"--{boundary}--\r\n")
-    status, mime, data = _post(
-        server, "/csvw2rdf", buf.getvalue().encode("utf-8"),
-        f"multipart/form-data; boundary={boundary}")
+        buf.write(f"--{boundary}\r\nContent-Disposition: {disp}\r\n\r\n"
+                  .encode())
+        buf.write(content + b"\r\n")
+    buf.write(f"--{boundary}--\r\n".encode())
+    return _post(addr, path, buf.getvalue(),
+                 f"multipart/form-data; boundary={boundary}")
+
+
+MULTIPART_OPTIONS = ("options", None, json.dumps(
+    {"input": "meta.json", "format": "ntriples", "minimal": True}).encode())
+
+
+def test_csvw2rdf_multipart(spark, server):
+    status, mime, data = _post_multipart(server, "/csvw2rdf", [
+        MULTIPART_OPTIONS,
+        ("meta.json", "meta.json", json.dumps(DESCRIPTOR).encode()),
+        ("people.csv", "people.csv", CSV.encode()),
+    ])
     assert status == 200
     assert _parse(spark, data.decode(), "nt") == EXPECTED
+
+
+def test_multipart_file_not_utf8_400(server):
+    """A file part that is not UTF-8 is a malformed request (400), not a
+    conversion-level validation failure (422)."""
+    status, _mime, data = _post_multipart(server, "/csvw2rdf", [
+        MULTIPART_OPTIONS,
+        ("meta.json", "meta.json", json.dumps(DESCRIPTOR).encode()),
+        ("people.csv", "people.csv", CSV.encode("utf-16")),
+    ])
+    assert status == 400, data
+    assert b"people.csv" in data
 
 
 def test_rdf2csvw_zip(server):
@@ -276,15 +295,32 @@ MALFORMED_BODIES = {
     "turtle-prefixes-not-strings": {
         "options": {"input": "meta.json", "turtle": {"prefixes": {"ex": 1}}},
         "files": {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV}},
+    # names with no file name in them once failed after mkdtemp: a 500
+    # that left the request's workdir behind
+    **{f"upload-name-{what}": {
+        "options": {"input": "meta.json"},
+        "files": {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV,
+                  name: CSV}}
+       for what, name in (("empty", ""), ("dot", "."), ("dotdot", ".."),
+                          ("dir", "a/"), ("nul", "a\0b"))},
 }
+
+
+def _workdirs() -> set[str]:
+    import glob
+    import os
+    import tempfile
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "csvw_ws_*")))
 
 
 @pytest.mark.parametrize("shape", list(MALFORMED_BODIES))
 def test_malformed_body_shape_400(server, shape):
+    before = _workdirs()
     status, _m, data = _post(server, "/csvw2rdf",
                              json.dumps(MALFORMED_BODIES[shape]).encode(),
                              "application/json")
     assert status == 400, data
+    assert _workdirs() <= before  # rejected before any workdir is made
 
 
 def test_rdf2csvw_server_local_descriptor(server, tmp_path):
@@ -318,16 +354,12 @@ def test_rdf2csvw_missing_descriptor_422(server):
 
 
 def test_request_workdirs_are_cleaned_up(server):
-    import glob
-    import os
-    import tempfile
-    pat = os.path.join(tempfile.gettempdir(), "csvw_ws_*")
-    before = set(glob.glob(pat))
+    before = _workdirs()
     status, _m, _d = _post_json(
         server, "/validate", {"input": "meta.json"},
         {"meta.json": json.dumps(DESCRIPTOR), "people.csv": CSV})
     assert status == 200
-    assert set(glob.glob(pat)) <= before  # per-request tempdir removed
+    assert _workdirs() <= before  # per-request tempdir removed
 
 
 def _post_length(addr, length: str):
